@@ -82,7 +82,9 @@ object FixtureStaging {
     */
   def stageOnce(s: SparkSession, salt: String, mk: => DataFrame): DataFrame = {
     val df = mk
-    val planKey = salt + "|" + sourceFingerprint(salt) + "|" +
+    // NUL cannot occur in a path or in the fingerprint, whose entries are
+    // '|'-separated, so the three segments cannot run into each other
+    val planKey = salt + "\u0000" + sourceFingerprint(salt) + "\u0000" +
       df.queryExecution.logical.canonicalized.toString.replaceAll("#\\d+", "#")
     val key = java.security.MessageDigest.getInstance("SHA-256")
       .digest(planKey.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
@@ -116,29 +118,33 @@ object FixtureStaging {
   * JVM ever clears it.
   */
 object SessionCache {
+  /** One key's slot: its lock serializes renders of THAT key only, so
+    * distinct keys render concurrently while each renders once (again only
+    * if the JVM cleared the soft value).
+    */
+  private final class Slot {
+    private var ref: java.lang.ref.SoftReference[DataFrame] = null
+    def get(mk: => DataFrame): DataFrame = synchronized {
+      Option(ref).flatMap(r => Option(r.get())).getOrElse {
+        val df = mk
+        ref = new java.lang.ref.SoftReference(df)
+        df
+      }
+    }
+  }
+
   private val caches = new java.util.WeakHashMap[
-    SparkSession,
-    java.util.concurrent.ConcurrentHashMap[String, java.lang.ref.SoftReference[DataFrame]]]()
+    SparkSession, java.util.concurrent.ConcurrentHashMap[String, Slot]]()
 
   def getOrCompute(s: SparkSession, key: String)(mk: => DataFrame): DataFrame = {
     val m = caches.synchronized {
       var c = caches.get(s)
       if (c == null) {
-        c = new java.util.concurrent.ConcurrentHashMap[
-          String, java.lang.ref.SoftReference[DataFrame]]()
+        c = new java.util.concurrent.ConcurrentHashMap[String, Slot]()
         caches.put(s, c)
       }
       c
     }
-    // computeIfAbsent alone cannot express "present but cleared"; the
-    // synchronized block keeps it at one render per key per session
-    m.synchronized {
-      val hit = Option(m.get(key)).flatMap(r => Option(r.get()))
-      hit.getOrElse {
-        val df = mk
-        m.put(key, new java.lang.ref.SoftReference(df))
-        df
-      }
-    }
+    m.computeIfAbsent(key, _ => new Slot).get(mk)
   }
 }

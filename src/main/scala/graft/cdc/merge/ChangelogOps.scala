@@ -112,19 +112,11 @@ object ChangelogOps {
   def validated(df: DataFrame, cond: Column, message: String): DataFrame =
     df.where(coalesce(assert_true(cond, lit(message)).cast("boolean"), lit(true)))
 
-  /** J2 — per-split emit filter: a log event is emitted iff its key falls in
-    * a finished split's range AND its offset is past that split's high
-    * watermark. `splits` is planner metadata (tiny) — broadcast it so the
-    * join is a BroadcastNestedLoop over a handful of rows, never a shuffle.
+  /** J2 — [[graft.cdc.model.RowImage.emitFilter]] keyed by the scalar
+    * `pk` column; `splits` carries (lo, hi, hwm) with long bounds.
     */
-  def emitFilter(changelog: DataFrame, splits: DataFrame): DataFrame = {
-    val cond =
-      (splits("lo").isNull || col("pk") >= splits("lo")) &&
-        (splits("hi").isNull || col("pk") < splits("hi")) &&
-        col("offset") > splits("hwm")
-    changelog.where(col("op") =!= OpRead)
-      .join(broadcast(splits), cond, "left_semi")
-  }
+  def emitFilter(changelog: DataFrame, splits: DataFrame): DataFrame =
+    graft.cdc.model.RowImage.emitFilter(changelog, splits, "pk")
 
   /** T2 — pure-log cutover: per-table high watermark = max snapshot offset;
     * events strictly past it stream through unfiltered. Tables with no

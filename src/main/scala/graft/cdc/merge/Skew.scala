@@ -2,17 +2,13 @@ package graft.cdc.merge
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.cdc.model.Changelog
+import graft.cdc.model.{Changelog, RowImage}
 
 /** Skew-resistant variant of the last-writer-wins merge: a hot key (one pk
   * receiving a disproportionate share of the changelog) would make the
-  * single-shuffle max_by aggregation reduce on one task. Salting splits each
-  * key into `buckets` sub-groups for the first aggregation, then reduces the
-  * per-salt maxima — two small shuffles instead of one skewed one. The salt
-  * derives from the offset so a key's rows spread evenly and deterministically.
-  *
-  * AQE's skew-join handling covers joins; aggregation skew needs this
-  * explicit two-stage shape. Semantics are identical to
+  * single-shuffle max_by aggregation reduce on one task. This is the salted
+  * form of [[RowImage.lastWriterWins]] over the scalar changelog — per
+  * (key, offset-derived salt), then per key. Semantics are identical to
   * [[Changelog.upsertMaterialize]] (max is associative) — proven in
   * SkewSpec and by sharing the DuckDB oracle.
   */
@@ -22,21 +18,7 @@ object Skew {
       snapshot: DataFrame,
       changes: DataFrame,
       buckets: Int
-  ): DataFrame = {
-    val all = snapshot.unionByName(changes)
-      .withColumn("salt", pmod(xxhash64(col("offset")), lit(buckets)))
-    val perSalt = all
-      .groupBy(col("pk"), col("salt"))
-      .agg(max_by(struct(col("offset"), col("op"), col("val")), col("offset")).as("last"))
-    perSalt
-      .groupBy(col("pk"))
-      .agg(max_by(col("last"), col("last.offset")).as("last"))
-      .where(col("last.op") =!= Changelog.OpDelete)
-      .select(
-        col("pk"),
-        col("last.offset").as("last_offset"),
-        col("last.op").as("last_op"),
-        col("last.val").as("val")
-      )
-  }
+  ): DataFrame =
+    Changelog.scalarOut(RowImage.lastWriterWins(
+      snapshot.unionByName(changes), col("pk"), "val", Some(buckets)))
 }

@@ -24,13 +24,11 @@ import graft.cdc.model.Changelog
   */
 object SnapshotProtocol {
 
-  /** [keyLo, keyHi) containment predicate on pk, None = unbounded — THE
-    * chunk-range boundary semantics, shared by the chunk normalizer, the
-    * hybrid pipeline's pushdown and its emit filter so they cannot drift.
+  /** [keyLo, keyHi) containment on pk, None = unbounded —
+    * [[graft.cdc.source.RowImageHybrid.rangePredicate]] over the scalar key.
     */
   def rangePredicate(keyLo: Option[Long], keyHi: Option[Long]): org.apache.spark.sql.Column =
-    keyLo.map(col("pk") >= _).getOrElse(lit(true)) &&
-      keyHi.map(col("pk") < _).getOrElse(lit(true))
+    graft.cdc.source.RowImageHybrid.rangePredicate(col("pk"), keyLo.map(lit), keyHi.map(lit))
 
   /** Normalize one chunk: `scanned` is the chunk's snapshot rows (changelog
     * shape, op='r'), `changelog` the log, (lowWm, highWm] the backfill

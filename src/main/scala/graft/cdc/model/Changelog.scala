@@ -2,6 +2,7 @@ package graft.cdc.model
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** The universal IR of the engine: a changelog `DataFrame` with an explicit
   * op column, mirroring the reference's `RowData` + `RowKind` stream
@@ -128,28 +129,34 @@ object Changelog {
        |  SELECT -1 AS "offset", c_custkey AS pk, 'r' AS op, c_acctbal AS val FROM customer
        |)""".stripMargin
 
+  /** The scalar fixture as a declared table: `pk` keys one `val` column.
+    * Lifting (pk, val) rows into the generic IR over this table is how
+    * the scalar entry points reuse [[RowImage]]'s algebra.
+    */
+  val scalarTable: RowImage.DeclaredTable = RowImage.DeclaredTable("changelog",
+    StructType(Seq(StructField("pk", LongType), StructField("val", DoubleType))), Seq("pk"))
+
+  /** Scalar `(offset, op, pk)` rows plus their value -> the 4-column
+    * generic IR `(offset, op, key, after)` over [[scalarTable]].
+    */
+  private[cdc] def asRowImage(df: DataFrame, value: Column): DataFrame =
+    df.select(col("offset"), col("op"),
+      struct(col("pk")).cast(scalarTable.keyType).as("key"),
+      struct(col("pk"), value).cast(scalarTable.schema).as("after"))
+
   /** J1/W1 — snapshot ⊕ changelog upsert merge, last-writer-wins per key,
     * trailing deletes dropped. The reference does this with an in-memory
-    * LinkedHashMap per split (RecordUtils.java:77-114 upsertBinlog); at scale
-    * we express it as one hash aggregation: `max_by(struct(...), offset)`
-    * keyed by pk. Unlike a window (`row_number over (partition by pk order by
-    * offset desc)`), max_by needs NO sort and gets map-side partial
-    * aggregation — a single shuffle of partial maxima, which is the plan you
-    * want at 100 TB.
+    * LinkedHashMap per split (RecordUtils.java:77-114 upsertBinlog); here it
+    * is [[RowImage.lastWriterWins]] grouped by the bare `pk` column.
     */
-  def upsertMaterialize(snapshot: DataFrame, changes: DataFrame): DataFrame = {
-    val all = snapshot.unionByName(changes)
-    all
-      .groupBy(col("pk"))
-      .agg(
-        max_by(struct(col("offset"), col("op"), col("val")), col("offset")).as("last")
-      )
-      .where(col("last.op") =!= OpDelete)
-      .select(
-        col("pk"),
-        col("last.offset").as("last_offset"),
-        col("last.op").as("last_op"),
-        col("last.val").as("val")
-      )
-  }
+  def upsertMaterialize(snapshot: DataFrame, changes: DataFrame): DataFrame =
+    scalarOut(RowImage.lastWriterWins(snapshot.unionByName(changes), col("pk"), "val"))
+
+  /** Flatten scalar merge winners to (pk, last_offset, last_op, val). */
+  private[cdc] def scalarOut(merged: DataFrame): DataFrame =
+    merged.select(
+      col("pk"),
+      col("last.offset").as("last_offset"),
+      col("last.op").as("last_op"),
+      col("last.val").as("val"))
 }

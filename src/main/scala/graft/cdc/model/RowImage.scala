@@ -236,6 +236,43 @@ object RowImage {
     }: _*).cast(table.keyType)
   }
 
+  /** The changelog algebra's one last-writer-wins kernel: per key, the
+    * max-offset `last: (offset, op, <payload>)` struct, keys whose winner is
+    * a delete dropped. `key` is grouped on as given (a bare column or an
+    * aliased key expression), so each caller keeps its own key shape.
+    *
+    * Without `buckets` this is one aggregation with a map-side partial
+    * `max_by`: one shuffle of partial maxima. With `buckets` it is the
+    * skew-resistant form: a hot key first reduces per (key, offset-derived
+    * salt), then per key — two small shuffles instead of one skewed one
+    * (AQE's skew handling covers joins, not aggregations). max is
+    * associative, so both forms agree.
+    *
+    * `extra` aggregates ride the same unsalted aggregation (the
+    * placeholder carry of [[upsertMaterialize]]). Tied offsets within a key
+    * pick any of the tied rows.
+    */
+  private[cdc] def lastWriterWins(
+      rows: DataFrame,
+      key: Column,
+      payload: String,
+      buckets: Option[Int] = None,
+      extra: Seq[Column] = Nil): DataFrame = {
+    require(buckets.isEmpty || extra.isEmpty, "extra aggregates need the unsalted form")
+    val last = max_by(struct(col("offset"), col("op"), col(payload)), col("offset")).as("last")
+    val merged = buckets match {
+      case None => rows.groupBy(key).agg(last, extra: _*)
+      case Some(n) =>
+        val perSalt = rows
+          .withColumn("salt", pmod(xxhash64(col("offset")), lit(n)))
+          .groupBy(key, col("salt"))
+          .agg(last)
+        perSalt.groupBy(col(perSalt.columns.head))
+          .agg(max_by(col("last"), col("last.offset")).as("last"))
+    }
+    merged.where(col("last.op") =!= Changelog.OpDelete)
+  }
+
   /** J1/W1 straight over wire envelopes: group by the pk-parsed key, carry
     * the winning after-image as an OPAQUE JSON string through the one
     * shuffle (map-side partial max_by), then decode only the survivors.
@@ -243,38 +280,23 @@ object RowImage {
   def upsertMaterializeEnvelope(
       envelope: DataFrame,
       table: DeclaredTable,
-      overrides: ConverterOverrides = NoOverrides): DataFrame = {
-    val merged = envelope
-      .groupBy(keyColumn(table, overrides).as("key"))
-      .agg(max_by(struct(col("offset"), col("op"), col("after")), col("offset")).as("last"))
-      .where(col("last.op") =!= Changelog.OpDelete)
-    decodeWinners(merged, table, overrides)
-  }
+      overrides: ConverterOverrides = NoOverrides): DataFrame =
+    decodeWinners(
+      lastWriterWins(envelope, keyColumn(table, overrides).as("key"), "after"),
+      table, overrides)
 
-  /** Skew-resistant form of [[upsertMaterializeEnvelope]]: a hot key (one
-    * row receiving a disproportionate share of the changelog — the
-    * aggregation-skew case AQE's skew handling does not cover) first
-    * reduces per (key, offset-derived salt), then per key — two small
-    * shuffles instead of one skewed one, exactly
-    * [[graft.cdc.merge.Skew.saltedUpsertMaterialize]] lifted to wire
-    * envelopes. The partial winners still carry the after-image as an
-    * OPAQUE string; survivors decode once, after both reductions.
+  /** Skew-resistant form of [[upsertMaterializeEnvelope]] (the salted
+    * [[lastWriterWins]]): the partial winners still carry the after-image
+    * as an OPAQUE string; survivors decode once, after both reductions.
     */
   def upsertMaterializeEnvelopeSalted(
       envelope: DataFrame,
       table: DeclaredTable,
       buckets: Int,
-      overrides: ConverterOverrides = NoOverrides): DataFrame = {
-    val perSalt = envelope
-      .withColumn("salt", pmod(xxhash64(col("offset")), lit(buckets)))
-      .groupBy(keyColumn(table, overrides).as("key"), col("salt"))
-      .agg(max_by(struct(col("offset"), col("op"), col("after")), col("offset")).as("last"))
-    val merged = perSalt
-      .groupBy(col("key"))
-      .agg(max_by(col("last"), col("last.offset")).as("last"))
-      .where(col("last.op") =!= Changelog.OpDelete)
-    decodeWinners(merged, table, overrides)
-  }
+      overrides: ConverterOverrides = NoOverrides): DataFrame =
+    decodeWinners(
+      lastWriterWins(envelope, keyColumn(table, overrides).as("key"), "after", Some(buckets)),
+      table, overrides)
 
   /** Point-in-time (time-travel) materialization: the table state AS OF
     * `asOf` — last-writer-wins over only the frames at or below that
@@ -524,10 +546,8 @@ object RowImage {
       overrides: ConverterOverrides = NoOverrides): DataFrame =
     emitFilter(envelope.withColumn("key", keyColumn(table, overrides)), splits)
 
-  /** J1/W1 on the generic IR — last-writer-wins per COMPOSITE key, trailing
-    * deletes dropped, exactly [[Changelog.upsertMaterialize]]'s single hash
-    * aggregation (map-side partial `max_by`, one shuffle of partial maxima)
-    * with the scalar (pk, val) replaced by (key struct, after struct).
+  /** J1/W1 on the generic IR — [[lastWriterWins]] per COMPOSITE key over
+    * the (key struct, after struct) IR, trailing deletes dropped.
     * Output: pk columns flattened, last_offset, value columns flattened.
     */
   def upsertMaterialize(rows: DataFrame, table: DeclaredTable): DataFrame =
@@ -557,8 +577,6 @@ object RowImage {
       else table.schema.fields.toSeq.filter(f =>
         table.valueCols.contains(f.name) &&
           (f.dataType == StringType || f.dataType == BinaryType))
-    val lastAgg =
-      max_by(struct(col("offset"), col("op"), col("after")), col("offset")).as("last")
     // latest value that was actually present in a record: placeholder rows
     // have a NULL ordering and are skipped by max_by. The value rides in a
     // single-field struct because an explicit NULL value IS present and
@@ -571,10 +589,7 @@ object RowImage {
         when(col("after").isNotNull && !(v <=> sentinelLit(f.dataType)),
           col("offset"))).as(s"_avail_${f.name}")
     }
-    val merged = rows
-      .groupBy(col("key"))
-      .agg(lastAgg, availAggs: _*)
-      .where(col("last.op") =!= Changelog.OpDelete)
+    val merged = lastWriterWins(rows, col("key"), "after", extra = availAggs)
     val pkOut = table.pkCols.map(c => col("key").getField(c).as(c))
     val valOut = table.valueCols.map { c =>
       val last = col("last.after").getField(c)
@@ -612,17 +627,20 @@ object RowImage {
         col("k.row_kind").as("row_kind"), col("k.img").as("img"))
   }
 
-  /** J2 on the generic IR — per-split emit filter with COMPOSITE split
-    * ranges. `splits` carries (lo: struct|null, hi: struct|null, hwm: long)
-    * with lo/hi typed as [[DeclaredTable.keyType]]; struct comparison in
-    * Spark is lexicographic over the fields, which is exactly the composite
-    * chunk-boundary order the splitters plan (KeyedChunkPlanner). Planner
-    * metadata is tiny — broadcast, never shuffle.
+  /** J2 — per-split emit filter (BinlogSplitReader.java:228-260): a log
+    * event is emitted iff its key falls in a finished split's range AND its
+    * offset is past that split's high watermark; snapshot reads never pass.
+    * `splits` carries (lo, hi, hwm) with lo/hi typed like the `keyCol`
+    * column (null = unbounded) — a composite [[DeclaredTable.keyType]]
+    * struct compares lexicographically over its fields, which is exactly
+    * the composite chunk-boundary order the splitters plan
+    * (KeyedChunkPlanner). Planner metadata is tiny — broadcast, never
+    * shuffle.
     */
-  def emitFilter(rows: DataFrame, splits: DataFrame): DataFrame = {
+  def emitFilter(rows: DataFrame, splits: DataFrame, keyCol: String = "key"): DataFrame = {
     val cond =
-      (splits("lo").isNull || col("key") >= splits("lo")) &&
-        (splits("hi").isNull || col("key") < splits("hi")) &&
+      (splits("lo").isNull || col(keyCol) >= splits("lo")) &&
+        (splits("hi").isNull || col(keyCol) < splits("hi")) &&
         col("offset") > splits("hwm")
     rows.where(col("op") =!= Changelog.OpRead)
       .join(broadcast(splits), cond, "left_semi")
@@ -737,11 +755,11 @@ object RowImage {
   }
 
   // --------------------------------------------------------------------
-  // S9 on the generic IR — composite-key offset-guarded JDBC upserts.
-  // Same two-guard recipe as JdbcUpsertSink (offset guard per key; the
-  // epoch ledger is sink-id plumbing, orthogonal to the row schema), but
-  // the DDL, predicates and parameter binding are DERIVED from the
-  // declared schema instead of hard-wiring (pk BIGINT, val DOUBLE).
+  // S9 — the engine's one row-level JDBC upsert writer: offset-guarded
+  // upserts per (composite) key, with the DDL, predicates and parameter
+  // binding DERIVED from the declared schema. The scalar sink
+  // (JdbcUpsertSink) adds its epoch ledger on top and writes through here
+  // over Changelog.scalarTable.
   // --------------------------------------------------------------------
 
   /** Declared Spark type -> portable SQL column type (Derby-compatible). */
@@ -835,10 +853,21 @@ object RowImage {
     }
   }
 
-  /** Offset-guarded upsert of decoded generic-IR rows (executor-parallel,
-    * one connection per partition — JdbcUpsertSink's concurrency model).
-    * Deletes tombstone (LAST_OP='d') rather than physically delete, for the
-    * same replay-resurrection reason. Input: [[decodeEnvelope]] output.
+  /** Offset-guarded upsert of decoded generic-IR rows, executor-parallel:
+    * one connection and one transaction per partition. A write applies only
+    * when its offset advances the stored LAST_OFFSET for the key, so a
+    * replayed or reordered batch can never regress state. Deletes become
+    * TOMBSTONES (LAST_OP='d'), not physical deletes: removing the row would
+    * lose the key's offset watermark, and a later replay of an OLDER insert
+    * would resurrect the key; readers filter tombstones. UPDATE-then-INSERT
+    * with a duplicate-key retry covers the concurrent-first-writer race.
+    *
+    * Each partition is sorted by key first, so every transaction takes its
+    * row locks in one global order and partitions sharing keys cannot form
+    * a lock cycle (without it a multi-partition batch deadlocks in Derby).
+    * The sort neither shuffles nor changes the partition count; the order of
+    * a key's own events does not matter under the offset guard.
+    * Input: [[decodeEnvelope]]-shaped `(offset, op, key, after)` rows.
     */
   def applyRows(rows: DataFrame, table: DeclaredTable, url: String, sqlName: String): Unit = {
     graft.cdc.source.CdcSource.validIdentifier(sqlName)
@@ -859,6 +888,7 @@ object RowImage {
       (col("offset") +: col("op") +:
         pkCols.map(c => col("key").getField(c).as(c))) ++
         valCols.map(c => col("after").getField(c).as(c)): _*)
+      .sortWithinPartitions(pkCols.map(col): _*)
 
     flat.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       val conn = java.sql.DriverManager.getConnection(url)
@@ -922,8 +952,7 @@ object RowImage {
     * decodes the wire frames through the declared schema and applies them
     * with the offset-guarded upsert; a batch replayed after a crash is a
     * per-key no-op, which is what turns the stream's at-least-once delivery
-    * into an exactly-once EFFECT — the same guarantee JdbcUpsertSink proves
-    * for the scalar IR, derived here from the declared schema.
+    * into an exactly-once EFFECT.
     */
   def applyEnvelopeStream(
       envelope: DataFrame,

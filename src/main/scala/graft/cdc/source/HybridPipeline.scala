@@ -3,7 +3,6 @@ package graft.cdc.source
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cdc.model.Changelog
-import graft.cdc.merge.SnapshotProtocol
 
 /** S1 — the flagship hybrid-source flow as one composition: chunked
   * snapshot scans with per-chunk (LOW, HIGH] backfill brackets, then the
@@ -36,54 +35,26 @@ object HybridPipeline {
     (Some(10L), None, 650L, 750L)
   )
 
+  /** The flow over the scalar fixture: snapshot and log lift into the
+    * 4-column generic IR `(offset, op, key, after)` over
+    * [[Changelog.scalarTable]], and [[RowImageHybrid.materialize]] runs it.
+    * Output: (pk, last_offset, val).
+    */
   def materialize(
       spark: SparkSession,
       sfDir: String,
       plan: ChunkPlan = defaultPlan
-  ): DataFrame = {
-    val snap = Changelog.snapshot(spark, sfDir)
-    val cl = Changelog.changelog(spark, sfDir)
+  ): DataFrame =
+    materialize(
+      Changelog.asRowImage(Changelog.snapshot(spark, sfDir), col("val")).unionByName(
+        Changelog.asRowImage(Changelog.changelog(spark, sfDir), col("val"))),
+      plan)
 
-    // snapshot phase: each chunk observed at its own lowWm, backfilled to
-    // its highWm and normalized to READ rows. The chunk's key-range filter
-    // is pushed onto BOTH inputs before the merge — the merge is per-key,
-    // so this is semantically identical, and it means each chunk aggregates
-    // only its own key range (and the range predicate reaches the scans)
-    // instead of running a full-keyspace materialization per chunk.
-    //
-    // The observe-at-lowWm + backfill-to-highWm bracket collapses to ONE
-    // merge per chunk: last-writer-wins is associative in the offset order,
-    // so merge(merge(snap ∪ log≤lowWm) ∪ log(lowWm, highWm]) per key equals
-    // merge(snap ∪ log≤highWm) — the winner is the max-offset event ≤ highWm
-    // either way, a delete winner drops the key either way, and the chunk
-    // output normalizes op/ts regardless. (A real scanner pays the two-phase
-    // bracket because its chunk scan is an independent non-transactional
-    // read; a changelog-backed observation is already the prefix state, so
-    // the second distributed merge per chunk was pure fixture overhead —
-    // this is the reference's own shape, where backfill is applied in the
-    // reader's buffer, not as a second shuffle.) HybridPipelineSpec pins the
-    // output against the direct full-log materialization.
-    val chunks = plan.map { case (lo, hi, _, highWm) =>
-      val inRange = (df: org.apache.spark.sql.DataFrame) =>
-        df.where(SnapshotProtocol.rangePredicate(lo, hi))
-      Changelog.upsertMaterialize(
-          inRange(snap), inRange(cl).where(col("offset") <= highWm))
-        .select(col("pk"), col("last_offset").as("offset"),
-          lit(Changelog.OpRead).as("op"), lit(0L).as("ts_ms"), col("val"),
-          lit(null).cast("string").as("props"))
-    }.reduce(_ unionByName _)
-
-    // log phase: starts at min(high watermark) across finished chunks
-    // (MySqlHybridSplitAssigner.java:205-219); the per-split emit filter
-    // passes an event iff its key's chunk has offset > that chunk's hwm
-    // (BinlogSplitReader.java:228-260)
-    val minHwm = plan.map(_._4).min
-    val emitCond = plan.map { case (lo, hi, _, highWm) =>
-      SnapshotProtocol.rangePredicate(lo, hi) && col("offset") > highWm
-    }.reduce(_ || _)
-    val logPhase = cl.where(col("offset") > minHwm && emitCond)
-
-    Changelog.upsertMaterialize(chunks, logPhase)
-      .select(col("pk"), col("last_offset"), col("val"))
+  /** The flow over lifted rows, the `Long` bounds mapped to key structs. */
+  private[source] def materialize(ir: DataFrame, plan: ChunkPlan): DataFrame = {
+    val t = Changelog.scalarTable
+    RowImageHybrid.materialize(ir, t, RowImageHybrid.planFromBoundaries(t,
+      plan.map { case (lo, hi, _, _) => (lo.map(Seq(_)), hi.map(Seq(_))) },
+      i => (plan(i)._3, plan(i)._4)))
   }
 }

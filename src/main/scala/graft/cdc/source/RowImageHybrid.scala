@@ -9,17 +9,18 @@ import graft.cdc.model.RowImage.DeclaredTable
   * declared table shape with a COMPOSITE key: chunked snapshot observation
   * with per-chunk (LOW, HIGH] backfill brackets, then the log phase from
   * min(high watermark) with the per-split emit filter, merged to current
-  * state. The scalar form is [[HybridPipeline]]; every phase here runs the
-  * schema-driven operators ([[RowImage.upsertMaterialize]] on the decoded
-  * envelope IR), with chunk boundaries as key-struct literals compared
-  * lexicographically — the same boundary order the composite chunk
-  * planners (KeyedChunkPlanner) emit.
+  * state. This is the only implementation of the flow ([[HybridPipeline]]
+  * lifts the scalar fixture into it); every phase runs the schema-driven
+  * operators ([[RowImage.upsertMaterialize]] on the decoded envelope IR),
+  * with chunk boundaries as key-struct literals compared lexicographically
+  * — the same boundary order the composite chunk planners
+  * (KeyedChunkPlanner) emit.
   *
   * Reference: MySqlHybridSplitAssigner.java:103-232 (phase sequencing,
   * binlog split at min hwm), SnapshotSplitReadTask.java:166-212 (watermark
-  * bracketing), BinlogSplitReader.java:228-279 (shouldEmit). As in the
-  * scalar form, no enumerator/reader RPC survives: the driver sequences
-  * phases over tiny plan metadata, executors do all row work.
+  * bracketing), BinlogSplitReader.java:228-279 (shouldEmit). No
+  * enumerator/reader RPC survives: the driver sequences phases over tiny
+  * plan metadata, executors do all row work.
   *
   * A chunk's "snapshot scan observed at lowWm" is the materialized state of
   * the chunk's key range at that offset — which for a changelog-defined
@@ -95,7 +96,10 @@ object RowImageHybrid {
     // was pure fixture overhead — the reference itself applies backfill in
     // the reader's buffer, one normalized output per chunk, not as a second
     // shuffle.) RowImageHybridSpec pins the output against the direct
-    // full-log materialization.
+    // full-log materialization; HybridPipelineSpec pins each chunk against
+    // the two-phase bracket (SnapshotProtocol.normalizeChunk) and checks
+    // that lowWm, kept in the plan as the chunk's observed position, does
+    // not change the result.
     val chunks = plan.map { case (lo, hi, _, highWm) =>
       val inRange = (df: DataFrame) => df.where(rangePredicate(col("key"), lo, hi))
       asRead(RowImage.upsertMaterialize(

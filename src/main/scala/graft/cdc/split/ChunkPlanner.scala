@@ -530,15 +530,18 @@ object ChunkPlanner {
     * node) and the bucket is ntile's exact fill arithmetic on that rank —
     * the first cnt%n buckets hold ceil(cnt/n) rows, the rest floor — the
     * same replay [[sampleRateBuckets]] already uses. The row count is a
-    * 1-row planner probe like [[analyze]]. The production-scale variant
-    * samples first (`df.sample`) exactly like the reference's `$sample`.
+    * 1-row probe (max rank) over the rank's materialized frame, so count
+    * and buckets come from ONE evaluation of `df` — the production-scale
+    * variant samples first (`df.sample`, like the reference's `$sample`),
+    * and two evaluations of a sample need not agree.
     */
   def sampleBuckets(df: DataFrame, key: String, n: Int): DataFrame = {
-    val keyed = df.select(col(key).as("k"))
-    val cnt = keyed.count()
+    val ranked =
+      DistributedRank.withGlobalRowNumber(df.select(col(key).as("k")), "rn", Seq(col("k")))
+    val cnt = ranked.agg(coalesce(max(col("rn")), lit(0L))).head().getLong(0)
     val q = cnt / n
     val r = cnt % n
-    DistributedRank.withGlobalRowNumber(keyed, "rn", Seq(col("k")))
+    ranked
       .withColumn("bucket",
         when(col("rn") <= lit((q + 1) * r), (col("rn") - 1) / lit(q + 1) + 1)
           .otherwise(lit(r) + (col("rn") - lit((q + 1) * r) - 1)

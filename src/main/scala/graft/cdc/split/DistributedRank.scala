@@ -133,13 +133,21 @@ object DistributedRank {
       .withColumn("__pid", spark_partition_id())
       .withColumn("__run", call_function("graft_running_sum", col("__v")))
       .localCheckpoint()
-    val sums = parted.groupBy(col("__pid")).agg(sum(col("__v")).as("__s"))
+    // __nn counts non-null values per partition: a row whose local fold is
+    // still null (its partition starts with nulls) takes the earlier
+    // partitions' sum when any of them had a value, null otherwise — the
+    // window sum's null-until-first-value semantics across range boundaries
+    val sums = parted.groupBy(col("__pid"))
+      .agg(sum(col("__v")).as("__s"), count(col("__v")).as("__nn"))
     val bases = sums.as("a")
       .join(broadcast(sums.as("b")), col("b.__pid") < col("a.__pid"), "left")
       .groupBy(col("a.__pid").as("__pid"))
-      .agg(coalesce(sum(col("b.__s")), lit(0L)).as("__base"))
+      .agg(coalesce(sum(col("b.__s")), lit(0L)).as("__base"),
+        coalesce(sum(col("b.__nn")), lit(0L)).as("__prior_nn"))
     parted.join(broadcast(bases), Seq("__pid"))
-      .withColumn(sumCol, col("__base") + col("__run"))
-      .drop("__pid", "__v", "__run", "__base")
+      .withColumn(sumCol,
+        when(col("__run").isNull, when(col("__prior_nn") > 0, col("__base")))
+          .otherwise(col("__base") + col("__run")))
+      .drop("__pid", "__v", "__run", "__base", "__prior_nn")
   }
 }

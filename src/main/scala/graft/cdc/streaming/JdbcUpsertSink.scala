@@ -3,53 +3,49 @@ package graft.cdc.streaming
 import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** S9 — exactly-once JDBC sink: the materialized-state end of the pipeline,
-  * playing the reference's JDBC e2e sink (MySqlE2eITCase.java sinks the CDC
-  * stream into a MySQL table via idempotent upserts).
+import graft.cdc.model.{Changelog, RowImage}
+
+/** S9 — exactly-once JDBC sink for the scalar changelog: the materialized-
+  * state end of the pipeline, playing the reference's JDBC e2e sink
+  * (MySqlE2eITCase.java sinks the CDC stream into a MySQL table via
+  * idempotent upserts).
   *
   * Exactly-once comes from TWO independent guards, the standard recipe for
   * non-transactional streaming sinks:
   *
-  *   1. '''Offset-guarded idempotent upserts''' — every write carries the
-  *      changelog offset and only applies when it advances the stored
-  *      `last_offset` for that key (the sink-side form of the last-writer-
-  *      wins merge, [[graft.cdc.model.Changelog.upsertMaterialize]]). A
-  *      replayed or reordered batch can never regress state.
-  *   2. '''Epoch ledger''' — after a batch's rows land, (sink_id, batch_id)
-  *      is recorded in `GRAFT_SINK_EPOCH`; a batch id already in the ledger
-  *      is skipped wholesale on replay. A crash BETWEEN rows and ledger
-  *      re-runs the batch, which guard 1 makes a no-op.
+  *   1. '''Offset-guarded idempotent upserts''' — the rows go through the
+  *      engine's one JDBC upsert writer, [[RowImage.applyRows]], over
+  *      [[Changelog.scalarTable]]: a write applies only when its offset
+  *      advances the key's stored `last_offset`, so a replayed or reordered
+  *      batch can never regress state.
+  *   2. '''Epoch ledger''' — this object's own part: after a batch's rows
+  *      land, (sink_id, batch_id) is recorded in `GRAFT_SINK_EPOCH`; a batch
+  *      id already in the ledger is skipped wholesale on replay. A crash
+  *      BETWEEN rows and ledger re-runs the batch, which guard 1 makes a
+  *      no-op.
   *
-  * Writes happen on the executors — `foreachPartition` opens one connection
-  * per partition and flushes `UPDATE`-then-`INSERT` upserts (the portable
-  * form; MERGE is a dialect); only the ledger touch is driver-side. At
-  * cluster scale partitions write in parallel to the target database, which
-  * is exactly the reference sink's concurrency model.
+  * Rows are written on the executors, one connection per partition; only
+  * the ledger touch is driver-side.
   */
 object JdbcUpsertSink {
 
-  /** Target-state DDL: pk-keyed materialized rows. */
+  /** Target-state DDL (`PK, LAST_OFFSET, LAST_OP, VAL`) plus the ledger. */
   def createTables(url: String, table: String): Unit = {
-    graft.cdc.source.CdcSource.validIdentifier(table)
+    RowImage.createStateTable(url, Changelog.scalarTable, table)
     val conn = DriverManager.getConnection(url)
     try {
-      def tableExists(name: String): Boolean = {
-        val rs = conn.getMetaData.getTables(null, null, name.toUpperCase, null)
-        try rs.next() finally rs.close()
+      val rs = conn.getMetaData.getTables(null, null, "GRAFT_SINK_EPOCH", null)
+      val exists = try rs.next() finally rs.close()
+      if (!exists) {
+        val st = conn.createStatement()
+        try st.executeUpdate(
+          "CREATE TABLE GRAFT_SINK_EPOCH (SINK_ID VARCHAR(128), BATCH_ID BIGINT, " +
+            "PRIMARY KEY (SINK_ID, BATCH_ID))")
+        finally st.close()
       }
-      val st = conn.createStatement()
-      try {
-        if (!tableExists(table))
-          st.executeUpdate(
-            s"CREATE TABLE $table (PK BIGINT PRIMARY KEY, LAST_OFFSET BIGINT, " +
-              "LAST_OP VARCHAR(1), VAL DOUBLE)")
-        if (!tableExists("GRAFT_SINK_EPOCH"))
-          st.executeUpdate(
-            "CREATE TABLE GRAFT_SINK_EPOCH (SINK_ID VARCHAR(128), BATCH_ID BIGINT, " +
-              "PRIMARY KEY (SINK_ID, BATCH_ID))")
-      } finally st.close()
     } finally conn.close()
   }
 
@@ -64,71 +60,14 @@ object JdbcUpsertSink {
     } finally st.close()
   }
 
-  /** Offset-guarded upsert of one changelog row. Deletes become TOMBSTONES
-    * (LAST_OP = 'd'), not physical deletes: removing the row would lose the
-    * key's offset watermark, and a later replay of an OLDER insert would
-    * resurrect the key (found by the stale-redelivery spec). Consumers read
-    * through [[readState]], which filters tombstones; physical removal is an
-    * offline retention compaction, exactly like log-compacted topics.
-    * UPDATE-then-INSERT with a duplicate-key retry covers the
-    * concurrent-first-writer race.
-    */
-  private def applyRow(
-      conn: Connection,
-      table: String,
-      offset: Long, pk: Long, op: String, value: Double): Unit = {
-    {
-      val upd = conn.prepareStatement(
-        s"UPDATE $table SET LAST_OFFSET = ?, LAST_OP = ?, VAL = ? " +
-          "WHERE PK = ? AND LAST_OFFSET < ?")
-      val updated = try {
-        upd.setLong(1, offset); upd.setString(2, op); upd.setDouble(3, value)
-        upd.setLong(4, pk); upd.setLong(5, offset)
-        upd.executeUpdate()
-      } finally upd.close()
-      if (updated == 0) {
-        val probe = conn.prepareStatement(s"SELECT 1 FROM $table WHERE PK = ?")
-        val present = try {
-          probe.setLong(1, pk)
-          val rs = probe.executeQuery()
-          try rs.next() finally rs.close()
-        } finally probe.close()
-        if (!present) {
-          val ins = conn.prepareStatement(
-            s"INSERT INTO $table VALUES (?, ?, ?, ?)")
-          try {
-            ins.setLong(1, pk); ins.setLong(2, offset)
-            ins.setString(3, op); ins.setDouble(4, value)
-            ins.executeUpdate()
-          } catch {
-            // another partition inserted the key first: retry as update
-            case _: java.sql.SQLIntegrityConstraintViolationException =>
-              applyRow(conn, table, offset, pk, op, value)
-          } finally ins.close()
-        }
-      }
-    }
-  }
-
   /** Rows-only application (no ledger) — the executor half of a batch
-    * commit. Package-visible so the chaos specs can crash a commit between
-    * rows landing and the ledger mark, the exact window a task-manager kill
-    * exposes.
+    * commit: `(offset, pk, op, value)` rows lifted into the generic IR and
+    * written by [[RowImage.applyRows]]. Package-visible so the chaos specs
+    * can crash a commit between rows landing and the ledger mark, the exact
+    * window a task-manager kill exposes.
     */
-  private[streaming] def applyRows(batch: DataFrame, url: String, table: String): Unit = {
-    graft.cdc.source.CdcSource.validIdentifier(table)
-    batch.select("offset", "pk", "op", "value").foreachPartition {
-      (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val conn = DriverManager.getConnection(url)
-        try {
-          conn.setAutoCommit(false)
-          rows.foreach { r =>
-            applyRow(conn, table, r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))
-          }
-          conn.commit()
-        } finally conn.close()
-    }
-  }
+  private[streaming] def applyRows(batch: DataFrame, url: String, table: String): Unit =
+    RowImage.applyRows(Changelog.asRowImage(batch, col("value")), Changelog.scalarTable, url, table)
 
   /** Write one micro-batch exactly-once. Idempotent: safe to call again with
     * the same batchId (ledger skip) or with overlapping redelivered rows
@@ -178,5 +117,5 @@ object JdbcUpsertSink {
   def readState(spark: org.apache.spark.sql.SparkSession, url: String, table: String): DataFrame =
     spark.read.jdbc(url, graft.cdc.source.CdcSource.validIdentifier(table),
         new java.util.Properties())
-      .where(org.apache.spark.sql.functions.col("LAST_OP") =!= "d")
+      .where(col("LAST_OP") =!= "d")
 }

@@ -1,8 +1,10 @@
 package graft.cdc.source
 
 import graft.SparkTestBase
+import graft.cdc.merge.SnapshotProtocol
 import graft.cdc.model.Changelog
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** The hybrid pipeline (chunked snapshot + per-chunk watermarks + emit-
   * filtered log phase) must land in exactly the state a direct
@@ -45,5 +47,53 @@ class HybridPipelineSpec extends SparkTestBase {
     for (p <- plans)
       assert(collectSet(HybridPipeline.materialize(spark, sfDir, p)) == expect,
         s"plan $p diverged")
+  }
+
+  /** Plans over the fixture's keys (log pks 0..14, snapshot pks 0..149):
+    * 1-3 chunks cut at distinct boundaries, each observed at its own
+    * lowWm <= highWm inside the log's offsets 0..999.
+    */
+  private val planGen: Gen[HybridPipeline.ChunkPlan] = for {
+    n <- Gen.choose(1, 3)
+    cuts <- Gen.pick(n - 1, 1L to 20L)
+    wms <- Gen.listOfN(n, for {
+      hi <- Gen.choose(0L, 1000L)
+      lo <- Gen.choose(0L, hi)
+    } yield (lo, hi))
+  } yield {
+    val b = cuts.toSeq.sorted
+    (None +: b.map(Option(_))).zip(b.map(Option(_)) :+ None).zip(wms).map {
+      case ((lo, hi), (lowWm, highWm)) => (lo, hi, lowWm, highWm)
+    }
+  }
+
+  test("each chunk's one merge equals the two-phase bracket; lowWm does not change the result") {
+    val snap = Changelog.snapshot(spark, sfDir)
+    val cl = Changelog.changelog(spark, sfDir)
+    val expect = collectSet(direct())
+    val prop = Prop.forAll(planGen) { plan =>
+      val chunksAgree = plan.forall { case (lo, hi, lowWm, highWm) =>
+        // the protocol as the reference runs it: the chunk observed at
+        // lowWm, then (lowWm, highWm] backfilled into it
+        val observed = Changelog.upsertMaterialize(snap, cl.where(col("offset") <= lowWm))
+          .select(col("pk"), col("last_offset").as("offset"), lit(Changelog.OpRead).as("op"),
+            lit(0L).as("ts_ms"), col("val"), lit(null).cast("string").as("props"))
+        val twoPhase = SnapshotProtocol.normalizeChunk(observed, cl, lowWm, highWm, lo, hi)
+          .select(col("pk"), col("offset"), col("val"))
+        // the pipeline's one merge: this chunk alone over a log that ends at
+        // highWm, so nothing reaches the log phase
+        val oneMerge = HybridPipeline.materialize(
+          Changelog.asRowImage(snap, col("val")).unionByName(
+            Changelog.asRowImage(cl.where(col("offset") <= highWm), col("val"))),
+          Seq((lo, hi, lowWm, highWm)))
+        collectSet(oneMerge) == collectSet(twoPhase)
+      }
+      val got = collectSet(HybridPipeline.materialize(spark, sfDir, plan))
+      val atHigh = collectSet(HybridPipeline.materialize(spark, sfDir,
+        plan.map { case (lo, hi, _, highWm) => (lo, hi, highWm, highWm) }))
+      chunksAgree && got == expect && atHigh == expect
+    }
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(r.passed, r.status.toString)
   }
 }

@@ -338,4 +338,25 @@ class ChunkPlannerSpec extends SparkTestBase {
     assert(b.getStruct(1).getLong(0) == a.getAs[Number]("max_k").longValue)
     assert(b.getLong(2) == a.getAs[Long]("cnt"))
   }
+
+  test("sampleBuckets evaluates its input only inside the rank: no separate count pass") {
+    val s = spark
+    import s.implicits._
+    val acc = spark.sparkContext.longAccumulator("sample_buckets_rows_read")
+    val base = (1 to 2000).map(i => (i % 613).toLong).toDF("k").repartition(4)
+    // pass-through that counts every row each evaluation of the input reads
+    val input = base.mapPartitions(it => it.map { r => acc.add(1); r })(
+      org.apache.spark.sql.Encoders.row(base.schema))
+    def rowsRead[T](f: => T): (T, Long) = {
+      val before = acc.sum; val r = f; (r, acc.sum - before)
+    }
+    // the rank's own reads: range-boundary sampling plus the one
+    // materialization every later step reads from
+    val (_, rankOnly) = rowsRead(DistributedRank
+      .withGlobalRowNumber(input.select(col("k")), "rn", Seq(col("k"))).count())
+    val (out, bucketed) = rowsRead(ChunkPlanner.sampleBuckets(input, "k", 4).collect())
+    assert(bucketed == rankOnly)
+    assert(out.map(_.getAs[Long]("cnt")).sum == 2000L)
+    assert(out.map(_.getAs[Long]("cnt")).toSet == Set(500L))
+  }
 }

@@ -134,4 +134,31 @@ class DistributedRankSpec extends SparkTestBase {
     assert(got.contains((1, None)) && got.contains((3, None)))
     assert(got.exists { case (tb, v) => tb == 4 && v.contains(4L) })
   }
+
+  test("withGlobalRunningSum carries the earlier partitions' sum into a partition that starts with nulls") {
+    val s = spark
+    import s.implicits._
+    // a null run over the middle third: at 4 shuffle partitions the range
+    // boundary near the median lands inside it whatever the sampling seed,
+    // so a partition other than the first begins with nulls and its rows
+    // must report the sum of everything before them, not null
+    val n = 6000
+    val df = (1 to n)
+      .map(i => (i, if (i > n / 3 && i <= 2 * n / 3) None else Some(i.toLong)))
+      .toDF("tb", "v").repartition(3)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val order = Seq(col("tb"))
+    def pairs(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getInt(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
+    val got = pairs(DistributedRank
+      .withGlobalRunningSum(df, "cum", col("v"), order)
+      .select($"tb", $"cum").collect())
+    val want = pairs(df.withColumn("cum",
+      sum(col("v")).over(Window.orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select($"tb", $"cum").collect())
+    val prefix = (1L to n / 3).sum
+    assert(got.contains((n / 2, Some(prefix))))
+    assert(got == want)
+  }
 }
