@@ -169,18 +169,9 @@ object Bench {
     try {
       val oracleJson = java.io.File.createTempFile("bench_oracle", ".json")
       oracleJson.deleteOnExit()
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
       java.nio.file.Files.writeString(oracleJson.toPath,
         SparkEntry.oracleSql.filter(kv => benched.contains(kv._1))
-          .map { case (k, v) => s"${q(k)}: ${q(v)}" }
+          .map { case (k, v) => s"${Verify.jsonString(k)}: ${Verify.jsonString(v)}" }
           .mkString("{", ",", "}"))
       val script =
         s"""import json, sys, time

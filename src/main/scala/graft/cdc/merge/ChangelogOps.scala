@@ -142,13 +142,13 @@ object ChangelogOps {
   /** T7 — TiDB resolvedTs flush: only events at or before the resolved
     * timestamp are emitted, ordered by commit ts (ties by offset).
     *
-    * The global commit rank is computed DISTRIBUTED — range-partition on the
-    * flush order, rank locally per partition, then add each partition's
-    * cumulative row-count base (the standard distributed dense-rank) — never
-    * as a partition-less window that would drain the whole history through
-    * one task. The only non-partitioned step is the per-partition count
-    * rollup: <= spark.sql.shuffle.partitions rows of planner metadata,
-    * joined back by broadcast. The reference serializes per source-reader
+    * The global commit rank is computed DISTRIBUTED by
+    * [[graft.cdc.split.DistributedRank.withGlobalRowNumber]] — one range
+    * shuffle on the flush order, per-partition row counts turned into bases
+    * on the driver (<= spark.sql.shuffle.partitions numbers), then each
+    * partition numbers its rows from its base — never as a partition-less
+    * window that would drain the whole history through one task. The
+    * reference serializes per source-reader
     * buffer flush, not globally (TiKVRichParallelSourceFunction.java:224-260);
     * this preserves its commit-ts flush order at any scale.
     */

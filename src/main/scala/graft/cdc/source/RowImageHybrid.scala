@@ -83,6 +83,14 @@ object RowImageHybrid {
     */
   def materialize(ir: DataFrame, table: DeclaredTable, plan: ChunkPlan): DataFrame = {
     val slim = ir.select(col("offset"), col("op"), col("key"), col("after"))
+    // a one-column key compares its field, not the struct: Catalyst folds
+    // `struct(pk).pk` to `pk`, so the chunk range pushes into the scan
+    val (key, bound) = table.pkCols match {
+      case Seq(pk) => (col("key").getField(pk), (c: Column) => c.getField(pk))
+      case _ => (col("key"), (c: Column) => c)
+    }
+    def inChunk(lo: Option[Column], hi: Option[Column]): Column =
+      rangePredicate(key, lo.map(bound), hi.map(bound))
 
     // the observe-at-lowWm + backfill-to-highWm bracket collapses to ONE
     // merge per chunk: last-writer-wins is associative in the offset order,
@@ -101,16 +109,15 @@ object RowImageHybrid {
     // that lowWm, kept in the plan as the chunk's observed position, does
     // not change the result.
     val chunks = plan.map { case (lo, hi, _, highWm) =>
-      val inRange = (df: DataFrame) => df.where(rangePredicate(col("key"), lo, hi))
       asRead(RowImage.upsertMaterialize(
-        inRange(slim).where(col("offset") <= highWm), table), table)
+        slim.where(inChunk(lo, hi) && col("offset") <= highWm), table), table)
     }.reduce(_ unionByName _)
 
     // log phase from min(high watermark); an event passes iff its key's
     // chunk is already past it (offset > that chunk's hwm)
     val minHwm = plan.map(_._4).min
     val emitCond = plan.map { case (lo, hi, _, highWm) =>
-      rangePredicate(col("key"), lo, hi) && col("offset") > highWm
+      inChunk(lo, hi) && col("offset") > highWm
     }.reduce(_ || _)
     val logPhase = slim.where(col("offset") > minHwm && emitCond)
 

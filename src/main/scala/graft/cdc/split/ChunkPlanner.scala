@@ -526,12 +526,13 @@ object ChunkPlanner {
     * `ntile(n) OVER (ORDER BY k)` would drain every row through one
     * partition (the single-partition-window scale killer and the WARN the
     * smoke logs flagged); instead the global rank comes from
-    * [[DistributedRank]] (range partition + in-partition decode, no Window
+    * [[DistributedRank]] (one range shuffle and a two-phase pass, no Window
     * node) and the bucket is ntile's exact fill arithmetic on that rank —
     * the first cnt%n buckets hold ceil(cnt/n) rows, the rest floor — the
     * same replay [[sampleRateBuckets]] already uses. The row count is a
-    * 1-row probe (max rank) over the rank's materialized frame, so count
-    * and buckets come from ONE evaluation of `df` — the production-scale
+    * 1-row probe (max rank) over the rank's output, which like the buckets
+    * reads the rank's one range shuffle, so count and buckets come from ONE
+    * evaluation of `df` — the production-scale
     * variant samples first (`df.sample`, like the reference's `$sample`),
     * and two evaluations of a sample need not agree.
     */

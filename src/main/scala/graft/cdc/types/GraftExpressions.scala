@@ -751,77 +751,6 @@ case class SortedFold(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** `graft_running_sum(v: bigint) -> bigint`: the PER-PARTITION inclusive
-  * prefix sum — compiled replacement for
-  * `sum(v) OVER (PARTITION BY spark_partition_id() ORDER BY ... ROWS
-  * UNBOUNDED PRECEDING)` in [[graft.cdc.split.DistributedRank
-  * .withGlobalRunningSum]]'s decomposition. The Window form costs a full
-  * hash Exchange + Sort per consumer (Catalyst cannot prove the range
-  * exchange already clusters by the derived partition id); this expression
-  * folds in the task's own row order inside whole-stage codegen — the same
-  * partition-local-state contract as `monotonically_increasing_id` (state
-  * initialized per partition, meaningful for exactly ONE evaluation, so
-  * callers must materialize the stamped frame — DistributedRank's existing
-  * localCheckpoint barrier).
-  *
-  * Null semantics mirror the window sum it replaces: a null `v` leaves the
-  * running sum unchanged, and the result is null until the first non-null
-  * `v` in the partition. Overflow wraps like non-ANSI `Add` (callers sum
-  * token/byte counts — the long domain is the contract).
-  */
-case class RunningSum(child: Expression)
-    extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.Nondeterministic {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_running_sum"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a bigint argument, got ${child.dataType.catalogString}")
-
-  @transient private[this] var sum: Long = _
-  @transient private[this] var seen: Boolean = _
-
-  override protected def initializeInternal(partitionIndex: Int): Unit = {
-    sum = 0L
-    seen = false
-  }
-
-  override protected def evalInternal(
-      input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v != null) {
-      sum += v.asInstanceOf[Long]
-      seen = true
-    }
-    if (seen) sum else null
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    val sumTerm = ctx.addMutableState(CodeGenerator.JAVA_LONG, "graftRunSum")
-    val seenTerm = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "graftRunSeen")
-    ctx.addPartitionInitializationStatement(s"$sumTerm = 0L;")
-    ctx.addPartitionInitializationStatement(s"$seenTerm = false;")
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        if (!${c.isNull}) {
-          $sumTerm += ${c.value};
-          $seenTerm = true;
-        }
-        final boolean ${ev.isNull} = !$seenTerm;
-        final long ${ev.value} = $sumTerm;""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RunningSum =
-    copy(child = newChild)
-}
-
 /** `graft_pq_argmin(sub, sv, codes, cvs, cvvs) -> bigint`: the PQ code
   * assignment argmin as ONE compiled per-row loop over literal codebooks —
   * replacing the broadcast-join row blowup (k candidate rows per subvector)
@@ -991,9 +920,6 @@ object GraftFunctions {
     (FunctionIdentifier("graft_sorted_fold"),
       new ExpressionInfo(classOf[SortedFold].getName, "graft_sorted_fold"),
       unary("graft_sorted_fold")(SortedFold)),
-    (FunctionIdentifier("graft_running_sum"),
-      new ExpressionInfo(classOf[RunningSum].getName, "graft_running_sum"),
-      unary("graft_running_sum")(RunningSum)),
     (FunctionIdentifier("graft_pq_argmin"),
       new ExpressionInfo(classOf[PqArgmin].getName, "graft_pq_argmin"),
       {

@@ -418,9 +418,9 @@ object Curation {
     *
     * Shape at 100 TB: the corpus projects down to (doc_id, n_toks) — 16
     * bytes/row — before anything shuffles; the global token offsets come
-    * from [[graft.cdc.split.DistributedRank.withGlobalRunningSum]] (range
-    * partition + partition-parallel prefix sums + broadcast bases — no
-    * single-partition Window anywhere); the explode fans out only
+    * from [[graft.cdc.split.DistributedRank.withGlobalRunningSum]] (one
+    * range shuffle, per-partition totals, then a partition-parallel fold —
+    * no single-partition Window anywhere); the explode fans out only
     * `span`-straddle rows (≤ n_toks/seqLen + 1 per doc). All-integer
     * arithmetic, so the oracle matches hash-exact.
     */
@@ -454,9 +454,10 @@ object Curation {
     * (doc_id, pos, shard) — a permutation of 1..n.
     *
     * Shape at 100 TB: only (doc_id, mix) scalars enter
-    * [[graft.cdc.split.DistributedRank.withGlobalRowNumber]] (range
-    * partition + mid-decode + broadcast bases — no global window, no
-    * single-partition sort); the shard writer joins text back by doc_id.
+    * [[graft.cdc.split.DistributedRank.withGlobalRowNumber]] (one range
+    * shuffle, per-partition counts, then a partition-parallel fold — no
+    * global window, no single-partition sort); the shard writer joins text
+    * back by doc_id.
     */
   def globalShuffle(docs: DataFrame, seed: Long, nShards: Int): DataFrame = {
     graft.cdc.types.GraftFunctions.register(docs.sparkSession)
@@ -583,9 +584,9 @@ object Curation {
     * The per-source cumulative sum is NOT a per-source window (a handful
     * of giant sources would serialize into single partitions at 100 TB).
     * Instead: ONE global running sum ordered by (source, score desc,
-    * doc_id) — the scale-safe range-partition + partition-parallel prefix
-    * decomposition of [[graft.cdc.split.DistributedRank.withGlobalRunningSum]]
-    * — then each source's cumsum = global cumsum − the source's base
+    * doc_id) — the scale-safe two-phase pass of
+    * [[graft.cdc.split.DistributedRank.withGlobalRunningSum]] over one range
+    * shuffle — then each source's cumsum = global cumsum − the source's base
     * offset, where the bases are a source-cardinality aggregate broadcast
     * back (sources are contiguous in the global order, so the base is
     * `min(g_cum − n_toks)` within the source). Budgets broadcast too; the
@@ -601,9 +602,8 @@ object Curation {
 
   /** The shared prefix of the budget mixes: per-doc token counts with each
     * source's within-source cumulative (`cum_toks`, ordered score desc).
-    * The running sum's localCheckpoint pins the tokenized corpus, so
-    * downstream aggregates (budgets, totals) read the checkpoint instead
-    * of re-scanning and re-splitting the text.
+    * Downstream aggregates (budgets, totals) read the running sum's range
+    * shuffle output instead of re-scanning and re-splitting the text.
     */
   private def sourceCumulative(docs: DataFrame, score: Column): DataFrame = {
     // space-count arithmetic, not size(split(...)): single-space splitting

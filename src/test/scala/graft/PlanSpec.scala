@@ -26,6 +26,18 @@ class PlanSpec extends SparkTestBase {
     assert(s.contains("PushedFilters: [IsNotNull(c_custkey), GreaterThanOrEqual(c_custkey,512)"), s)
   }
 
+  test("hybrid chunk ranges on a one-column key push into the parquet scan") {
+    val plan = q("hybrid_pipeline_materialize").queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val pushed = plan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.metadata("PushedFilters")
+    }
+    assert(pushed.exists(f => f.contains("LessThan(") || f.contains("GreaterThanOrEqual(")),
+      plan.toString)
+  }
+
   test("changelog projection prunes unused columns at the scan") {
     val s = planString(q("changelog_upsert_materialize"))
     // props/ts are unused by the merge: events scan must not read them
@@ -136,13 +148,12 @@ class PlanSpec extends SparkTestBase {
       case p => p
     }
     // the distributed rank plans NO Window at all (range partition +
-    // in-partition sort + monotonically_increasing_id decode); if one ever
+    // in-partition sort + a two-phase fold over that RDD); if one ever
     // reappears it must be partitioned
     windows(plan).foreach(w => assert(w.partitionSpec.nonEmpty,
       s"partition-less Window in tidb_resolved_ts_flush:\n$plan"))
-    // the range exchange now lives INSIDE the rank's localCheckpoint
-    // barrier (partition identity frozen as data — the AQE-divergence
-    // fix), so the visible plan reads the checkpointed RDD
+    // the rank folds over the range-sorted frame's RDD, so the visible
+    // plan reads the ranked rows as an RDD scan
     assert(plan.toString.contains("ExistingRDD"), plan.toString)
   }
 
@@ -163,13 +174,11 @@ class PlanSpec extends SparkTestBase {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }).toString
-    // the per-partition prefix sum is the compiled graft_running_sum fold
-    // INSIDE the rank's localCheckpoint barrier — the visible plan reads
-    // the stamped frame as data and plans NO Window node anywhere (the old
-    // form paid an Exchange + Sort + Window per cumsum consumer)
+    // the prefix sums are folded per partition over the range-sorted
+    // frame's RDD (see DistributedRank) — the visible plan reads the summed
+    // rows as an RDD scan and plans NO Window node anywhere (a Window form
+    // pays an Exchange + Sort + Window per cumsum consumer)
     assert(!s.contains("Window ["), s)
-    // the range exchange is inside the running-sum's localCheckpoint
-    // barrier (see DistributedRank) — the visible plan reads it as data
     assert(s.contains("ExistingRDD"), s)
   }
 
@@ -180,7 +189,7 @@ class PlanSpec extends SparkTestBase {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }).toString
-    // the cumsum is the compiled per-partition fold (see DistributedRank)
+    // the cumsum is the per-partition fold (see DistributedRank)
     // — never a window, and in particular never partitioned by source
     // (giant sources would serialize)
     assert(!s.contains("Window ["), s)

@@ -3,16 +3,13 @@ package graft.cdc.split
 import graft.SparkTestBase
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** Runtime self-check for [[DistributedRank]]: its correctness leans on two
-  * undocumented-contract Spark behaviors — the bit layout of
-  * `monotonically_increasing_id` (pid << 33 | local record number) and the
-  * optimizer pinning the nondeterministic projection above the
-  * range-partitioned sort. PlanSpec guards the plan SHAPE; this spec guards
-  * the VALUES against the reference formulation (`row_number() OVER (ORDER
-  * BY ...)`), so a Spark upgrade changing either contract fails loudly here
-  * instead of silently corrupting every rank-derived result (commit ranks,
-  * chunk boundaries).
+/** Values of [[DistributedRank]] against the window formulations it
+  * replaces — `row_number() OVER (ORDER BY ...)` and `sum() OVER (ORDER BY
+  * ... ROWS UNBOUNDED PRECEDING)`. PlanSpec guards the plan shape; this
+  * spec guards the values: fixed adversarial cases, a generated property
+  * over frame layouts and shuffle widths, and the loss of cached blocks.
   */
 class DistributedRankSpec extends SparkTestBase {
 
@@ -59,13 +56,12 @@ class DistributedRankSpec extends SparkTestBase {
   }
 
   test("ranks survive a downstream coalesce(1) write under forced AQE partition pressure") {
-    // regression: pid/lrn read runtime task identity; before the
-    // localCheckpoint barrier, the bases aggregate and the output join
-    // re-derived the range exchange separately and a downstream
-    // coalesce(1) (the Verify write path) made their AQE partition merges
-    // diverge — at sf1 this corrupted 185k of 299k ranks while every
-    // small-SF run passed (both sides coalesced to one partition there).
-    // Force many surviving partitions so the small repro exercises it.
+    // regression: when the per-partition bases and the rows each planned
+    // their own range exchange, a downstream coalesce(1) (the Verify write
+    // path) made their AQE partition merges diverge — at sf1 this corrupted
+    // 185k of 299k ranks while every small-SF run passed (both sides
+    // coalesced to one partition there). Force many surviving partitions
+    // so the small repro exercises it.
     val s = spark
     import s.implicits._
     val adv = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
@@ -160,5 +156,73 @@ class DistributedRankSpec extends SparkTestBase {
     val prefix = (1L to n / 3).sum
     assert(got.contains((n / 2, Some(prefix))))
     assert(got == want)
+  }
+
+  test("ranks and running sums recompute after every block cached by the call is lost") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    // other suites' cached fixtures share the session: drop only the
+    // blocks this call persisted
+    val before = sc.getPersistentRDDs.keySet
+    val n = 3000
+    val df = (1 to n).map(i => (i % 101, i, i.toLong)).toDF("k", "tb", "v").repartition(3)
+    val order = Seq(col("k"), col("tb"))
+    val ranked = DistributedRank.withGlobalRowNumber(df, "rn", order)
+    val summed = DistributedRank.withGlobalRunningSum(df, "cum", col("v"), order)
+    sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before(id)) rdd.unpersist(blocking = true)
+    }
+    assert(ranked.agg(max($"rn")).head().getLong(0) == n)
+    assert(summed.agg(max($"cum")).head().getLong(0) == (1L to n).sum)
+  }
+
+  /** One generated case: shuffle width, input slices, and rows (k, tb, v)
+    * with duplicate keys `k`, a unique tie-breaker `tb`, and null runs laid
+    * along the (k, tb) order, long enough to straddle range boundaries.
+    * Tiny frames and many input slices leave partitions empty.
+    */
+  private val layouts = for {
+    width <- Gen.choose(1, 8)
+    slices <- Gen.choose(1, 6)
+    n <- Gen.oneOf(Gen.choose(0, 3), Gen.choose(4, 600))
+    keys <- Gen.choose(1, 30)
+    ks <- Gen.listOfN(n, Gen.choose(0, keys))
+    vs <- Gen.listOfN(n, Gen.choose(-1000L, 1000L))
+    runs <- Gen.listOfN(n / 50 + 1, Gen.zip(Gen.choose(1, 200), Gen.prob(0.4)))
+  } yield {
+    val nulls = runs.flatMap { case (len, isNull) => Seq.fill(len)(isNull) }
+    val sorted = ks.zipWithIndex.sorted
+    val rows = sorted.zip(vs).zipWithIndex.map { case (((k, tb), v), i) =>
+      (k, tb, if (nulls.lift(i).contains(true)) None else Some(v))
+    }
+    (width, slices, rows)
+  }
+
+  test("both entry points equal their windows for any layout and shuffle width") {
+    val s = spark
+    import s.implicits._
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(20).withWorkers(1)
+    val prop = Prop.forAllNoShrink(layouts) { case (width, slices, rows) =>
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+      try {
+        val df = rows.toDF("k", "tb", "v").repartition(slices)
+        val order = Seq(col("k"), col("tb"))
+        val w = Window.orderBy(order: _*)
+        def byTb(frame: org.apache.spark.sql.DataFrame, c: String) =
+          frame.select($"tb", col(c)).collect()
+            .map(r => r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+        val rn = byTb(DistributedRank.withGlobalRowNumber(df, "rn", order), "rn")
+        val cum = byTb(DistributedRank.withGlobalRunningSum(df, "cum", col("v"), order), "cum")
+        val want = df
+          .withColumn("rn", row_number().over(w).cast("long"))
+          .withColumn("cum", sum($"v").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        rn.size == rows.size && rn == byTb(want, "rn") && cum == byTb(want, "cum")
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    val r = SCTest.check(params, prop)
+    assert(r.passed, r.status.toString)
   }
 }
