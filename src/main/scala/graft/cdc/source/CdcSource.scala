@@ -249,7 +249,10 @@ object CdcSource {
       // V1 JDBC frame that can't push ORDER BY/LIMIT
       val ranges = graft.cdc.split.ChunkPlanner
         .unevenChunkRangesJdbc(url, tableName, key, chunkSize)
-      val preds = graft.cdc.split.ChunkPlanner.jdbcPredicates(key, ranges)
+      // the planner's chunks are (start, end]; render them as such so each
+      // partition holds exactly its planned chunk's keys
+      val preds = graft.cdc.split.KeyedChunkPlanner.jdbcPredicates(Seq(key),
+        ranges.map { case (lo, hi) => (lo.map(Seq(_)), hi.map(Seq(_))) })
       val pool = intOption("connection.pool.size", 20, 0)
       val df = spark.read.jdbc(url, tableName, preds, props)
       // pool cap: coalesce chunk partitions so at most `pool` concurrent

@@ -1,7 +1,8 @@
 package graft.cdc.split
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Snapshot chunk planning — the reference's statistics-driven split
   * algebra re-expressed as Spark plans.
@@ -14,22 +15,27 @@ import org.apache.spark.sql.functions._
   * and .../source/utils/StatementUtils.java:38-130 (MIN/MAX/next-max probes),
   * RecordUtils.java:302-337 (splitKeyRangeContains).
   *
+  * One body per algorithm, written over a key `Column`: the single-`Long`
+  * names here pass the bare column, [[KeyedChunkPlanner]]'s string and
+  * composite names pass `struct(keys*)`. The four probe-driven splitters
+  * (DataFrame and JDBC, `Long` and general keys) share one loop,
+  * [[boundaryChain]], and differ only in the probe they hand it.
+  *
   * Scale notes: min/max/count are single-pass partial aggregations; even
   * ranges need only the broadcast 1-row stats (no shuffle of the data);
-  * the uneven variant needs a global order — we express it as a window over
-  * DISTINCT keys (fine for planning metadata, same serial nature as the
-  * reference's probe loop) and offer ntile equi-depth buckets (W2) as the
+  * the uneven window form ranks the distinct keys with [[DistributedRank]]
+  * (one range shuffle) and collects every chunkSize-th one, ~cnt/chunkSize
+  * rows of planning metadata; ntile equi-depth buckets (W2) are the
   * sampling-based scale path.
   */
 object ChunkPlanner {
 
   /** A1/A2 — one-row stats frame: min_k, max_k, cnt. */
-  def analyze(df: DataFrame, key: String): DataFrame =
-    df.agg(
-      min(col(key)).as("min_k"),
-      max(col(key)).as("max_k"),
-      count(lit(1)).as("cnt")
-    )
+  def analyze(df: DataFrame, key: String): DataFrame = analyzeKey(df, col(key))
+
+  /** [[analyze]] over any key expression (a column or a key struct). */
+  private[split] def analyzeKey(df: DataFrame, k: Column): DataFrame =
+    df.agg(min(k).as("min_k"), max(k).as("max_k"), count(lit(1)).as("cnt"))
 
   /** A5 — distribution factor ×10000, exact integer ceiling division:
     * ceil(10000 * (max-min+1) / cnt). The reference computes BigDecimal with
@@ -73,12 +79,16 @@ object ChunkPlanner {
   }
 
   /** A4/O1 — the next-chunk-end probe: max of the next `chunkSize` keys at or
-    * above `lowerBound` (StatementUtils.java:99-130). orderBy+limit lets
-    * Spark run a TakeOrdered (per-partition top-k, no full sort).
+    * above `lowerBound` (StatementUtils.java:99-130).
     */
   def nextChunkMax(df: DataFrame, key: String, lowerBound: Long, chunkSize: Int): DataFrame =
-    df.where(col(key) >= lowerBound)
-      .select(col(key).as("k"))
+    nextMaxOf(df.where(col(key) >= lowerBound), col(key), chunkSize)
+
+  /** Max of the first `chunkSize` values of `k` in `rows`. orderBy+limit
+    * lets Spark run a TakeOrdered (per-partition top-k, no full sort).
+    */
+  private[split] def nextMaxOf(rows: DataFrame, k: Column, chunkSize: Int): DataFrame =
+    rows.select(k.as("k"))
       .orderBy(col("k"))
       .limit(chunkSize)
       .agg(max(col("k")).as("next_max"))
@@ -105,37 +115,38 @@ object ChunkPlanner {
     * split_id, split_start (null for first), split_end (null for last).
     * Planning metadata only — output is ~cnt/chunkSize rows.
     */
-  def unevenChunkRanges(df: DataFrame, key: String, chunkSize: Int): DataFrame = {
-    // distinct + distributed global rank in one shuffle (DistributedRank) —
-    // the key set never drains through one partition. The ~cnt/chunkSize
-    // boundary rows are materialized once (both consumers below would
-    // otherwise each re-run the full-key-set rank), and the predecessor
-    // chain is a broadcast self-join on the DENSE bid (bid = rn div
-    // chunkSize over rn = 1..cnt covers every integer 1..k, so bid-1 IS
-    // lag(1) in bid order) — no partition-less Window node anywhere.
-    val boundaries = DistributedRank
-      .withGlobalRowNumber(df.select(col(key).as("k")), "rn", Seq(col("k")),
-        dedup = true)
-      .where(col("rn") % chunkSize === 0)
-      .select(col("k").as("boundary"), expr(s"rn div $chunkSize").as("bid"))
-      .localCheckpoint()
-    val bounded = boundaries.as("cur")
-      .join(broadcast(boundaries.as("prev")),
-        col("prev.bid") === col("cur.bid") - 1, "left")
-      .select(
-        (col("cur.bid") - 1).as("split_id"),
-        col("prev.boundary").as("split_start"),
-        col("cur.boundary").as("split_end")
-      )
-    // the trailing unbounded split: keys past the last boundary must belong
-    // to a chunk too (covering semantics; with no boundaries at all the
-    // whole table is one (null, null) split)
-    val last = boundaries.agg(
-      count(lit(1)).as("split_id"),
-      max(col("boundary")).as("split_start")
-    ).select(col("split_id"), col("split_start"),
-      lit(null).cast("long").as("split_end"))
-    bounded.unionByName(last)
+  def unevenChunkRanges(df: DataFrame, key: String, chunkSize: Int): DataFrame =
+    windowChunkRanges(df, col(key), chunkSize)
+
+  /** [[unevenChunkRanges]] over any key expression. The distinct keys are
+    * ranked by [[DistributedRank]] (one range shuffle, no partition-less
+    * window), every chunkSize-th one is collected to the driver — the same
+    * kind of planning-metadata collect as [[KeyedChunkPlanner.sampledChunkRanges]]
+    * — and [[chain]]ed into a local frame: nothing is cached, so a lost
+    * block recomputes from lineage.
+    */
+  private[split] def windowChunkRanges(df: DataFrame, k: Column, chunkSize: Int): DataFrame = {
+    val ranked = DistributedRank
+      .withGlobalRowNumber(df.select(k.as("k")), "rn", Seq(col("k")), dedup = true)
+    val bounds = ranked.where(col("rn") % chunkSize === 0)
+      .select(col("rn"), col("k")).collect()
+      .sortBy(_.getLong(0)).map(_.get(1)).toSeq
+    val kType = ranked.schema("k").dataType
+    val rows = chain(bounds).zipWithIndex.map { case ((lo, hi), i) =>
+      Row(i.toLong, lo.orNull, hi.orNull)
+    }
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("split_id", LongType, nullable = false),
+        StructField("split_start", kType), StructField("split_end", kType))))
+  }
+
+  /** Ascending boundaries b1 < ... < bn as the covering (start, end] chain
+    * (None, b1], (b1, b2], ..., (bn, None); no boundaries gives (None, None).
+    */
+  private[split] def chain[B](bounds: Seq[B]): Seq[(Option[B], Option[B])] = {
+    val opts = bounds.map(Some(_))
+    (None +: opts) zip (opts :+ None)
   }
 
   /** P4 — composite split-key range containment, exact reference algebra
@@ -170,44 +181,66 @@ object ChunkPlanner {
 
   /** The reference's probe-driven uneven splitter as a driver-side loop
     * (MySqlChunkSplitter.java:188-221 nextChunkEnd): repeatedly ask the
-    * source for max(next chunkSize keys >= current boundary). Each probe is
-    * a TakeOrdered job over the pushed-down range filter — the same serial
-    * probe pattern the reference runs against MySQL, so only appropriate
-    * when chunk count is modest; [[evenChunkStats]] / [[sampleBuckets]] are
-    * the 100 TB paths.
+    * source for max(next chunkSize keys past the current boundary). Each
+    * probe is a TakeOrdered job over the pushed-down range filter — the same
+    * serial probe pattern the reference runs against MySQL, so only
+    * appropriate when chunk count is modest; [[evenChunkStats]] /
+    * [[sampleBuckets]] are the 100 TB paths.
     * Returns (splitStart, splitEnd) with None = unbounded, exactly covering
     * the key space: (None, b1], (b1, b2], ..., (bn, None).
     */
   def unevenChunkRangesIterative(
       df: DataFrame,
       key: String,
-      chunkSize: Int,
-      maxChunks: Int = 10000
+      chunkSize: Int
   ): Seq[(Option[Long], Option[Long])] = {
     val stats = analyze(df, key).collect()(0)
     if (stats.isNullAt(0)) return Seq((None, None))
-    val maxK = stats.getAs[Number]("max_k").longValue
-    val ranges = Seq.newBuilder[(Option[Long], Option[Long])]
-    var start: Option[Long] = None
-    var lower = stats.getAs[Number]("min_k").longValue
+    val minK = stats.getAs[Number]("min_k").longValue
+    // over integers, "> b" is ">= b + 1", which pushes as a plain bound
+    def probe(start: Option[Long]): Option[Long] = {
+      val nm = nextChunkMax(df, key, start.fold(minK)(_ + 1), chunkSize).collect()(0)
+      if (nm.isNullAt(0)) None else Some(nm.getAs[Number](0).longValue)
+    }
+    boundaryChain[Long](stats.getAs[Number]("max_k").longValue, probe, _ >= _,
+      ProbeThrottle.Off)
+  }
+
+  /** Guard against a probe loop that never reaches the last key. */
+  private val MaxChunks = 10000
+
+  /** The one boundary-chain loop behind every probe-driven splitter.
+    * `probe(start)` returns the max of the next chunkSize keys strictly
+    * past `start` (None = from the first key), or None when no key is
+    * left; `reached(b, maxK)` ends the chain. Returns the (start, end]
+    * chain (None, b1], (b1, b2], ..., (bn, None), which covers the key
+    * space whatever boundaries the probe returns.
+    */
+  private[split] def boundaryChain[B](
+      maxK: B,
+      probe: Option[B] => Option[B],
+      reached: (B, B) => Boolean,
+      throttle: ProbeThrottle
+  ): Seq[(Option[B], Option[B])] = {
+    val ranges = Seq.newBuilder[(Option[B], Option[B])]
+    var start: Option[B] = None
     var done = false
     var n = 0
     while (!done) {
-      if (n >= maxChunks)
+      if (n >= MaxChunks)
         throw new IllegalStateException(
-          s"uneven splitter exceeded maxChunks=$maxChunks before covering the key space; " +
-            "raise maxChunks or use evenChunkStats/sampleBuckets for this table")
-      val nm = nextChunkMax(df, key, lower, chunkSize).collect()(0)
-      val boundary = if (nm.isNullAt(0)) maxK else nm.getAs[Number]("next_max").longValue
-      if (boundary >= maxK) {
+          s"uneven splitter exceeded $MaxChunks chunks before covering the key space; " +
+            "use evenChunkStats, quantileRanges or sampledChunkRanges for this table")
+      val boundary = probe(start).getOrElse(maxK)
+      if (reached(boundary, maxK)) {
         ranges += ((start, None))
         done = true
       } else {
         ranges += ((start, Some(boundary)))
         start = Some(boundary)
-        lower = boundary + 1
       }
       n += 1
+      throttle.maybePause(n)
     }
     ranges.result()
   }
@@ -222,9 +255,8 @@ object ChunkPlanner {
     * the probes as pushed-down SQL on a driver-side connection — one row
     * back per probe, like the reference's serial probe loop against MySQL.
     *
-    * `fetchClause` renders the row limit (ANSI `FETCH FIRST n ROWS ONLY` by
-    * default, which Derby/Postgres/Oracle/SQLServer accept; pass
-    * `n => s"LIMIT n"` for MySQL).
+    * `dialect` spells the row limit ([[SqlLimit.firstRows]]); a numeric key
+    * needs no collation, so its collation face is not used.
     */
   def unevenChunkRangesJdbc(
       url: String,
@@ -232,8 +264,7 @@ object ChunkPlanner {
       key: String,
       chunkSize: Int,
       props: java.util.Properties = new java.util.Properties(),
-      maxChunks: Int = 10000,
-      fetchClause: Int => String = n => s"FETCH FIRST $n ROWS ONLY",
+      dialect: SqlDialect = SqlDialect.Ansi,
       throttle: ProbeThrottle = ProbeThrottle.Off
   ): Seq[(Option[Long], Option[Long])] = {
     val conn = java.sql.DriverManager.getConnection(url, props)
@@ -245,38 +276,17 @@ object ChunkPlanner {
       val maxK = rs.getLong(2)
       rs.close(); stats.close()
       if (minNull) return Seq((None, None))
-      val probe = conn.prepareStatement(
-        numericBoundaryProbeSql(table, key, chunkSize, fetchClause))
-      try {
-        val ranges = Seq.newBuilder[(Option[Long], Option[Long])]
-        var start: Option[Long] = None
-        var lower = minK
-        var done = false
-        var n = 0
-        while (!done) {
-          if (n >= maxChunks)
-            throw new IllegalStateException(
-              s"JDBC uneven splitter exceeded maxChunks=$maxChunks before covering the " +
-                "key space; raise maxChunks or use quantileRanges for this table")
-          probe.setLong(1, lower)
-          val prs = probe.executeQuery()
-          prs.next()
-          val nm = prs.getLong(1); val nmNull = prs.wasNull()
-          prs.close()
-          val boundary = if (nmNull) maxK else nm
-          if (boundary >= maxK) {
-            ranges += ((start, None))
-            done = true
-          } else {
-            ranges += ((start, Some(boundary)))
-            start = Some(boundary)
-            lower = boundary + 1
-          }
-          n += 1
-          throttle.maybePause(n)
-        }
-        ranges.result()
-      } finally probe.close()
+      val st = conn.prepareStatement(numericBoundaryProbeSql(table, key, chunkSize, dialect))
+      def probe(start: Option[Long]): Option[Long] = {
+        st.setLong(1, start.fold(minK)(_ + 1))
+        val prs = st.executeQuery()
+        prs.next()
+        val nm = prs.getLong(1); val nmNull = prs.wasNull()
+        prs.close()
+        if (nmNull) None else Some(nm)
+      }
+      try boundaryChain[Long](maxK, probe, _ >= _, throttle)
+      finally st.close()
     } finally conn.close()
   }
 
@@ -347,18 +357,18 @@ object ChunkPlanner {
     * must pin BOTH spellings.
     */
   sealed trait SqlLimit {
-    /** Clause selecting the first row of the ordered scan. */
-    def firstRow: String
+    /** Clause selecting the first `n` rows of the ordered scan. */
+    def firstRows(n: Int): String
     /** Clause selecting the single row at `offset` (0-based). */
     def rowAt(offset: Int): String
   }
   object SqlLimit {
     case object Ansi extends SqlLimit {
-      def firstRow: String = "FETCH FIRST 1 ROWS ONLY"
+      def firstRows(n: Int): String = s"FETCH FIRST $n ROWS ONLY"
       def rowAt(offset: Int): String = s"OFFSET $offset ROWS FETCH NEXT 1 ROWS ONLY"
     }
     case object MySql extends SqlLimit {
-      def firstRow: String = "LIMIT 1"
+      def firstRows(n: Int): String = s"LIMIT $n"
       def rowAt(offset: Int): String = s"LIMIT $offset, 1"
     }
   }
@@ -401,19 +411,18 @@ object ChunkPlanner {
     s"SELECT MIN($key), MAX($key) FROM $table"
 
   /** The numeric splitter's next-boundary probe: max key within the next
-    * `chunkSize` rows past the cursor, as one pushed subquery.
-    * `fetchClause` is the dialect's row-limit spelling (ANSI FETCH FIRST by
-    * default; `n => s"LIMIT $n"` on MySQL).
+    * `chunkSize` rows past the cursor, as one pushed subquery, its row limit
+    * spelled by the dialect (numbers need no collation cast).
     */
   def numericBoundaryProbeSql(
       table: String, key: String, chunkSize: Int,
-      fetchClause: Int => String = n => s"FETCH FIRST $n ROWS ONLY"): String =
+      dialect: SqlDialect = SqlDialect.Ansi): String =
     s"SELECT MAX(k) FROM (SELECT $key AS k FROM $table WHERE $key >= ? " +
-      s"ORDER BY $key ${fetchClause(chunkSize)}) probe_t"
+      s"ORDER BY $key ${dialect.limit.firstRows(chunkSize)}) probe_t"
 
   def maxKeySql(table: String, key: String, dialect: SqlDialect): String =
     s"SELECT $key FROM $table ORDER BY ${dialect.collation.orderExpr(key)} DESC " +
-      dialect.limit.firstRow
+      dialect.limit.firstRows(1)
   def boundaryProbeSql(
       table: String, key: String, chunkSize: Int, dialect: SqlDialect): String = {
     val e = dialect.collation.orderExpr(key)
@@ -440,7 +449,6 @@ object ChunkPlanner {
       chunkSize: Int,
       dialect: SqlDialect = SqlDialect.Ansi,
       props: java.util.Properties = new java.util.Properties(),
-      maxChunks: Int = 10000,
       throttle: ProbeThrottle = ProbeThrottle.Off,
       connect: Option[String => java.sql.Connection] = None
   ): Seq[(Option[String], Option[String])] = {
@@ -461,59 +469,37 @@ object ChunkPlanner {
         .getOrElse(return Seq((None, None)))
       val probeSql = boundaryProbeSql(table, key, chunkSize, dialect)
       val firstSql = firstBoundarySql(table, key, chunkSize, dialect)
-      val ranges = Seq.newBuilder[(Option[String], Option[String])]
-      var start: Option[String] = None
-      var done = false
-      var n = 0
-      while (!done) {
-        if (n >= maxChunks)
-          throw new IllegalStateException(
-            s"JDBC string splitter exceeded maxChunks=$maxChunks before covering " +
-              "the key space; raise maxChunks or use sampledChunkRanges")
-        val boundary = (start match {
-          case Some(b) => one(probeSql, Some(b))
-          case None    => one(firstSql, None)
-        }).getOrElse(maxK)
-        // Java-order >= only decides how EARLY to stop; coverage stays
-        // exact either way because the final range is open-ended
-        if (Ordering.String.gteq(boundary, maxK)) {
-          ranges += ((start, None))
-          done = true
-        } else {
-          ranges += ((start, Some(boundary)))
-          start = Some(boundary)
-        }
-        n += 1
-        throttle.maybePause(n)
+      def probe(start: Option[String]): Option[String] = start match {
+        case Some(b) => one(probeSql, Some(b))
+        case None    => one(firstSql, None)
       }
-      ranges.result()
+      // Java-order >= only decides how EARLY to stop; coverage stays
+      // exact either way because the final range is open-ended
+      boundaryChain[String](maxK, probe, Ordering.String.gteq, throttle)
     } finally conn.close()
   }
 
   /** Render (start, end] string ranges as JDBC partition predicates under
-    * the SAME collation contract the planner probed with.
+    * the SAME collation contract the planner probed with: the (start, end]
+    * renderer [[KeyedChunkPlanner.jdbcPredicates]] over the collated key.
     */
   def jdbcPredicatesString(
       key: String,
       ranges: Seq[(Option[String], Option[String])],
       collation: SqlCollation = SqlCollation.Binary
-  ): Array[String] = {
-    val e = collation.orderExpr(key)
-    def q(s: String) = "'" + s.replace("'", "''") + "'"
-    ranges.map { case (lo, hi) =>
-      val parts = lo.map(l => s"$e > ${q(l)}").toSeq ++ hi.map(h => s"$e <= ${q(h)}")
-      if (parts.isEmpty) "1 = 1" else parts.mkString(" AND ")
-    }.toArray
-  }
+  ): Array[String] =
+    KeyedChunkPlanner.jdbcPredicates(Seq(collation.orderExpr(key)),
+      ranges.map { case (lo, hi) => (lo.map(Seq(_)), hi.map(Seq(_))) })
 
-  /** S1/S2 — render planned chunk ranges as `spark.read.jdbc(url, table,
-    * predicates, props)` partition predicates: one JDBC connection per
-    * predicate, each a half-open range like the reference's chunk scans
-    * (StatementUtils.java:132-188 buildSplitScanQuery). This is the
-    * cluster-scale snapshot entry point: N executors each pull their own
-    * key range with pushed-down WHERE clauses, no coordinator in the data
-    * path. Pair with `fetchsize` (reference default 1024,
-    * MySqlSourceOptions.java:111-113).
+  /** S1/S2 — render [lo, hi) ranges (the shape [[quantileRanges]] returns)
+    * as `spark.read.jdbc(url, table, predicates, props)` partition
+    * predicates: one JDBC connection per predicate, each a half-open range
+    * like the reference's chunk scans (StatementUtils.java:132-188
+    * buildSplitScanQuery). N executors each pull their own key range with
+    * pushed-down WHERE clauses, no coordinator in the data path. Pair with
+    * `fetchsize` (reference default 1024, MySqlSourceOptions.java:111-113).
+    * The probe splitters' (start, end] chains render through
+    * [[KeyedChunkPlanner.jdbcPredicates]] instead.
     */
   def jdbcPredicates(key: String, ranges: Seq[(Option[Long], Option[Long])]): Array[String] =
     ranges.map { case (lo, hi) =>

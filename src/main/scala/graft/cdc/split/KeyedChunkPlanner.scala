@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Chunk planning over GENERAL split keys — string, numeric, or composite
-  * (multi-column) — the part of the reference's splitter that
-  * [[ChunkPlanner]]'s single-`Long` fast path does not cover.
+  * (multi-column): the general-key names of [[ChunkPlanner]]'s algorithms.
+  * Each passes the key struct `struct(keys*)` to the same body the
+  * single-`Long` name passes a bare column to.
   *
   * The reference splits on any comparable column including composite PKs
   * (MySqlChunkSplitter.java:63-510 works on `Object[]` split keys;
@@ -19,11 +20,10 @@ import org.apache.spark.sql.functions._
   * unbounded — matching [[ChunkPlanner.unevenChunkRangesIterative]] and its
   * disjoint-cover property.
   *
-  * Scale notes: stats and probes are the same distributed one-row
-  * aggregations as the Long path; the window variant orders DISTINCT key
-  * tuples only (planning metadata, like [[ChunkPlanner.unevenChunkRanges]]);
-  * the probe loop is the reference's own serial planning pattern
-  * (MySqlChunkSplitter.java:188-221), never in the data path.
+  * Scale notes: stats, probes, the window form and the probe loop are the
+  * `Long` path's own bodies; the probe loop is the reference's serial
+  * planning pattern (MySqlChunkSplitter.java:188-221), never in the data
+  * path.
   */
 object KeyedChunkPlanner {
 
@@ -54,10 +54,8 @@ object KeyedChunkPlanner {
   /** A1/A2 generalized — one-row stats: lexicographic min/max key tuple +
     * count, a single distributed partial aggregation.
     */
-  def analyze(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val kt = struct(keys.map(col): _*)
-    df.agg(min(kt).as("min_k"), max(kt).as("max_k"), count(lit(1)).as("cnt"))
-  }
+  def analyze(df: DataFrame, keys: Seq[String]): DataFrame =
+    ChunkPlanner.analyzeKey(df, struct(keys.map(col): _*))
 
   /** A4/O1 generalized — max of the next `chunkSize` rows strictly past
     * `lowerExclusive` (None = from the start): TakeOrdered over the struct
@@ -70,92 +68,38 @@ object KeyedChunkPlanner {
       chunkSize: Int
   ): DataFrame = {
     val keyCols = keys.map(col)
-    df.where(lowerExclusive.map(tupleGreater(keyCols, _)).getOrElse(lit(true)))
-      .select(struct(keyCols: _*).as("kt"))
-      .orderBy(col("kt"))
-      .limit(chunkSize)
-      .agg(max(col("kt")).as("next_max"))
+    ChunkPlanner.nextMaxOf(
+      df.where(lowerExclusive.map(tupleGreater(keyCols, _)).getOrElse(lit(true))),
+      struct(keyCols: _*), chunkSize)
   }
 
-  /** Uneven ranges, window form (the oracle-checkable shape of
-    * [[ChunkPlanner.unevenChunkRanges]] over general keys): every
-    * `chunkSize`-th DISTINCT key tuple is a boundary; emits split_id +
-    * struct-typed split_start/split_end (null = unbounded). Planning
-    * metadata only — ~cnt/chunkSize output rows.
+  /** Uneven ranges, window form — [[ChunkPlanner.unevenChunkRanges]] over
+    * the key struct: every `chunkSize`-th DISTINCT key tuple is a boundary;
+    * emits split_id + struct-typed split_start/split_end (null =
+    * unbounded). Planning metadata only — ~cnt/chunkSize output rows.
     */
-  def unevenChunkRanges(df: DataFrame, keys: Seq[String], chunkSize: Int): DataFrame = {
-    val keyTuples = df.select(struct(keys.map(col): _*).as("kt"))
-    val ktType = keyTuples.schema("kt").dataType
-    // distinct + distributed global rank fused into ONE shuffle
-    // (DistributedRank dedup) — no single-partition window over the
-    // key set; only the ~cnt/chunkSize boundary rows below flow through the
-    // tiny lag window
-    // ~cnt/chunkSize boundary rows, materialized once: both consumers below
-    // (the lag chain and the last-split aggregate) would otherwise each
-    // re-run the full-key-set rank join + filter — the sf0.1 composite plan
-    // carried the whole subtree twice (20 Exchanges)
-    val boundaries = DistributedRank
-      .withGlobalRowNumber(keyTuples, "rn", Seq(col("kt")), dedup = true)
-      .where(col("rn") % chunkSize === 0)
-      .select(col("kt").as("boundary"), expr(s"rn div $chunkSize").as("bid"))
-      .localCheckpoint()
-    // predecessor chain via a broadcast self-join on the DENSE bid (bid =
-    // rn div chunkSize over rn = 1..cnt covers every integer 1..k, so
-    // bid-1 IS lag(1) in bid order) — the lag form planned a partition-less
-    // Window (a single-partition exchange and the one warning class the
-    // scale audit hunts), for no benefit on checkpointed planner metadata
-    val bounded = boundaries.as("cur")
-      .join(broadcast(boundaries.as("prev")),
-        col("prev.bid") === col("cur.bid") - 1, "left")
-      .select(
-        (col("cur.bid") - 1).as("split_id"),
-        col("prev.boundary").as("split_start"),
-        col("cur.boundary").as("split_end")
-      )
-    val last = boundaries.agg(
-      count(lit(1)).as("split_id"),
-      max_by(col("boundary"), col("bid")).as("split_start")
-    ).select(col("split_id"), col("split_start"),
-      lit(null).cast(ktType).as("split_end"))
-    bounded.unionByName(last)
-  }
+  def unevenChunkRanges(df: DataFrame, keys: Seq[String], chunkSize: Int): DataFrame =
+    ChunkPlanner.windowChunkRanges(df, struct(keys.map(col): _*), chunkSize)
 
   /** The reference's probe-driven splitter over general keys
     * (MySqlChunkSplitter.java:188-221 with `Object[]` boundaries): each probe
     * is a distributed TakeOrdered job; the loop itself is driver-side
-    * planning, bounded by `maxChunks`. Returns (start, end] ranges exactly
-    * covering the key space.
+    * planning ([[ChunkPlanner.boundaryChain]]). Returns (start, end] ranges
+    * exactly covering the key space.
     */
   def unevenChunkRangesIterative(
       df: DataFrame,
       keys: Seq[String],
-      chunkSize: Int,
-      maxChunks: Int = 10000
+      chunkSize: Int
   ): Seq[(Option[Boundary], Option[Boundary])] = {
     val stats = analyze(df, keys).collect()(0)
     if (stats.isNullAt(0) || stats.getLong(2) == 0L) return Seq((None, None))
-    val maxK: Boundary = stats.getStruct(1).toSeq
-    val ranges = Seq.newBuilder[(Option[Boundary], Option[Boundary])]
-    var start: Option[Boundary] = None
-    var done = false
-    var n = 0
-    while (!done) {
-      if (n >= maxChunks)
-        throw new IllegalStateException(
-          s"keyed uneven splitter exceeded maxChunks=$maxChunks before covering the key space; " +
-            "raise maxChunks or use a sampled strategy for this table")
+    def probe(start: Option[Boundary]): Option[Boundary] = {
       val nm = nextChunkMax(df, keys, start, chunkSize).collect()(0)
-      val boundary: Boundary = if (nm.isNullAt(0)) maxK else nm.getStruct(0).toSeq
-      if (compareBoundaries(boundary, maxK) >= 0) {
-        ranges += ((start, None))
-        done = true
-      } else {
-        ranges += ((start, Some(boundary)))
-        start = Some(boundary)
-      }
-      n += 1
+      if (nm.isNullAt(0)) None else Some(nm.getStruct(0).toSeq)
     }
-    ranges.result()
+    ChunkPlanner.boundaryChain[Boundary](stats.getStruct(1).toSeq, probe,
+      compareBoundaries(_, _) >= 0, ChunkPlanner.ProbeThrottle.Off)
   }
 
   /** The 100 TB path for general keys — sampling-based boundaries, the
@@ -189,8 +133,7 @@ object KeyedChunkPlanner {
       .orderBy(col("rn")).limit(n - 1)
       .collect().map(r => r.getStruct(0).toSeq: Boundary)
       .distinct
-    val opts = bounds.map(Option(_)).toSeq
-    ((None +: opts) zip (opts :+ None)).toSeq
+    ChunkPlanner.chain(bounds.toSeq)
   }
 
   /** Driver-side lexicographic compare of two boundaries (components must be

@@ -30,73 +30,11 @@ object ProbeMain {
     }
     names.foreach {
       case "jaccard_recall_bands" => jaccardRecallBands(s, dir)
-      case "jaccard_prefix_stages" => jaccardPrefixStages(s, dir)
       case n =>
         val t = math.min(once(n), once(n))
         println(f"BEST $n $t%.2f s")
     }
     s.stop()
-  }
-
-  /** Diagnostic: row counts + wall per stage of the prefix-filtered jaccard
-    * — locates where candidate volume or shuffle payload concentrates.
-    */
-  private def jaccardPrefixStages(s: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val t = 0.5
-    val docs = graft.cdc.model.Changelog.table(s, dir, "documents")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"STAGE $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val w = docs.select(col("doc_id"), col("lang"), col("n_chars"),
-      explode(array_distinct(split(col("text"), " "))).as("word")).localCheckpoint()
-    println(s"STAGE_ROWS w=${timed("w_checkpoint")(w.count())}")
-    val dfc = w.groupBy(col("lang"), col("n_chars"), col("word"))
-      .agg(count(lit(1)).as("df"))
-    val byDoc = Window.partitionBy(col("doc_id"))
-    val ranked = w.join(dfc, Seq("lang", "n_chars", "word"))
-      .withColumn("rk", row_number().over(byDoc.orderBy(col("df"), col("word"))))
-      .withColumn("sz", count(lit(1)).over(byDoc))
-    val prefix = ranked
-      .where(col("rk") <= col("sz") - ceil(lit(t) * col("sz")) + 1)
-      .select(col("doc_id"), col("lang"), col("n_chars"), col("word"))
-      .localCheckpoint()
-    println(s"STAGE_ROWS prefix=${timed("prefix_checkpoint")(prefix.count())}")
-    val cand = prefix.select(col("doc_id").as("doc_a"), col("lang"), col("n_chars"), col("word"))
-      .join(prefix.select(col("doc_id").as("doc_b"), col("lang"), col("n_chars"), col("word")),
-        Seq("lang", "n_chars", "word"))
-      .where(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("o_pp")).localCheckpoint()
-    println(s"STAGE_ROWS cand=${timed("cand_agg")(cand.count())}")
-    val meta = ranked.where(col("rk") === col("sz") - ceil(lit(t) * col("sz")) + 1)
-      .select(col("doc_id"), col("sz"),
-        (col("sz") - (col("sz") - ceil(lit(t) * col("sz")) + 1)).as("suf"),
-        struct(col("df"), col("word")).as("last_key"))
-    val bounded = cand
-      .join(meta.select(col("doc_id").as("doc_a"), col("sz").as("size_a"),
-        col("suf").as("suf_a"), col("last_key").as("lk_a")), "doc_a")
-      .join(meta.select(col("doc_id").as("doc_b"), col("sz").as("size_b"),
-        col("suf").as("suf_b"), col("last_key").as("lk_b")), "doc_b")
-      .withColumn("ub", col("o_pp") +
-        when(col("lk_a") < col("lk_b"), col("suf_a"))
-          .when(col("lk_a") > col("lk_b"), col("suf_b"))
-          .otherwise(least(col("suf_a"), col("suf_b"))))
-      .where(col("ub").cast("double") / (col("size_a") + col("size_b") - col("ub")) >= t)
-      .select(col("doc_a"), col("doc_b"), col("size_a"), col("size_b"))
-      .localCheckpoint()
-    println(s"STAGE_ROWS bounded=${timed("positional_bound")(bounded.count())}")
-    val sets = w.groupBy(col("doc_id")).agg(collect_list(col("word")).as("ws"))
-    val out = bounded
-      .join(sets.select(col("doc_id").as("doc_a"), col("ws").as("ws_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("ws").as("ws_b")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("ws_a"), col("ws_b"))).cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
-      .where(col("jaccard") >= t)
-    println(s"STAGE_ROWS out=${timed("verify")(out.count())}")
   }
 
   /** Diagnostic, not a timing: per-jaccard-band recall of the df-capped

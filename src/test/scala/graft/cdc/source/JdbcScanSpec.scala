@@ -46,6 +46,13 @@ class JdbcScanSpec extends SparkTestBase {
       .select("c_custkey", "c_acctbal").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(viaJdbc == viaParquet)
+    // each partition holds exactly its planned (start, end] chunk's keys
+    val keys = viaParquet.toSeq.map(_._1)
+    val planned = graft.cdc.split.ChunkPlanner
+      .unevenChunkRangesJdbc(url, "customer", "C_CUSTKEY", chunkSize = 64)
+      .map { case (lo, hi) => keys.count(k => lo.forall(k > _) && hi.forall(k <= _)) }
+    val perPartition = df.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+    assert(perPartition == planned)
   }
 
   test("connection pool size caps the number of concurrent scan partitions") {
@@ -129,6 +136,10 @@ class JdbcScanSpec extends SparkTestBase {
       "SELECT k FROM t ORDER BY BINARY k LIMIT 49, 1")
     assert(ChunkPlanner.firstBoundarySql("t", "k", 50, SqlDialect.Ansi) ==
       "SELECT k FROM t ORDER BY k OFFSET 49 ROWS FETCH NEXT 1 ROWS ONLY")
+    assert(ChunkPlanner.numericBoundaryProbeSql("t", "k", 64, SqlDialect.Ansi) ==
+      "SELECT MAX(k) FROM (SELECT k AS k FROM t WHERE k >= ? ORDER BY k FETCH FIRST 64 ROWS ONLY) probe_t")
+    assert(ChunkPlanner.numericBoundaryProbeSql("t", "k", 64, SqlDialect.MySql) ==
+      "SELECT MAX(k) FROM (SELECT k AS k FROM t WHERE k >= ? ORDER BY k LIMIT 64) probe_t")
     // the pushed range predicates under each dialect face
     val ranges = Seq((None, Some("m")), (Some("m"), None))
     assert(ChunkPlanner.jdbcPredicatesString("k", ranges, SqlCollation.MySqlBinary)

@@ -2,7 +2,11 @@ package graft.cdc.split
 
 import graft.SparkTestBase
 import graft.cdc.model.Changelog.table
+import graft.cdc.split.KeyedChunkPlanner.{Boundary, compareBoundaries}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
 /** Property mirror of MySqlChunkSplitterTest: chunk ranges must partition
   * the key space exactly — disjoint and covering, every row in exactly one
@@ -358,5 +362,125 @@ class ChunkPlannerSpec extends SparkTestBase {
     assert(bucketed == rankOnly)
     assert(out.map(_.getAs[Long]("cnt")).sum == 2000L)
     assert(out.map(_.getAs[Long]("cnt")).toSet == Set(500L))
+  }
+
+  test("window-form ranges recompute after every block cached while building them is lost") {
+    val sc = spark.sparkContext
+    // other suites' cached fixtures share the session: drop only the
+    // blocks these calls persisted
+    val before = sc.getPersistentRDDs.keySet
+    val li = table(spark, sfDir, "lineitem")
+    val composite = Seq("l_orderkey", "l_linenumber")
+    val byLong = ChunkPlanner.unevenChunkRanges(customer, "c_custkey", 16)
+    val byTuple = KeyedChunkPlanner.unevenChunkRanges(li, composite, 256)
+    sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before(id)) rdd.unpersist(blocking = true)
+    }
+    assert(byLong.collect().toSet ==
+      ChunkPlanner.unevenChunkRanges(customer, "c_custkey", 16).collect().toSet)
+    assert(byTuple.collect().toSet ==
+      KeyedChunkPlanner.unevenChunkRanges(li, composite, 256).collect().toSet)
+  }
+
+  /** One generated case: rows (a, b) with a `Long` key `a` spread by a
+    * random step (gaps) over a small value range (duplicates, or unique
+    * `a` in half the cases), a String `b` from three letters, 0 or 1 rows
+    * or up to 30, a chunk size from 1 to past the row count, and the
+    * number of input slices.
+    */
+  private val layouts = for {
+    n <- Gen.oneOf(Gen.choose(0, 1), Gen.choose(2, 30))
+    span <- Gen.choose(1L, 60L)
+    step <- Gen.choose(1L, 1000000L)
+    offset <- Gen.choose(-1000L, 1000L)
+    as <- Gen.listOfN(n, Gen.choose(0L, span).map(_ * step + offset))
+    bs <- Gen.listOfN(n, Gen.oneOf("a", "b", "c"))
+    unique <- Gen.oneOf(false, true)
+    chunk <- Gen.choose(1, n + 3)
+    slices <- Gen.choose(1, 4)
+  } yield {
+    val rows = as.zip(bs)
+    (if (unique) rows.distinctBy(_._1) else rows, chunk, slices)
+  }
+
+  /** Starts and ends unbounded, each end is the next start, and every key
+    * falls in exactly one (start, end] range.
+    */
+  private def exactCover[B](ranges: Seq[(Option[B], Option[B])], keys: Seq[B],
+      lt: (B, B) => Boolean): Boolean =
+    ranges.head._1.isEmpty && ranges.last._2.isEmpty &&
+      ranges.sliding(2).forall {
+        case Seq((_, end), (start, _)) => end.isDefined && end == start
+        case _ => true
+      } &&
+      keys.forall(k => ranges.count { case (lo, hi) =>
+        lo.forall(lt(_, k)) && hi.forall(!lt(_, k))
+      } == 1)
+
+  /** A window-form frame as its chain, in split_id order (ids 0..n-1). */
+  private def windowChain[B](ranges: DataFrame)(v: Any => B): Seq[(Option[B], Option[B])] = {
+    val rows = ranges.collect().sortBy(_.getLong(0)).toSeq
+    assert(rows.map(_.getLong(0)) == rows.indices.map(_.toLong))
+    rows.map(r => (Option(r.get(1)).map(v), Option(r.get(2)).map(v)))
+  }
+
+  /** The window form's boundaries are every chunkSize-th distinct key, so
+    * when the distinct count is a multiple of chunkSize its last boundary
+    * is the max key and it ends with the empty range (max, None); the
+    * probe loop stops at the max key instead. Folding that empty range
+    * into its predecessor gives the probe loop's chain.
+    */
+  private def foldEmptyTail[B](w: Seq[(Option[B], Option[B])], maxK: Option[B]) =
+    if (w.length > 1 && maxK.isDefined && w.last._1 == maxK)
+      w.dropRight(2) :+ ((w(w.length - 2)._1, None))
+    else w
+
+  test("property: every chunk chain is a disjoint exact cover, and the Long names equal the keyed names") {
+    val s = spark
+    import s.implicits._
+    val ltLong = (x: Long, y: Long) => x < y
+    val ltTuple = (x: Boundary, y: Boundary) => compareBoundaries(x, y) < 0
+    val tuple = (v: Any) => v.asInstanceOf[Row].toSeq: Boundary
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(20).withWorkers(1)
+    val r = SCTest.check(params, Prop.forAllNoShrink(layouts) { case (rows, chunk, slices) =>
+      val df = rows.toDF("a", "b").repartition(slices)
+      val longKeys = rows.map(_._1)
+      val tupleKeys = rows.map { case (a, b) => Seq(a, b): Boundary }
+      val composite = Seq("a", "b")
+      // the Long names
+      val window = windowChain(ChunkPlanner.unevenChunkRanges(df, "a", chunk))(_.asInstanceOf[Long])
+      val iter = ChunkPlanner.unevenChunkRangesIterative(df, "a", chunk)
+      // the keyed names over the same single key, and over (a, b)
+      val keyedWindow = windowChain(KeyedChunkPlanner.unevenChunkRanges(df, Seq("a"), chunk))(tuple)
+      val keyedIter = KeyedChunkPlanner.unevenChunkRangesIterative(df, Seq("a"), chunk)
+      val tupleWindow = windowChain(KeyedChunkPlanner.unevenChunkRanges(df, composite, chunk))(tuple)
+      val tupleIter = KeyedChunkPlanner.unevenChunkRangesIterative(df, composite, chunk)
+      val buckets = 1 + chunk % 4
+      val sampledLong = KeyedChunkPlanner.sampledChunkRanges(df, Seq("a"), buckets, 0.7)
+      val sampledTuple = KeyedChunkPlanner.sampledChunkRanges(df, composite, buckets, 0.7)
+      def unwrap(c: Seq[(Option[Boundary], Option[Boundary])]) =
+        c.map { case (lo, hi) => (lo.map(_.head), hi.map(_.head)) }
+      def plain(v: Any): Any = v match { case r: Row => r.get(0); case x => x }
+      val stats = ChunkPlanner.analyze(df, "a").head()
+      val keyedStats = KeyedChunkPlanner.analyze(df, Seq("a")).head()
+      val maxLong = longKeys.maxOption
+      val maxTuple = tupleKeys.reduceOption((x, y) => if (ltTuple(x, y)) y else x)
+      val covers = Seq(
+        exactCover(window, longKeys, ltLong), exactCover(iter, longKeys, ltLong),
+        exactCover(tupleWindow, tupleKeys, ltTuple), exactCover(tupleIter, tupleKeys, ltTuple),
+        exactCover(unwrap(sampledLong).map { case (lo, hi) =>
+          (lo.map(_.asInstanceOf[Long]), hi.map(_.asInstanceOf[Long])) }, longKeys, ltLong),
+        exactCover(sampledTuple, tupleKeys, ltTuple))
+      val uniqueLong = longKeys.distinct.length == longKeys.length
+      val uniqueTuple = tupleKeys.distinct.length == tupleKeys.length
+      (covers.forall(identity) :| s"cover ${covers.mkString(",")}") &&
+        ((!uniqueLong || foldEmptyTail(window, maxLong) == iter) :| "window != iterative (Long)") &&
+        ((!uniqueTuple || foldEmptyTail(tupleWindow, maxTuple) == tupleIter) :|
+          "window != iterative (composite)") &&
+        ((unwrap(keyedWindow) == window && unwrap(keyedIter) == iter) :|
+          "Long names != keyed names") &&
+        ((0 to 2).forall(i => plain(keyedStats.get(i)) == stats.get(i)) :| "analyze differs")
+    })
+    assert(r.passed, r.status.toString)
   }
 }

@@ -40,7 +40,7 @@ class MySqlGrammarSpec extends AnyFunSuite {
       accepted(ChunkPlanner.firstBoundarySql(t, k, 50, SqlDialect.MySql))
       accepted(ChunkPlanner.boundaryProbeSql(t, k, 100, SqlDialect.MySql))
       accepted(ChunkPlanner.minMaxSql(t, k))
-      accepted(ChunkPlanner.numericBoundaryProbeSql(t, k, 1000, n => s"LIMIT $n"))
+      accepted(ChunkPlanner.numericBoundaryProbeSql(t, k, 1000, SqlDialect.MySql))
     }
   }
 
