@@ -9,52 +9,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Data-proportional AQE starting width: one initial shuffle partition
-    * per ~2 MB of on-disk input (the scale protocol's maxPartitionBytes),
-    * never below the session's shuffle.partitions floor, capped at 1024.
-    * AQE's coalescing shrinks small shuffles back down, so the only job of
-    * this number is to be LARGE ENOUGH that sf10-scale aggregations don't
-    * spill through a thread-count-width shuffle.
-    */
-  def initialShufflePartitions(sfDir: String, floor: Int): String = {
-    // recursive: directory-style parquet tables (Spark-written) hold their
-    // bytes one level down; a flat listFiles() would sum ~4KB per dir and
-    // silently collapse the width to the floor at sf10
-    def walkBytes(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).map(walkBytes).sum
-      else f.length()
-    val bytes = try walkBytes(new java.io.File(sfDir)) catch { case _: Throwable => 0L }
-    val width = math.min(1024L, math.max(floor.toLong, bytes / (2L << 20)))
-    System.err.println(
-      s"[bench] initialPartitionNum=$width (input=${bytes >> 20}MB, floor=$floor)")
-    width.toString
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle width decoupled from thread count: bench-SF shuffles hold a
-    // few MB, where fewer/fatter partitions beat task-scheduling overhead
-    // (AQE coalescing narrows most of the gap either way)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // shuffle width must scale with DATA, not stay pinned to the thread
-      // count: at sf10 a 32-way shuffle puts ~1.2 M wide envelope rows in
-      // each hash-agg partition and spills (the salted-merge superlinearity
-      // r11 measured — 99 s at 32-wide vs 51 s at 512-wide); at sf0.1 a
-      // fixed 512 pays per-task map-output overhead for nothing (sf1 A/B:
-      // 3.9 s at 32 vs 6.1 s at 512). Start shuffles at ~input-bytes/2MB
-      // and let AQE coalesce small ones down — width follows bytes.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-          Bench.initialShufflePartitions(sfDir, shuffle.toInt)))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus, Some(sfDir))
 
     // warmup: parquet read + shuffle + codegen paths
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -86,20 +43,18 @@ object Bench {
           -1.0
       }
     }
-    // subset controls for scale runs: SPARK_GRAFT_SKIP drops named queries,
-    // SPARK_GRAFT_ONLY keeps just the named ones; both comma-separated.
+    // subset control for scale runs: SPARK_GRAFT_ONLY keeps just the named
+    // queries (comma-separated).
     // Every query benches first-class (the r8 interval_join substitution is
     // gone: its dominant cost — the distinct-pair shuffle — is inherent to
     // the pair semantics and was already being paid by the agg twin on both
     // engines; Spark counts the pairs without collecting them, and the
     // DuckDB leg below runs the identical set, so the ratio stays
     // symmetric even where output grows super-linearly).
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => !skip.contains(n) && only.forall(_.contains(n)) }
+      .filter { case (n, _) => only.forall(_.contains(n)) }
     val pass1 = sorted.map { case (n, f) => n -> timeOnce(n, f) }.toMap
     val results = sorted.map { case (n, f) =>
       val t2 = timeOnce(n, f)

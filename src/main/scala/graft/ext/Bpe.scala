@@ -169,8 +169,6 @@ object Bpe {
         .reduceByKey(_ + _)
         .map(Option(_))
         .fold(None)(better)
-      if (sys.env.contains("GRAFT_BPE_TRACE"))
-        System.err.println(s"[bpe] round $step ${System.nanoTime()}")
       top match {
         case Some(((l, r), f)) if f >= minFreq =>
           merges += ((step, l, r, f))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator: reads an existing testdata SF directory
@@ -32,13 +32,7 @@ object GenScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.drop(1).headOption.getOrElse("bench-data/sf1")
     val factor = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(graft.GraftSession.cpus, None)
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
 

@@ -1,17 +1,32 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.CartesianProductExec
+import java.nio.file.{Files, Path}
 
-/** Prints a per-query physical-plan audit (markdown) — the scale-relevant
-  * plan properties for every `SparkEntry.queries` entry: shuffle and
-  * broadcast exchange counts, cartesian products (must be zero), parquet
-  * filter pushdown, and whole-stage-codegen coverage. Run:
+/** Physical-plan tool at the bench session ([[graft.GraftSession]] with the
+  * sf dir's data-proportional shuffle width), so the plan it reports is the
+  * plan [[graft.Bench]] times. Two modes:
   *
-  *   sbt "runMain graft.tools.PlanAudit /root/testdata/sf0.01" > PLANS.md
+  *   - `PlanAudit <sfDir>` prints a per-query audit (markdown) of the
+  *     scale-relevant plan properties of every `SparkEntry.queries` entry:
+  *     shuffle and broadcast exchange counts, cartesian products (must be
+  *     zero), parquet filter pushdown, and whole-stage-codegen coverage.
+  *     PLANS.md is this output at sf0.01 (the sed drops sbt's own log
+  *     lines):
+  *
+  *       sbt -batch "runMain graft.tools.PlanAudit <testdata>/sf0.01" |
+  *         sed -n '/^# Physical-plan audit/,$p' > PLANS.md
+  *
+  *   - `PlanAudit <sfDir> <outDir> <suffix> [q1,q2|all]` writes each named
+  *     query's `explain("formatted")` to `<outDir>/<query>_<suffix>.txt`
+  *     (every query when the list is absent or "all") — the before/after
+  *     plan evidence under plans/:
+  *
+  *       sbt -batch "runMain graft.tools.PlanAudit <testdata>/sf0.1 plans/r13 before q1,q2"
   */
 object PlanAudit {
 
@@ -36,18 +51,39 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val run: SparkSession => Unit = args.drop(1) match {
+      case Array() => audit(_, sfDir)
+      case Array(outDir, suffix) => dump(_, sfDir, outDir, suffix, "all")
+      case Array(outDir, suffix, queries) => dump(_, sfDir, outDir, suffix, queries)
+      case _ => sys.error("usage: PlanAudit <sfDir> [<outDir> <suffix> [q1,q2|all]]")
+    }
+    val spark = graft.GraftSession(graft.GraftSession.cpus, Some(sfDir))
+    try run(spark) finally spark.stop()
+  }
 
+  private def dump(spark: SparkSession, sfDir: String, outDir: String, suffix: String,
+      queries: String): Unit = {
+    val names: Seq[String] =
+      if (queries == "all") graft.SparkEntry.queries.keys.toSeq.sorted
+      else queries.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    Files.createDirectories(Path.of(outDir))
+    names.foreach { name =>
+      val fn = graft.SparkEntry.queries(name)
+      val text =
+        try fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
+        catch { case e: Throwable => s"EXPLAIN FAILED: $e" }
+      Files.writeString(Path.of(outDir, s"${name}_$suffix.txt"), text)
+      System.err.println(s"[plan] $name -> $outDir/${name}_$suffix.txt")
+    }
+  }
+
+  private def audit(spark: SparkSession, sfDir: String): Unit = {
     println("# Physical-plan audit (scale properties per query)")
     println()
     println(s"Generated by `graft.tools.PlanAudit` on `$sfDir`. Every query's")
-    println("executed plan, summarized by the properties that matter at 100 TB:")
+    println(s"executed plan at the bench session (`local[${graft.GraftSession.cpus}]`, " +
+      "data-proportional AQE starting width),")
+    println("summarized by the properties that matter at 100 TB:")
     println("shuffles (each a full network pass over its input), broadcasts")
     println("(small-side joins that avoid shuffling the big side), cartesian")
     println("products (must never appear), parquet filter pushdown, and")
@@ -86,6 +122,5 @@ object PlanAudit {
           println(s"| $name | ERROR: ${e.getClass.getSimpleName} | | | | | |")
       }
     }
-    spark.stop()
   }
 }

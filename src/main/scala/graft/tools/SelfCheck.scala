@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StringType}
 
@@ -40,21 +40,7 @@ object SelfCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/bench-data/sf10")
     val out = args.lift(1).getOrElse("CORRECTNESS_SF10_self.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same data-proportional shuffle width as Bench: start wide enough
-      // for the data, let AQE coalesce (a 32-way shuffle spills at sf10's
-      // envelope row counts)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-          graft.Bench.initialShufflePartitions(sfDir, cpus.toInt)))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(graft.GraftSession.cpus, Some(sfDir))
     import graft.cdc.model.{Changelog, IvmQueries, RowImage}
     import graft.ext.{Curation, Dedup, Similarity}
     import org.apache.spark.sql.expressions.Window

@@ -11,14 +11,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // local[4] with 4 shuffle partitions whatever the host: specs that pin
+  // partition-dependent plans or counts see the same layout everywhere
+  lazy val session: SparkSession = GraftSession(cpus = 4, sfDir = None)
 }

@@ -9,6 +9,32 @@ import org.apache.spark.sql.functions._
   */
 class GraftExpressionsSpec extends SparkTestBase {
 
+  test("a new session resolves every graft_* function through spark.sql.extensions alone") {
+    // a new session builds its function registry from the session's
+    // extensions, not from the parent's registry, so this holds only when
+    // GraftSession sets spark.sql.extensions; no register call here
+    val fresh = spark.newSession()
+    GraftFunctions.all.foreach { case (id, _, _) =>
+      val described = fresh.sql(s"DESCRIBE FUNCTION ${id.funcName}").collect().map(_.getString(0))
+      assert(described.exists(_.contains(id.funcName)), s"${id.funcName} not resolved")
+    }
+    val r = fresh.sql(
+      """SELECT graft_fnv64('abc'),
+        |       graft_mix64(1L, 2L),
+        |       graft_dot(array(1D, 2D), array(3D, 4D)),
+        |       graft_simhash64(array('a b c')),
+        |       size(graft_minhash(array('a b c'), 4)),
+        |       size(graft_winnow('hello world', 4, 2)),
+        |       graft_wkb_geojson(CAST(NULL AS BINARY))""".stripMargin).collect()(0)
+    assert(r.getLong(0) == TextAnalysis.fnv1a64("abc"))
+    assert(r.getLong(1) == graft.ext.Hashing.mix64(1L, 2L))
+    assert(r.getDouble(2) == 11.0)
+    assert(!r.isNullAt(3))
+    assert(r.getInt(4) == 4)
+    assert(r.getInt(5) > 0)
+    assert(r.isNullAt(6))
+  }
+
   test("graft_fnv64 via SQL agrees with the Scala implementation") {
     GraftFunctions.register(spark)
     val rows = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -3,14 +3,7 @@
 # usage: bench_once.sh <classes_dir> <cpus> <out_json> [extra env as K=V ...]
 set -u
 CLASSES="$1"; CPUS="$2"; OUT="$3"; shift 3
-JAVA_FLAGS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "$0")/java_env.sh"
 env "$@" \
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
 SPARK_GRAFT_CPUS="$CPUS" \

@@ -3,20 +3,11 @@
 # Fails loudly: a failed sf1 generation must NOT silently proceed to sf10
 # and exit 0 — partial bench data would feed the correctness gates.
 set -euo pipefail
+. "$(dirname "$0")/java_env.sh"
 set -x
-REPO="$(cd "$(dirname "$0")/.." && pwd)"
-cd "$REPO"
+cd "$GRAFT_REPO"
 GEN_MEM="${GEN_MEM:-48g}"
-JAVA_FLAGS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
-SNAP=$(mktemp -d /tmp/graft_gen_classes_XXXX)
-cp -r target/scala-2.13/classes/* "$SNAP/"
+snapshot_classes
 CP="$SNAP:/opt/spark/jars/*"
 java $JAVA_FLAGS -Xmx"$GEN_MEM" -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" graft.tools.GenScale /root/testdata/sf0.1 bench-data/sf1 10 \

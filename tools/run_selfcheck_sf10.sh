@@ -3,6 +3,7 @@
 # formulations the repo proves equal at small sf, hash-compared inside
 # Spark where single-node DuckDB cannot follow. Writes
 # CORRECTNESS_SF10_self.json (see graft.tools.SelfCheck).
+. "$(dirname "$0")/java_env.sh"
 set -x
 # refuse to race a live data regeneration (round-9 post-mortem: a bench
 # started during GenScale rewrite recorded every query as failed)
@@ -11,17 +12,8 @@ if pgrep -f "graft.tools.GenScale" > /dev/null; then
   exit 1
 fi
 cd /root/repo
-SNAP=$(mktemp -d /tmp/graft_classes_sc10_XXXX)
-cp -r target/scala-2.13/classes/* "$SNAP/"
-JAVA_FLAGS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
-SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=64g \
+snapshot_classes
+SPARK_GRAFT_CPUS=32 \
 java $JAVA_FLAGS -Xmx64g -Dspark.ui.enabled=false -Dspark.sql.files.maxPartitionBytes=2097152 \
   -Dspark.sql.session.timeZone=UTC -cp "$SNAP:/opt/spark/jars/*" \
   graft.tools.SelfCheck /root/repo/bench-data/sf10 \

@@ -4,6 +4,7 @@
 #   BENCH_SF1_spark.json  — full per-query spark bench line (oracle skipped)
 #   CORRECTNESS_SF1.json  — per-query gate + per-oracle DuckDB seconds
 #   BENCH_SF1.json        — combined headline artifact
+. "$(dirname "$0")/java_env.sh"
 set -x
 # refuse to race a live data regeneration (round-9 post-mortem: a bench
 # started during GenScale rewrite recorded every query as failed)
@@ -12,18 +13,7 @@ if pgrep -f "graft.tools.GenScale" > /dev/null; then
   exit 1
 fi
 cd /root/repo
-JAVA_FLAGS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
-# snapshot the classes so a concurrent `sbt compile` can't swap classfiles
-# under a running JVM mid-pipeline
-SNAP=$(mktemp -d /tmp/graft_classes_XXXX)
-cp -r target/scala-2.13/classes/* "$SNAP/"
+snapshot_classes
 CP="$SNAP:/opt/spark/jars/*"
 SF=/root/repo/bench-data/sf1
 

@@ -5,6 +5,7 @@
 # No skip list: GenScale now buckets copies into bounded clone groups with
 # word-level edits across buckets, so near-dup pair output scales linearly
 # and the pair-output dedup queries run at every scale.
+. "$(dirname "$0")/java_env.sh"
 set -x
 # refuse to race a live data regeneration (round-9 post-mortem: a bench
 # started during GenScale rewrite recorded every query as failed)
@@ -13,16 +14,7 @@ if pgrep -f "graft.tools.GenScale" > /dev/null; then
   exit 1
 fi
 cd /root/repo
-SNAP=$(mktemp -d /tmp/graft_classes_sf10f_XXXX)
-cp -r target/scala-2.13/classes/* "$SNAP/"
-JAVA_FLAGS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  JAVA_FLAGS="$JAVA_FLAGS --add-opens java.base/$p=ALL-UNNAMED"
-done
+snapshot_classes
 SPARK_GRAFT_SF_DIR=/root/repo/bench-data/sf10 \
 SPARK_GRAFT_ORACLE_WALL=0 \
 SPARK_GRAFT_BENCH_OUT=/root/repo/BENCH_SF10_spark.json \
