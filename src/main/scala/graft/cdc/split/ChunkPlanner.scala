@@ -113,7 +113,9 @@ object ChunkPlanner {
     * probes the DB for the max of each next-chunkSize key block; over unique
     * keys that is exactly "every chunkSize-th distinct key is a boundary".
     * split_id, split_start (null for first), split_end (null for last).
-    * Planning metadata only — output is ~cnt/chunkSize rows.
+    * Planning metadata only — output is ~cnt/chunkSize rows. When the
+    * distinct-key count is a multiple of chunkSize the last range is the
+    * empty (max, None) — see [[windowChunkRanges]].
     */
   def unevenChunkRanges(df: DataFrame, key: String, chunkSize: Int): DataFrame =
     windowChunkRanges(df, col(key), chunkSize)
@@ -124,6 +126,13 @@ object ChunkPlanner {
     * kind of planning-metadata collect as [[KeyedChunkPlanner.sampledChunkRanges]]
     * — and [[chain]]ed into a local frame: nothing is cached, so a lost
     * block recomputes from lineage.
+    *
+    * When the distinct-key count is a multiple of chunkSize, the last
+    * boundary is the max key and the chain ends with the empty range
+    * (max, None); the probe loop ([[boundaryChain]]) stops at the max key
+    * instead. The empty range stays: the DuckDB oracle computes the same
+    * chain and the sf0.01 hashes pin it, and it costs one empty task.
+    * ChunkPlannerSpec pins it.
     */
   private[split] def windowChunkRanges(df: DataFrame, k: Column, chunkSize: Int): DataFrame = {
     val ranked = DistributedRank

@@ -639,14 +639,16 @@ case class JlProject(first: Expression, second: Expression, third: Expression)
 /** Flattened PQ codebooks for [[PqArgmin]]: `codes` are the (shared) code
   * ids of every subspace in ascending order; `cvs` is the sub-major,
   * code-major, dim-minor flattening of the centroid vectors; `cvvs` the
-  * matching self-dots. Built once on the driver from a collected codebook
-  * table and shipped to codegen as a reference object.
+  * matching self-dots (`m` subspaces of `kEff` codes each). Built on the
+  * driver by the PQ fit ([[graft.ext.Similarity.pqCodebooks]]) and shipped
+  * to codegen as a reference object.
   */
 case class PqBooksLit(
     codes: Array[Long],
     cvs: Array[Double],
     cvvs: Array[Double]) {
   val kEff: Int = codes.length
+  val m: Int = if (kEff == 0) 0 else cvvs.length / kEff
   val dsub: Int = if (cvvs.length == 0) 0 else cvs.length / cvvs.length
 
   /** Argmin over this row's subspace codebook of `pd = cvv - 2*sv.cv` with

@@ -1118,26 +1118,13 @@ object Curation {
     * exactly the [[Bpe]] merge-table / chunk-planner driver-probe shape,
     * never data-sized.
     *
-    * This parallel form sums gradient terms in shuffle order (IEEE
-    * non-associativity ⇒ run-dependent low bits, like [[Similarity]]'s
-    * `kmeansRefine`); [[linearProbeFitExact]] is the order-deterministic
-    * twin the oracle verifies, and the spec pins the two together.
+    * Order-deterministic: the per-doc prediction folds its terms by
+    * bucket and the per-bucket gradient folds by doc_id — every double op
+    * in a defined sequence, so DuckDB replays the fit hash-exact (the
+    * [[Similarity.kmeansRefine]] pattern).
     */
   def linearProbeFit(docs: DataFrame, targetSource: String, dim: Int,
-      iters: Int, lr: Double): DataFrame =
-    linearProbeCore(docs, targetSource, dim, iters, lr, exact = false)
-
-  /** Order-deterministic [[linearProbeFit]]: per-doc prediction folds
-    * terms by bucket, the per-bucket gradient folds by doc_id — every
-    * double op in a defined sequence, so DuckDB replays the fit
-    * hash-exact (the `kmeansRefineExact` pattern).
-    */
-  def linearProbeFitExact(docs: DataFrame, targetSource: String, dim: Int,
-      iters: Int, lr: Double): DataFrame =
-    linearProbeCore(docs, targetSource, dim, iters, lr, exact = true)
-
-  private def linearProbeCore(docs: DataFrame, targetSource: String,
-      dim: Int, iters: Int, lr: Double, exact: Boolean): DataFrame = {
+      iters: Int, lr: Double): DataFrame = {
     require(dim > 0 && (dim & (dim - 1)) == 0, s"dim must be a power of two, got $dim")
     require(iters >= 1 && lr > 0)
     val spark = docs.sparkSession
@@ -1172,14 +1159,12 @@ object Curation {
         .select(col("doc_id"), col("y"), col("bucket"),
           (col("wv") * col("c")).as("term"))
         .groupBy(col("doc_id"), col("y"))
-        .agg((if (exact) orderedFold(col("bucket"), col("term"))
-              else sum(col("term"))).as("pred"))
+        .agg(orderedFold(col("bucket"), col("term")).as("pred"))
         .select(col("doc_id"), (col("pred") - col("y")).as("err"))
       val grads = feats.join(errs, Seq("doc_id"))
         .select(col("bucket"), col("doc_id"), (col("err") * col("c")).as("term"))
         .groupBy(col("bucket"))
-        .agg((if (exact) orderedFold(col("doc_id"), col("term"))
-              else sum(col("term"))).as("g"))
+        .agg(orderedFold(col("doc_id"), col("term")).as("g"))
         .collect()
       grads.foreach { r =>
         val b = r.getLong(0).toInt

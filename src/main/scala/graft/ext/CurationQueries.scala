@@ -229,10 +229,10 @@ object CurationQueries extends QueryPack {
     }),
 
     // in-engine quality-probe training: 2 squared-loss GD steps on
-    // hashed-bigram features, target slice = src0 (the order-exact fit;
-    // the shuffle-sum production fit is pinned to it in CurationSpec)
+    // hashed-bigram features, target slice = src0 (order-exact folds, so
+    // DuckDB and CurationSpec's driver replay both match it bit for bit)
     "corpus_train_quality_probe" -> ((s, dir) =>
-      Curation.linearProbeFitExact(table(s, dir, "documents"),
+      Curation.linearProbeFit(table(s, dir, "documents"),
         targetSource = "src0", dim = 256, iters = 2, lr = 0.5)),
 
     // the composed corpus -> training-batches flow in ONE declarative

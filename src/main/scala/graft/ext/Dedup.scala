@@ -394,11 +394,7 @@ object Dedup {
     // the label refines the cell, not the other way round
     val seeds = Similarity.seedCentroids(
       base.select(col("vec_id"), col("vd"), col("nrm")), nCells)
-    val assigned = Similarity.cellSimilaritiesWith(base, seeds)
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cell"), struct(col("csim"), -col("cell"))).as("cell"),
-        first(col("label")).as("label"),
-        first(col("vd")).as("vd"), first(col("nrm")).as("nrm"))
+    val assigned = Similarity.assignCells(Similarity.cellSimilaritiesWith(base, seeds))
     val a = assigned.select(col("vec_id").as("doc_a"), col("label"), col("cell"),
       col("vd").as("va"), col("nrm").as("na"))
     val b = assigned.select(col("vec_id").as("doc_b"), col("label"), col("cell"),
@@ -676,11 +672,8 @@ object Dedup {
     * splits of the log.
     */
   def cdcDedupedCorpus(changes: DataFrame): DataFrame = {
-    import graft.cdc.model.Changelog
-    val live = changes.groupBy(col("doc_id"))
-      .agg(max_by(struct(col("op"), col("text")), col("offset")).as("w"))
-      .where(col("w.op") =!= Changelog.OpDelete)
-      .select(col("doc_id"), sha2(col("w.text"), 256).as("digest"))
+    val live = TrainingPipeline.liveCorpus(changes)
+      .select(col("doc_id"), sha2(col("text"), 256).as("digest"))
     // keeper/size as full-partition windows on ONE digest exchange of
     // (doc_id, digest) scalars: the aggregate+join form evaluated the LWW
     // fold — the only text-carrying shuffle — twice (group aggregate +

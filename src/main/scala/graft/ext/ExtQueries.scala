@@ -177,30 +177,30 @@ object ExtQueries extends QueryPack {
         nProbe = 3, nQueries = 10, k = 5)),
 
     // Lloyd-refined centroids through the same probe/re-rank path. The fit
-    // is the ORDER-DETERMINISTIC kmeansRefineExact (vec_id-ordered folds),
-    // so the whole pipeline — fit included — carries a bit-exact DuckDB
-    // oracle that unrolls both Lloyd iterations as CTE stages; the
-    // corpus-scale shuffle-sum kmeansRefine is pinned to it in ExtOpsSpec
+    // is ORDER-DETERMINISTIC (vec_id-ordered folds), so the whole pipeline
+    // — fit included — carries a bit-exact DuckDB oracle that unrolls both
+    // Lloyd iterations as CTE stages; ExtOpsSpec replays the fit on the
+    // driver bit for bit
     "similarity_kmeans_ivf" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      Similarity.ivfTopKWith(emb, Similarity.kmeansRefineExact(emb, nCells = 8, iters = 2),
+      Similarity.ivfTopKWith(emb, Similarity.kmeansRefine(emb, nCells = 8, iters = 2),
         nProbe = 3, nQueries = 10, k = 5)
     }),
 
     // Product-quantization search end-to-end: codebook fit + encode + ADC
     // shortlist + exact re-rank (the FAISS ADC+refine pipeline), on the
-    // order-deterministic pqCodebooksExact fit — hash-oracled end-to-end
+    // order-deterministic codebook fit — hash-oracled end-to-end
     "similarity_pq_search" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      Similarity.pqSearchTopK(emb, Similarity.pqCodebooksExact(emb, m = 8, k = 64, iters = 2),
-        m = 8, nQueries = 10, k = 5, shortlist = 100)
+      Similarity.pqSearchTopK(emb, Similarity.pqCodebooks(emb, m = 8, k = 64, iters = 2),
+        nQueries = 10, k = 5, shortlist = 100)
     }),
 
     // the full FAISS IVFADC composition: cell gate + code-only ADC +
     // exact re-rank, on the order-deterministic codebook fit
     "similarity_ivfpq_search" -> ((s, dir) =>
       Similarity.ivfPqTopKWith(table(s, dir, "embeddings"), nCells = 8, nProbe = 3,
-        m = 8, Similarity.pqCodebooksExact(table(s, dir, "embeddings"), m = 8, k = 64, iters = 2),
+        Similarity.pqCodebooks(table(s, dir, "embeddings"), m = 8, k = 64, iters = 2),
         nQueries = 10, k = 5, shortlist = 100)),
 
     "similarity_hard_negatives" -> ((s, dir) =>

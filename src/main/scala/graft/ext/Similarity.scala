@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.cdc.types.PqBooksLit
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
@@ -192,12 +194,6 @@ object Similarity {
       .select(col("qid"), col("nid"), col("cell"), col("rank"), col("sim"))
   }
 
-  /** (vec_id, vd, nrm, cell, csim) — every corpus row paired with each of
-    * the `nCells` deterministic seed centroids and their cosine. A
-    * broadcast nested loop over nCells rows: each corpus row expands
-    * nCells-fold, then collapses in the map-side-combinable argmax of
-    * [[assignCells]]; the corpus itself never shuffles wide.
-    */
   /** The nCells deterministic seed centroids: the vectors with the
     * smallest graft_mix64(vec_id, salt) — random-init seeds, engine-
     * replicable. (cell, cv, cnrm).
@@ -208,7 +204,12 @@ object Similarity {
       .orderBy(col("mix"), col("vec_id")).limit(nCells)
       .select(col("vec_id").as("cell"), col("vd").as("cv"), col("nrm").as("cnrm"))
 
-  /** Corpus x centroid cosine similarities for any (cell, cv, cnrm) set. */
+  /** Every corpus row paired with each centroid of any (cell, cv, cnrm)
+    * set and their cosine `csim`. A broadcast nested loop over the
+    * centroid rows: each corpus row expands nCells-fold, then collapses in
+    * the map-side-combinable argmax of [[assignCells]]; the corpus itself
+    * never shuffles wide.
+    */
   private[ext] def cellSimilaritiesWith(base: DataFrame, centroids: DataFrame): DataFrame =
     base.crossJoin(broadcast(centroids))
       .withColumn("csim", dot(col("vd"), col("cv")) / (col("nrm") * col("cnrm")))
@@ -220,112 +221,84 @@ object Similarity {
     * "fit refined centroids once, feed them back through the same joins"
     * step the IVF and SemDeDup scaladocs point at. Each iteration assigns
     * every vector to its cosine-nearest centroid, then replaces each
-    * centroid with the element-wise mean of its members.
+    * centroid with the element-wise mean of its members; a centroid whose
+    * cell empties keeps its previous position (standard empty-cluster
+    * handling). Returns (cell, cv, cnrm).
     *
-    * Shape at 100 TB per iteration: ONE centroid broadcast + map-side
-    * argmax assignment (the corpus never shuffles), then the mean as a
-    * posexplode to (cell, dim, value) scalars with a map-side-combinable
-    * sum/count — the shuffle carries at most nCells x dim partial sums per
-    * map task, not the corpus. `localCheckpoint` truncates the iterative
-    * lineage (a cluster run would use reliable `checkpoint`, same trade as
-    * Dedup.clusterAssign). A centroid whose cell empties keeps its previous
-    * position (standard empty-cluster handling). Returns (cell, cv, cnrm).
-    *
-    * Floating-point sums are shuffle-order-dependent, so refined centroids
-    * are deterministic only up to ~1e-12 — fine for a model-fit step
-    * (verified in spec against a driver-side replay with tolerance), which
-    * is why this feeds [[ivfTopKWith]] rather than a hash-exact oracle.
-    */
-  def kmeansRefine(emb: DataFrame, nCells: Int, iters: Int): DataFrame = {
-    val base = normed(emb).localCheckpoint()
-    var centroids = seedCentroids(base, nCells).localCheckpoint()
-    for (_ <- 0 until iters) {
-      val assigned = assignCells(cellSimilaritiesWith(base, centroids))
-      val means = assigned
-        .select(col("cell"), posexplode(col("vd")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
-        .groupBy(col("cell"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, s / n))), x -> x.col2)")
-          .as("cv"))
-        .withColumn("cnrm", norm(col("cv")))
-      centroids = centroids.as("old")
-        .join(means.as("new"), Seq("cell"), "left")
-        .select(col("cell"),
-          coalesce(col("new.cv"), col("old.cv")).as("cv"),
-          coalesce(col("new.cnrm"), col("old.cnrm")).as("cnrm"))
-        .localCheckpoint()
-    }
-    centroids
-  }
-
-  /** [[kmeansRefine]] with ORDER-DETERMINISTIC means: each (cell, pos)
-    * partial sum is a sequential fold over members in ascending `vec_id`
-    * order (sort_array(collect_list(struct(vec_id, v))) then an
-    * `aggregate` HOF), so the refined centroids are bit-exact across runs
-    * and engines — the variant that keeps a hash-exact DuckDB oracle
-    * (the oracle unrolls the iterations as CTE stages running the same
-    * fold via `list(v ORDER BY vec_id)`).
-    *
-    * The price of exactness is a collect_list per (cell, pos) group —
-    * member-count-sized state, so this is the FIT-ON-SAMPLE form (the
-    * standard k-means practice: FAISS trains on <=1M sampled vectors; cap
-    * the input with a deterministic filter first). The shuffle-order
-    * [[kmeansRefine]] remains the corpus-scale path; ExtOpsSpec pins the
-    * two to agree within float tolerance.
+    * The means are ORDER-DETERMINISTIC ([[orderedMeans]]: each (cell, pos)
+    * sum is a sequential fold over members in ascending `vec_id` order),
+    * so the refined centroids are bit-exact across runs and engines and
+    * the whole fit keeps a hash-exact DuckDB oracle (the oracle unrolls the
+    * iterations as CTE stages running the same fold via
+    * `list(v ORDER BY vec_id)`). The price of exactness is a collect_list
+    * per (cell, pos) group — member-count-sized state, so this is the
+    * FIT-ON-SAMPLE form (the standard k-means practice: FAISS trains on
+    * <=1M sampled vectors; cap the input with a deterministic filter
+    * first).
     *
     * Centroid state lives on the DRIVER between iterations — nCells rows of
     * dim doubles, a size fixed by the algorithm's constants at ANY corpus
     * scale (a fitted model artifact, not data; the same bounded-state class
-    * as Bpe's merge table). Each iteration is then ONE distributed
-    * aggregate over the corpus (broadcast literal centroids -> argmax
-    * assign -> ordered-fold means) collected back, instead of an
-    * assign+means+join plan localCheckpoint'ed and re-broadcast per
-    * iteration. The means expression is unchanged and `cnrm` is the same
-    * sequential fold [[graft.cdc.types.DotProduct]] compiles, so the fitted
-    * centroids are bit-identical to the join/checkpoint formulation.
+    * as Bpe's merge table). Each iteration is ONE distributed aggregate
+    * over the corpus (broadcast literal centroids -> argmax assign ->
+    * ordered-fold means) collected back; `cnrm` is the same sequential fold
+    * [[graft.cdc.types.DotProduct]] compiles ([[selfDot]]).
     */
-  def kmeansRefineExact(emb: DataFrame, nCells: Int, iters: Int): DataFrame = {
+  def kmeansRefine(emb: DataFrame, nCells: Int, iters: Int): DataFrame = {
     val spark = emb.sparkSession
     val base = normed(emb).localCheckpoint()
     var centroids: Array[(Long, Array[Double])] =
       seedCentroids(base, nCells).select(col("cell"), col("cv")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    def centroidsDf(): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        centroids.toSeq.map { case (cell, cv) =>
-          org.apache.spark.sql.Row(cell, cv.toSeq, math.sqrt(selfDot(cv)))
-        }.asJava
-      spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cv",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType, containsNull = false),
-          nullable = false),
-        org.apache.spark.sql.types.StructField("cnrm",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
-    }
+    def centroidsDf(): DataFrame = localFrame(spark, CentroidSchema,
+      centroids.toSeq.map { case (cell, cv) => Row(cell, cv.toSeq, math.sqrt(selfDot(cv))) })
     for (_ <- 0 until iters) {
-      val means = assignCells(cellSimilaritiesWith(base, centroidsDf()))
-        .select(col("cell"), col("vec_id"), posexplode(col("vd")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(
-          // graft_sorted_fold == the aggregate(array_sort(collect_list))
-          // HOF (GraftExpressionsSpec pin), compiled instead of interpreted
-          call_function("graft_sorted_fold",
-            collect_list(struct(col("vec_id"), col("col")))).as("s"),
-          count(lit(1)).as("n"))
-        .groupBy(col("cell"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, s / n))), x -> x.col2)")
-          .as("cv"))
+      val means = orderedMeans(assignCells(cellSimilaritiesWith(base, centroidsDf())),
+          Seq("cell"), "vd")
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-      // empty-cell handling unchanged: a cell with no members this round
-      // keeps its previous position (the old left-join coalesce)
       centroids = centroids.map { case (cell, cv) => (cell, means.getOrElse(cell, cv)) }
     }
     centroidsDf()
+  }
+
+  /** The Lloyd mean step both fits share: `assigned` rows carry their
+    * model keys, `vec_id` and a vector column `v`; per (keys, pos) the
+    * members' coordinates are folded in ascending `vec_id` order
+    * (`graft_sorted_fold` == the aggregate(array_sort(collect_list)) HOF,
+    * GraftExpressionsSpec pin, compiled instead of interpreted) and divided
+    * by the member count, then reassembled per key in `pos` order.
+    * Returns (keys..., cv).
+    */
+  private def orderedMeans(assigned: DataFrame, keys: Seq[String], v: String): DataFrame =
+    assigned
+      .select(keys.map(col) ++ Seq(col("vec_id"), posexplode(col(v))): _*)
+      .groupBy(keys.map(col) :+ col("pos"): _*)
+      .agg(
+        call_function("graft_sorted_fold",
+          collect_list(struct(col("vec_id"), col("col")))).as("s"),
+        count(lit(1)).as("n"))
+      .groupBy(keys.map(col): _*)
+      .agg(expr("transform(array_sort(collect_list(struct(pos, s / n))), x -> x.col2)")
+        .as("cv"))
+
+  private val CentroidSchema = StructType(Seq(
+    StructField("cell", LongType, nullable = false),
+    StructField("cv", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("cnrm", DoubleType, nullable = false)))
+
+  private val BookSchema = StructType(Seq(
+    StructField("sub", IntegerType, nullable = false),
+    StructField("code", LongType, nullable = false),
+    StructField("cv", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("cvv", DoubleType, nullable = false)))
+
+  /** Driver-side model rows (centroids, codebooks, collected seeds) as a
+    * local relation: the values are copied verbatim, so every double
+    * downstream of it is unchanged.
+    */
+  private def localFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Sequential self-dot — the same fold [[graft.cdc.types.DotProduct]]
@@ -351,12 +324,19 @@ object Similarity {
   ): DataFrame =
     ivfBody(cellSimilaritiesWith(normed(emb), centroids), nProbe, nQueries, k)
 
-  /** Assignment: argmax cosine over cells, ties to the smallest cell id. */
-  private[ext] def assignCells(cellSims: DataFrame): DataFrame =
+  /** Assignment: argmax cosine over cells, ties to the smallest cell id.
+    * Every input column but the centroid side (cell, cv, cnrm, csim)
+    * rides along per vec_id, so a caller controls what the map-side
+    * argmax ships by what it projects before the call.
+    */
+  private[ext] def assignCells(cellSims: DataFrame): DataFrame = {
+    val carried = cellSims.columns.toSeq
+      .filterNot(Set("vec_id", "cell", "cv", "cnrm", "csim"))
     cellSims
       .groupBy(col("vec_id"))
       .agg(max_by(col("cell"), struct(col("csim"), -col("cell"))).as("cell"),
-        first(col("vd")).as("vd"), first(col("nrm")).as("nrm"))
+        carried.map(c => first(col(c)).as(c)): _*)
+  }
 
   /** CDC-maintained IVF index: posting-list deltas under the embeddings
     * table's OWN row-image changelog — the engine's two halves fused the
@@ -389,10 +369,9 @@ object Similarity {
     val base = snapshot.select(col("vec_id"), col("vd"))
       .withColumn("nrm", norm(col("vd")))
     val cents = seedCentroids(base, nCells)
+    // vd/nrm dropped after the cosine: the argmax ships (vec_id, cell) only
     def assign(df: DataFrame): DataFrame =
-      cellSimilaritiesWith(df, cents)
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cell"), struct(col("csim"), -col("cell"))).as("cell"))
+      assignCells(cellSimilaritiesWith(df, cents).drop("vd", "nrm"))
     val folded = log.groupBy(col("vec_id"))
       .agg(max_by(struct(col("op"), col("vd")), col("offset")).as("w"))
     val live = snapshot.select(col("vec_id"), col("vd"))
@@ -451,188 +430,94 @@ object Similarity {
 
   /** Assign every (vec_id, sub) to its L2-nearest code of that subspace.
     * |sv - cv|^2 = svv + cvv - 2 sv.cv, and svv is constant per row, so
-    * the argmin ranks by (cvv - 2 sv.cv) — one codegen'd dot per
-    * candidate. Equi-join on sub against the broadcast books, then a
-    * map-side-combinable min_by; ties to the smallest code id. Returns
-    * (vec_id, sub, code) — scalars only through the shuffle; `keepSv`
-    * additionally carries the subvector (for the fit's mean step, saving
-    * the rejoin; the encode path never pays the array payload).
+    * the argmin ranks by (cvv - 2 sv.cv), ties to the smallest code id.
+    * The codebooks are driver literals, so this is the FAISS-encode shape
+    * at 100 TB: every subvector row computes its argmin in ONE codegen'd
+    * `graft_pq_argmin` loop ([[graft.cdc.types.PqArgmin]]); the corpus
+    * neither joins nor shuffles. Returns (vec_id, sub, code); `keepSv`
+    * additionally carries the subvector (for the fit's mean step; the
+    * encode path never pays the array payload).
     */
   private[ext] def assignCodes(
       subs: DataFrame,
-      books: DataFrame,
+      books: PqBooksLit,
       keepSv: Boolean = false
-  ): DataFrame = localBooks(books) match {
-    // Driver-literal codebooks (the exact-fit queries): ONE compiled
-    // argmin per row — no k-way join blowup, no min_by aggregation (whose
-    // struct/array buffers are barred from HashAggregate and fall to
-    // object/sort aggregation), no shuffle. Bit-identical by construction
-    // (see PqArgmin) and pinned to the join path in ExtOpsSpec.
-    case Some(lit) => assignCodesLit(subs, lit, keepSv)
-    case None =>
-      val g = subs.join(broadcast(books), Seq("sub"))
-        .withColumn("pd", col("cvv") - lit(2.0) * dot(col("sv"), col("cv")))
-        .groupBy(col("vec_id"), col("sub"))
-      val codeAgg = min_by(col("code"), struct(col("pd"), col("code"))).as("code")
-      if (keepSv) g.agg(codeAgg, first(col("sv")).as("sv"))
-      else g.agg(codeAgg)
-  }
-
-  /** The codebooks as a [[graft.cdc.types.PqBooksLit]] when `books` is a
-    * driver-local relation (the [[pqCodebooksExact]] output) whose code ids
-    * are uniform across subspaces — the layout [[assignCodesLit]] flattens.
-    * Any other shape (cluster-side codebooks, ragged subspaces) returns
-    * None and keeps the broadcast-join path.
-    */
-  private[ext] def localBooks(books: DataFrame): Option[graft.cdc.types.PqBooksLit] =
-    books.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if lr.output.map(_.name) == Seq("sub", "code", "cv", "cvv") =>
-        val rows = lr.data.map(r =>
-          (r.getInt(0), r.getLong(1), r.getArray(2).toDoubleArray(), r.getDouble(3)))
-        val bySub = rows.groupBy(_._1)
-        val m = bySub.size
-        val perSub = (0 until m).map(s => bySub.getOrElse(s, Seq.empty).sortBy(_._2))
-        if (perSub.exists(_.isEmpty)) None
-        else {
-          val codes = perSub.head.map(_._2).toArray
-          val uniform = perSub.forall(a =>
-            java.util.Arrays.equals(a.map(_._2).toArray, codes))
-          val dsub = perSub.head.head._3.length
-          if (!uniform || dsub == 0 ||
-            perSub.exists(_.exists(_._3.length != dsub))) None
-          else {
-            val k = codes.length
-            val cvs = new Array[Double](m * k * dsub)
-            val cvvs = new Array[Double](m * k)
-            for (s <- 0 until m; j <- 0 until k) {
-              val (_, _, cv, cvv) = perSub(s)(j)
-              cvvs(s * k + j) = cvv
-              System.arraycopy(cv, 0, cvs, (s * k + j) * dsub, dsub)
-            }
-            Some(graft.cdc.types.PqBooksLit(codes, cvs, cvvs))
-          }
-        }
-      case _ => None
-    }
-
-  /** Map-only code assignment against driver-literal codebooks — the
-    * FAISS-encode shape at 100 TB: every subvector row computes its argmin
-    * in one codegen'd loop; the corpus neither joins nor shuffles.
-    */
-  private def assignCodesLit(
-      subs: DataFrame,
-      books: graft.cdc.types.PqBooksLit,
-      keepSv: Boolean
   ): DataFrame = {
     graft.cdc.types.GraftFunctions.register(subs.sparkSession)
     val codeCol = call_function("graft_pq_argmin", col("sub"), col("sv"),
       typedlit(books.codes.toSeq), typedlit(books.cvs.toSeq),
       typedlit(books.cvvs.toSeq))
-    if (keepSv)
-      subs.select(col("vec_id"), col("sub"), codeCol.as("code"), col("sv"))
-    else subs.select(col("vec_id"), col("sub"), codeCol.as("code"))
+    val cols = Seq(col("vec_id"), col("sub"), codeCol.as("code"))
+    subs.select((if (keepSv) cols :+ col("sv") else cols): _*)
   }
 
   /** Product-quantization codebook fit — per-subspace Lloyd's k-means, all
-    * `m` subspaces trained in ONE plan per iteration (sub is just another
-    * group key). Same scale shape as [[kmeansRefine]]: broadcast books +
-    * map-side argmin assignment, means as posexploded scalar partial sums,
-    * localCheckpoint lineage truncation (reliable checkpoint on a
-    * cluster), empty codes keep their previous centroid. Returns
-    * (sub, code, cv, cvv) — float means, so spec-verified against a
-    * driver replay rather than hash-oracled (house model-fit policy).
+    * `m` subspaces trained in ONE aggregate per iteration (sub is just
+    * another group key): literal-codebook argmin assignment, then the
+    * order-deterministic [[orderedMeans]] per (sub, code) — the same
+    * vec_id-ordered fold as [[kmeansRefine]], so the fitted codebooks are
+    * bit-exact and the PQ search pipeline is hash-oracle-able end-to-end.
+    * Fit-on-sample form (collect_list state per group is member-count-
+    * sized). Empty codes keep their previous centroid.
+    *
+    * The m x k codebook rows live on the DRIVER between iterations
+    * (algorithm-constant size — a model artifact), and the fit returns
+    * them as the [[PqBooksLit]] that `graft_pq_argmin` takes; `cvv` is the
+    * same sequential [[graft.cdc.types.DotProduct]] fold ([[selfDot]]).
     */
-  def pqCodebooks(emb: DataFrame, m: Int, k: Int, iters: Int): DataFrame = {
+  def pqCodebooks(emb: DataFrame, m: Int, k: Int, iters: Int): PqBooksLit = {
     val subs = subVectors(normed(emb), m).localCheckpoint()
-    var books = seedBooks(subs, k).localCheckpoint()
+    var books: Map[(Int, Long), Array[Double]] =
+      seedBooks(subs, k).select(col("sub"), col("code"), col("cv")).collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Double](2).toArray).toMap
     for (_ <- 0 until iters) {
-      val assigned = assignCodes(subs, books, keepSv = true)
-      val means = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
-        .groupBy(col("sub"), col("code"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, s / n))), x -> x.col2)")
-          .as("cv"))
-      books = books.as("old")
-        .join(means.as("new"), Seq("sub", "code"), "left")
-        .select(col("sub"), col("code"),
-          coalesce(col("new.cv"), col("old.cv")).as("cv"))
-        .withColumn("cvv", dot(col("cv"), col("cv")))
-        .localCheckpoint()
+      val means = orderedMeans(assignCodes(subs, booksLit(books), keepSv = true),
+          Seq("sub", "code"), "sv")
+        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Double](2).toArray).toMap
+      books = books.map { case (key, cv) => key -> means.getOrElse(key, cv) }
     }
-    books
+    booksLit(books)
   }
 
-  /** [[pqCodebooks]] with ORDER-DETERMINISTIC means — the same
-    * vec_id-ordered sequential-fold trick as [[kmeansRefineExact]], applied
-    * per (sub, code, pos) group, making the fitted codebooks bit-exact and
-    * the PQ search pipeline hash-oracle-able end-to-end. Fit-on-sample form
-    * (collect_list state per group is member-count-sized); the
-    * shuffle-order [[pqCodebooks]] is the corpus-scale path and ExtOpsSpec
-    * pins the two to agree within float tolerance.
-    *
-    * Like [[kmeansRefineExact]], the m x k codebook rows live on the DRIVER
-    * between iterations (algorithm-constant size — a model artifact), so
-    * each iteration is ONE distributed aggregate collected back instead of
-    * an assign+means+join plan localCheckpoint'ed and re-broadcast. The
-    * means expression is unchanged and `cvv` is the same sequential
-    * [[graft.cdc.types.DotProduct]] fold, so the books are bit-identical.
+  /** (sub, code) -> centroid rows flattened into [[PqBooksLit]]'s layout:
+    * codes ascending, sub-major, code-major, dim-minor. Every subspace
+    * shares the seed code ids ([[seedBooks]]), which the layout requires.
     */
-  def pqCodebooksExact(emb: DataFrame, m: Int, k: Int, iters: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val subs = subVectors(normed(emb), m).localCheckpoint()
-    var books: Array[(Int, Long, Array[Double])] =
-      seedBooks(subs, k).select(col("sub"), col("code"), col("cv")).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    def booksDf(): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        books.toSeq.map { case (sub, code, cv) =>
-          org.apache.spark.sql.Row(sub, code, cv.toSeq, selfDot(cv))
-        }.asJava
-      spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("sub",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("code",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cv",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType, containsNull = false),
-          nullable = false),
-        org.apache.spark.sql.types.StructField("cvv",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
-    }
-    for (_ <- 0 until iters) {
-      val means = assignCodes(subs, booksDf(), keepSv = true)
-        .select(col("sub"), col("code"), col("vec_id"), posexplode(col("sv")))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(
-          // graft_sorted_fold == the aggregate(array_sort(collect_list))
-          // HOF (GraftExpressionsSpec pin), compiled instead of interpreted
-          call_function("graft_sorted_fold",
-            collect_list(struct(col("vec_id"), col("col")))).as("s"),
-          count(lit(1)).as("n"))
-        .groupBy(col("sub"), col("code"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, s / n))), x -> x.col2)")
-          .as("cv"))
-        .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getSeq[Double](2).toArray)).toMap
-      // empty codes keep their previous centroid (the old left-join coalesce)
-      books = books.map { case (sub, code, cv) =>
-        (sub, code, means.getOrElse((sub, code), cv))
-      }
-    }
-    booksDf()
+  private def booksLit(books: Map[(Int, Long), Array[Double]]): PqBooksLit = {
+    val codes = books.keys.map(_._2).toArray.distinct.sorted
+    val m = books.keys.map(_._1).max + 1
+    val cvs = for (s <- 0 until m; c <- codes.toSeq) yield books((s, c))
+    PqBooksLit(codes, cvs.flatten.toArray, cvs.map(selfDot).toArray)
   }
+
+  /** The codebooks as a (sub, code, cv, cvv) local relation — the side the
+    * ADC lookup table joins.
+    */
+  private def booksFrame(spark: SparkSession, books: PqBooksLit): DataFrame =
+    localFrame(spark, BookSchema,
+      for (s <- 0 until books.m; j <- 0 until books.kEff) yield {
+        val c = s * books.kEff + j
+        Row(s, books.codes(j),
+          books.cvs.slice(c * books.dsub, (c + 1) * books.dsub).toSeq, books.cvvs(c))
+      })
+
+  /** The query x codebook ADC lookup table: (sub, code, qid, pdist) with
+    * pdist = |sv - cv|^2 for every query subvector against every code of
+    * its subspace — nQueries x m x k scalar rows, broadcast by its users.
+    */
+  private def adcLut(subs: DataFrame, books: PqBooksLit, nQueries: Int): DataFrame =
+    subs.where(col("vec_id") < nQueries)
+      .join(broadcast(booksFrame(subs.sparkSession, books)), Seq("sub"))
+      .select(col("sub"), col("code"), col("vec_id").as("qid"),
+        (col("svv") + col("cvv") - lit(2.0) * dot(col("sv"), col("cv"))).as("pdist"))
 
   /** PQ-encode the corpus: (vec_id, sub, code) — `m` small integers per
     * vector in place of the raw floats. At 64 dims x 4 bytes -> m bytes
     * (after dense re-indexing), the 32-64x compression that lets a 100 TB
     * corpus' ANN index live in executor memory.
     */
-  def pqEncode(emb: DataFrame, books: DataFrame, m: Int): DataFrame =
-    assignCodes(subVectors(normed(emb), m), books)
+  def pqEncode(emb: DataFrame, books: PqBooksLit): DataFrame =
+    assignCodes(subVectors(normed(emb), books.m), books)
 
   /** The ADC distance: per-(qid, nid) sum of the m per-subspace partial
     * distances, as a sub-ordered sequential fold so the double result is
@@ -643,32 +528,27 @@ object Similarity {
       collect_list(struct(col("sub"), col("pdist")))).as("adc")
 
   /** Asymmetric-distance (ADC) top-k: exact query subvectors against the
-    * corpus' PQ codes. The query x codebook lookup table — nQueries x m x
-    * k rows of (sub, code, qid, pdist) scalars — broadcasts; the corpus
-    * side joins it by its stored (sub, code) pair and a
-    * map-side-combinable sum over the m subspaces rebuilds the full
+    * corpus' PQ codes. The query x codebook lookup table ([[adcLut]])
+    * broadcasts; the corpus side joins it by its stored (sub, code) pair
+    * and a map-side-combinable sum over the m subspaces rebuilds the full
     * approximate distance. No corpus vector is touched after encoding —
     * the whole search runs on codes, the property that makes PQ the 100 TB
-    * memory-budget play (FAISS IVFADC without the IVF gate; compose with
-    * [[ivfTopKWith]] cells to add one).
+    * memory-budget play (FAISS IVFADC without the IVF gate;
+    * [[ivfPqTopKWith]] adds one).
     *
     * Returns (qid, nid, rank, adc) ranked by ascending approximate L2^2
     * on unit vectors (monotone in cosine), ties to the smaller nid.
     */
   def pqAdcTopK(
       emb: DataFrame,
-      books: DataFrame,
-      m: Int,
+      books: PqBooksLit,
       nQueries: Int,
       k: Int
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val subs = subVectors(normed(emb), m)
+    val subs = subVectors(normed(emb), books.m)
     val codes = assignCodes(subs, books)
-    val lut = subs.where(col("vec_id") < nQueries)
-      .join(broadcast(books), Seq("sub"))
-      .select(col("sub"), col("code"), col("vec_id").as("qid"),
-        (col("svv") + col("cvv") - lit(2.0) * dot(col("sv"), col("cv"))).as("pdist"))
+    val lut = adcLut(subs, books, nQueries)
     codes
       .join(broadcast(lut), Seq("sub", "code"))
       .where(col("qid") =!= col("vec_id"))
@@ -695,14 +575,13 @@ object Similarity {
     */
   def pqSearchTopK(
       emb: DataFrame,
-      books: DataFrame,
-      m: Int,
+      books: PqBooksLit,
       nQueries: Int,
       k: Int,
       shortlist: Int
   ): DataFrame =
     exactRerank(normed(emb),
-      pqAdcTopK(emb, books, m, nQueries, shortlist).select(col("qid"), col("nid")),
+      pqAdcTopK(emb, books, nQueries, shortlist).select(col("qid"), col("nid")),
       nQueries, k)
 
   /** Exact-cosine re-rank of a (qid, nid) candidate shortlist: the corpus
@@ -732,13 +611,14 @@ object Similarity {
   }
 
   /** IVF-PQ — the full FAISS IVFADC pipeline, composed from the two
-    * indexes this file already builds: the IVF cell gate restricts each
-    * query's ADC scan to its `nProbe` probed cells (1/nCells of the
-    * corpus per probe instead of all of it), the scan itself runs on PQ
-    * codes alone, and the survivors re-rank exactly. At 100 TB this is
-    * the shape that bounds BOTH compute (probed cells only) and memory
-    * (codes only): cell ids and codes are small integers, the raw vectors
-    * are touched for nQueries x shortlist rows at the very end.
+    * indexes this file already builds, against fitted codebooks (e.g.
+    * [[pqCodebooks]]'s output): the IVF cell gate restricts each query's
+    * ADC scan to its `nProbe` probed cells (1/nCells of the corpus per
+    * probe instead of all of it), the scan itself runs on PQ codes alone,
+    * and the survivors re-rank exactly. At 100 TB this is the shape that
+    * bounds BOTH compute (probed cells only) and memory (codes only): cell
+    * ids and codes are small integers, the raw vectors are touched for
+    * nQueries x shortlist rows at the very end.
     *
     * The cell gate joins the code table to the (vec_id, cell) assignment
     * — a corpus-sized scalar equi-join — then filters by the broadcast
@@ -747,29 +627,11 @@ object Similarity {
     * refined ones through [[kmeansRefine]]-style fits offline if recall
     * needs them). Returns (qid, nid, rank, sim) with exact cosine sims.
     */
-  def ivfPqTopK(
-      emb: DataFrame,
-      nCells: Int,
-      nProbe: Int,
-      m: Int,
-      kCodes: Int,
-      iters: Int,
-      nQueries: Int,
-      k: Int,
-      shortlist: Int
-  ): DataFrame =
-    ivfPqTopKWith(emb, nCells, nProbe, m, pqCodebooks(emb, m, kCodes, iters),
-      nQueries, k, shortlist)
-
-  /** [[ivfPqTopK]] against an externally fitted codebook table (sub, code,
-    * cv, cvv) — e.g. [[pqCodebooksExact]]'s output.
-    */
   def ivfPqTopKWith(
       emb: DataFrame,
       nCells: Int,
       nProbe: Int,
-      m: Int,
-      books: DataFrame,
+      books: PqBooksLit,
       nQueries: Int,
       k: Int,
       shortlist: Int
@@ -779,27 +641,19 @@ object Similarity {
     // the seed centroids (nCells rows) collected once to a literal relation:
     // cellSims feeds TWO subtrees below (corpus assignment + query probes),
     // and each would otherwise re-run the TakeOrdered seed job — same
-    // bounded driver-state shape as the exact fits' model rows, values
-    // copied verbatim so every downstream double is unchanged
-    val seedRows = seedCentroids(base, nCells).collect()
-    val cents = {
-      import scala.jdk.CollectionConverters._
-      base.sparkSession.createDataFrame(
-        seedRows.toSeq.asJava, seedCentroids(base, nCells).schema)
-    }
-    val cellSims = cellSimilaritiesWith(base, cents)
+    // bounded driver-state shape as the fits' model rows
+    val seeds = seedCentroids(base, nCells)
+    val cellSims = cellSimilaritiesWith(base,
+      localFrame(base.sparkSession, seeds.schema, seeds.collect().toSeq))
     val assigned = assignCells(cellSims).select(col("vec_id"), col("cell"))
     val probes = cellSims.where(col("vec_id") < nQueries)
       .withColumn("crank", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cell"))))
       .where(col("crank") <= nProbe)
       .select(col("vec_id").as("qid"), col("cell"))
-    val subs = subVectors(base, m)
+    val subs = subVectors(base, books.m)
     val codes = assignCodes(subs, books)
-    val lut = subs.where(col("vec_id") < nQueries)
-      .join(broadcast(books), Seq("sub"))
-      .select(col("sub"), col("code"), col("vec_id").as("qid"),
-        (col("svv") + col("cvv") - lit(2.0) * dot(col("sv"), col("cv"))).as("pdist"))
+    val lut = adcLut(subs, books, nQueries)
     val cands = codes
       .join(assigned, Seq("vec_id"))
       .join(broadcast(probes), Seq("cell"))

@@ -4,7 +4,7 @@ package graft.ext
   * `similarity_kmeans_ivf`, `similarity_pq_search`, `similarity_ivfpq_search`.
   *
   * These replicate, double-op for double-op, the order-deterministic fits
-  * ([[Similarity.kmeansRefineExact]] / [[Similarity.pqCodebooksExact]]) and
+  * ([[Similarity.kmeansRefine]] / [[Similarity.pqCodebooks]]) and
   * their search tails: every cross-row sum is a sequential fold in a total
   * order (vec_id for fit means, sub for ADC), so both engines run the same
   * IEEE double sequence and the driver's hash compare is exact (validated:
@@ -16,7 +16,8 @@ package graft.ext
   *  - `AS MATERIALIZED` on every stage output read more than once —
   *    default inlining would double the plan per stage;
   *  - `QUALIFY row_number() = 1` is the argmax/argmin with the same total
-  *    tie-break as the Spark side's max_by/min_by struct ordering.
+  *    tie-break as the Spark side's max_by struct ordering (cells) and
+  *    graft_pq_argmin's (pd, code) minimum (codes).
   */
 private[ext] object SimilarityOracles {
 
@@ -128,7 +129,7 @@ private[ext] object SimilarityOracles {
        |      FROM rr)
        |SELECT qid, nid, rank, sim FROM r WHERE rank <= $k""".stripMargin
 
-  /** kmeansRefineExact(8 cells, 2 iters) -> ivfTopKWith(probe 3, 10 queries,
+  /** kmeansRefine(8 cells, 2 iters) -> ivfTopKWith(probe 3, 10 queries,
     * top 5) — fit and search both replayed.
     */
   val kmeansIvf: String =
@@ -154,7 +155,7 @@ private[ext] object SimilarityOracles {
        |      FROM cand)
        |SELECT qid, nid, cell, rank, sim FROM r WHERE rank <= 5""".stripMargin
 
-  /** pqCodebooksExact(m=8, k=64, 2 iters) -> encode -> ADC shortlist(100)
+  /** pqCodebooks(m=8, k=64, 2 iters) -> encode -> ADC shortlist(100)
     * -> exact re-rank top-5 for 10 queries.
     */
   val pqSearch: String =

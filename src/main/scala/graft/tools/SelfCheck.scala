@@ -53,7 +53,7 @@ object SelfCheck {
     // (MergeQueries' reference instant, 2024-01-10T00:00:00Z)
     val tsCut = 1704844800000L
 
-    val books = Similarity.pqCodebooksExact(emb, m = 8, k = 64, iters = 2)
+    val books = Similarity.pqCodebooks(emb, m = 8, k = 64, iters = 2)
 
     val clusterRounds = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
 
@@ -71,9 +71,9 @@ object SelfCheck {
       // FAISS identity: IVF-PQ probing EVERY cell degenerates to the brute
       // ADC scan — same codebooks, same shortlist tie-break, same re-rank
       ("ivfpq_probeall_vs_pq_adc",
-        () => Similarity.pqSearchTopK(emb, books, m = 8, nQueries = 10,
+        () => Similarity.pqSearchTopK(emb, books, nQueries = 10,
           k = 5, shortlist = 100),
-        () => Similarity.ivfPqTopKWith(emb, nCells = 8, nProbe = 8, m = 8,
+        () => Similarity.ivfPqTopKWith(emb, nCells = 8, nProbe = 8,
           books, nQueries = 10, k = 5, shortlist = 100)),
 
       // IVM: folded delta stream == direct join of the final LWW states

@@ -246,6 +246,27 @@ class ChunkPlannerSpec extends SparkTestBase {
     assert(win.toSeq == iter)
   }
 
+  test("window chain ends with empty (max, None) when chunkSize divides n") {
+    val s = spark
+    import s.implicits._
+    def chainOf(df: DataFrame): Seq[(Option[Long], Option[Long])] =
+      df.collect().sortBy(_.getLong(0)).toSeq
+        .map(r => (Option(r.get(1)).map(_.asInstanceOf[Long]),
+          Option(r.get(2)).map(_.asInstanceOf[Long])))
+    // 12 distinct keys (duplicates of key 5 count once), chunkSize 4:
+    // boundaries 4, 8, 12, so the last range starts at the max key
+    val twelve = ((1L to 12L) :+ 5L).toDF("k")
+    assert(chainOf(ChunkPlanner.unevenChunkRanges(twelve, "k", 4)) == Seq(
+      (None, Some(4L)), (Some(4L), Some(8L)), (Some(8L), Some(12L)), (Some(12L), None)))
+    // the probe loop stops at the max key instead: no empty tail
+    assert(ChunkPlanner.unevenChunkRangesIterative(twelve.distinct(), "k", 4) == Seq(
+      (None, Some(4L)), (Some(4L), Some(8L)), (Some(8L), None)))
+    // one key more and the window form has no empty tail either
+    val thirteen = (1L to 13L).toDF("k")
+    assert(chainOf(ChunkPlanner.unevenChunkRanges(thirteen, "k", 4)) == Seq(
+      (None, Some(4L)), (Some(4L), Some(8L)), (Some(8L), Some(12L)), (Some(12L), None)))
+  }
+
   test("window-form composite ranges cover every distinct tuple exactly once") {
     val li = table(spark, sfDir, "lineitem")
     val keys = Seq("l_orderkey", "l_linenumber")

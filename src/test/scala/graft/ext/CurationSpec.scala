@@ -649,25 +649,45 @@ class CurationSpec extends SparkTestBase {
     assert(merged == whole)
   }
 
-  test("linearProbeFit: parallel == exact within fp noise; probe separates target") {
+  test("linearProbeFit == driver GD replay bit for bit; probe separates target") {
     val s = spark
     import s.implicits._
-    val docs = ((0 until 30).map(i =>
+    val rows = (0 until 30).map(i =>
         (i.toLong, s"high quality signal phrase document $i content", "tgt")) ++
       (30 until 60).map(i =>
-        (i.toLong, s"noise${i} filler junk text${i % 7} assorted words here", "raw")))
-      .toDF("doc_id", "text", "source")
-    val exact = Curation.linearProbeFitExact(docs, "tgt", dim = 64, iters = 2, lr = 0.5)
+        (i.toLong, s"noise${i} filler junk text${i % 7} assorted words here", "raw"))
+    val docs = rows.toDF("doc_id", "text", "source")
+    val (dim, iters, lr) = (64, 2, 0.5)
+    val fit = Curation.linearProbeFit(docs, "tgt", dim, iters, lr)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val par = Curation.linearProbeFit(docs, "tgt", dim = 64, iters = 2, lr = 0.5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(exact.keySet == par.keySet && exact.size == 64)
-    assert(exact.forall { case (b, w) => math.abs(w - par(b)) < 1e-9 })
+    assert(fit.size == dim)
+    // replay: (doc, y) -> bucket -> bigram count; each step folds a doc's
+    // prediction over its buckets ascending and a bucket's gradient over
+    // its docs ascending, both from 0.0 — the fit's ordered folds
+    val feats = rows.map { case (id, text, src) =>
+      val buckets = text.split(" ").sliding(2).map(_.mkString(" "))
+        .map(g => Math.floorMod(TextAnalysis.fnv1a64Bytes(g.getBytes("UTF-8")), dim.toLong))
+        .toSeq.groupBy(identity).map { case (b, bs) => b -> bs.size.toLong }
+      (id, if (src == "tgt") 1.0 else 0.0, buckets.toSeq.sortBy(_._1))
+    }.sortBy(_._1)
+    val w = Array.fill(dim)(0.0)
+    for (_ <- 0 until iters) {
+      val err = feats.map { case (id, y, bs) =>
+        id -> (bs.foldLeft(0.0) { case (acc, (b, c)) => acc + w(b.toInt) * c } - y)
+      }.toMap
+      val grads = feats.flatMap { case (id, _, bs) => bs.map { case (b, c) => (b, id, c) } }
+        .groupBy(_._1).map { case (b, terms) =>
+          b -> terms.sortBy(_._2).foldLeft(0.0) { case (acc, (_, id, c)) => acc + err(id) * c }
+        }
+      for ((b, g) <- grads) w(b.toInt) = w(b.toInt) - lr * g / feats.length
+    }
+    for (b <- 0 until dim)
+      assert(fit(b.toLong) == w(b), s"bucket $b: ${fit(b.toLong)} vs ${w(b)}")
     // driver replay of the scoring pass: the probe must rank target docs up
     def score(text: String): Double =
       text.split(" ").sliding(2).map(_.mkString(" "))
         .map(g => Math.floorMod(TextAnalysis.fnv1a64Bytes(g.getBytes("UTF-8")), 64L))
-        .toSeq.groupBy(identity).map { case (b, gs) => exact(b) * gs.size }.sum
+        .toSeq.groupBy(identity).map { case (b, gs) => fit(b) * gs.size }.sum
     val tgtMean = (0 until 30).map(i =>
       score(s"high quality signal phrase document $i content")).sum / 30
     val rawMean = (30 until 60).map(i =>

@@ -319,17 +319,19 @@ class ExtOpsSpec extends SparkTestBase {
         val cell = centroids
           .map { case (c, cv) => (c, dot(v, cv) / (nrm(v) * nrm(cv))) }
           .maxBy { case (c, csim) => (csim, -c) }._1
-        (cell, v)
+        (cell, id, v)
       }
+      // members in ascending vec_id order, each coordinate summed
+      // sequentially from 0.0 — the fit's ordered fold
       centroids = centroids.map { case (c, old) =>
-        val members = assigned.filter(_._1 == c).map(_._2)
+        val members = assigned.filter(_._1 == c).sortBy(_._2).map(_._3)
         if (members.isEmpty) c -> old
-        else c -> members.transpose.map(xs => xs.sum / xs.length).toArray
+        else c -> members.transpose.map(xs => xs.foldLeft(0.0)(_ + _) / xs.length).toArray
       }
     }
     assert(got.keySet == centroids.keySet)
-    for ((c, cv) <- centroids; i <- cv.indices)
-      assert(math.abs(got(c)(i) - cv(i)) < 1e-6, s"cell $c dim $i")
+    for ((c, cv) <- centroids)
+      assert(got(c).toSeq == cv.toSeq, s"cell $c")
 
     // refined centroids feed the same IVF probe/re-rank path
     val refined = Similarity.kmeansRefine(emb, nCells, iters)
@@ -338,67 +340,20 @@ class ExtOpsSpec extends SparkTestBase {
     assert(topk.length == 15 && topk.forall(_.getInt(3) <= 3))
   }
 
-  test("exact-fold fits agree with the shuffle-sum fits to float tolerance") {
-    val emb = table(spark, sfDir, "embeddings")
-    // k-means: same seeds, same assignments — only the mean's summation
-    // order differs, so centroids must agree to ~1e-9 relative
-    val float = Similarity.kmeansRefine(emb, nCells = 4, iters = 2).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val exact = Similarity.kmeansRefineExact(emb, nCells = 4, iters = 2).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    assert(float.keySet == exact.keySet && float.nonEmpty)
-    for ((c, fv) <- float; i <- fv.indices)
-      assert(math.abs(fv(i) - exact(c)(i)) <= 1e-9 * math.max(1.0, math.abs(fv(i))),
-        s"cell $c dim $i")
-    // PQ codebooks: same per (sub, code)
-    val fBooks = Similarity.pqCodebooks(emb, m = 4, k = 16, iters = 2).collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Double](2).toArray).toMap
-    val eBooks = Similarity.pqCodebooksExact(emb, m = 4, k = 16, iters = 2).collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Double](2).toArray).toMap
-    assert(fBooks.keySet == eBooks.keySet && fBooks.nonEmpty)
-    for ((kk, fv) <- fBooks; i <- fv.indices)
-      assert(math.abs(fv(i) - eBooks(kk)(i)) <= 1e-9 * math.max(1.0, math.abs(fv(i))),
-        s"book $kk dim $i")
-  }
-
-  test("literal-codebook argmin path matches the broadcast-join min_by path") {
-    val emb = table(spark, sfDir, "embeddings")
-    val m = 8
-    val books = Similarity.pqCodebooksExact(emb, m, k = 64, iters = 1)
-    // the exact fit returns a driver-local relation -> the PqArgmin path
-    assert(Similarity.localBooks(books).isDefined)
-    val subs = Similarity.subVectors(Similarity.normed(emb), m)
-    val viaLit = Similarity.assignCodes(subs, books, keepSv = true).collect()
-      .map(r => ((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getSeq[Double](3))))
-      .toMap
-    // round-tripping the books through an exchange defeats the local-plan
-    // detection and forces the original broadcast-join + min_by path
-    val booksDist = books.repartition(2)
-    assert(Similarity.localBooks(booksDist).isEmpty)
-    val viaJoin = Similarity.assignCodes(subs, booksDist, keepSv = true).collect()
-      .map(r => ((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getSeq[Double](3))))
-      .toMap
-    assert(viaLit.nonEmpty && viaLit.keySet == viaJoin.keySet)
-    for ((k, (code, sv)) <- viaLit) {
-      assert(viaJoin(k)._1 == code, s"code mismatch at $k")
-      assert(viaJoin(k)._2 == sv, s"sv mismatch at $k")
-    }
-    // keepSv = false column shape preserved too
-    val slim = Similarity.assignCodes(subs, books).columns.toSeq
-    assert(slim == Seq("vec_id", "sub", "code"))
-  }
-
   test("PQ encode matches a driver-side argmin replay; ADC top-k has real recall") {
     val emb = table(spark, sfDir, "embeddings")
     val m = 8; val kCodes = 64
     val books = Similarity.pqCodebooks(emb, m, kCodes, iters = 2)
-    val bookRows = books.collect()
-      .map(r => ((r.getInt(0), r.getLong(1)),
-        (r.getSeq[Double](2).toArray, r.getDouble(3)))).toMap
-    assert(bookRows.keySet.map(_._1) == (0 until m).toSet)
-    assert(bookRows.keySet.groupBy(_._1).forall(_._2.size <= kCodes))
+    assert(books.m == m && books.kEff <= kCodes && books.dsub > 0)
+    val bookRows = (for (s <- 0 until m; j <- 0 until books.kEff) yield {
+      val c = s * books.kEff + j
+      ((s, books.codes(j)),
+        (books.cvs.slice(c * books.dsub, (c + 1) * books.dsub), books.cvvs(c)))
+    }).toMap
 
-    val codes = Similarity.pqEncode(emb, books, m).collect()
+    val encoded = Similarity.pqEncode(emb, books)
+    assert(encoded.columns.toSeq == Seq("vec_id", "sub", "code"))
+    val codes = encoded.collect()
       .map(r => ((r.getLong(0), r.getInt(1)), r.getLong(2))).toMap
 
     // driver replay: unit vectors, slices, argmin of cvv - 2*sv.cv with the
@@ -431,12 +386,12 @@ class ExtOpsSpec extends SparkTestBase {
     val nq = 5; val k = 10
     val exactRows = Similarity.bruteForceTopK(emb, nq, k).collect()
     val exact = exactRows.map(r => (r.getLong(0), r.getLong(1))).toSet
-    val adc = Similarity.pqAdcTopK(emb, books, m, nq, k).collect()
+    val adc = Similarity.pqAdcTopK(emb, books, nq, k).collect()
     assert(adc.map(r => (r.getLong(0), r.getInt(2))).distinct.length == nq * k)
     val hits = adc.map(r => (r.getLong(0), r.getLong(1))).count(exact.contains)
     assert(hits >= (nq * k) / 5, s"ADC recall too low: $hits of ${nq * k}")
 
-    val rr = Similarity.pqSearchTopK(emb, books, m, nq, k, shortlist = 100).collect()
+    val rr = Similarity.pqSearchTopK(emb, books, nq, k, shortlist = 100).collect()
     val rrPairs = rr.map(r => (r.getLong(0), r.getLong(1)))
     val rrHits = rrPairs.count(exact.contains)
     assert(rrHits >= (nq * k) * 9 / 10, s"rerank recall too low: $rrHits of ${nq * k}")
@@ -478,8 +433,9 @@ class ExtOpsSpec extends SparkTestBase {
   test("IVF-PQ respects the cell gate, returns exact sims, and clears the IVF recall bar") {
     val emb = table(spark, sfDir, "embeddings")
     val nq = 5; val k = 10
-    val r = Similarity.ivfPqTopK(emb, nCells = 8, nProbe = 4, m = 8, kCodes = 64,
-      iters = 2, nQueries = nq, k = k, shortlist = 100).collect()
+    val books = Similarity.pqCodebooks(emb, m = 8, k = 64, iters = 2)
+    val r = Similarity.ivfPqTopKWith(emb, nCells = 8, nProbe = 4, books,
+      nQueries = nq, k = k, shortlist = 100).collect()
     assert(r.length == nq * k)
     // sims are exact cosine (same metric as brute force over all pairs)
     val bfAll = Similarity.bruteForceTopK(emb, nq, 1000000)
