@@ -456,12 +456,12 @@ object RowImageQueries extends QueryPack {
     // capped changelog: the hybrid interleaving must reproduce it exactly.
     // Capped at l_orderkey <= 15000 so the bench-SF fixture stays bounded.
     "rowimage_hybrid_materialize" -> ((s, dir) => {
-      // the composition references the IR from 7 subtrees (3 chunks ×
-      // observe/backfill + log phase); materialize the synthesis ONCE —
-      // against a real source each chunk scan is a range-pruned read of the
-      // source table (one total pass), so the re-derivation is purely a
-      // fixture artifact. localCheckpoint = the same lineage-truncation
-      // trade documented at Dedup.clusterAssign
+      // the hybrid's phase filter compares the key once per chunk bound:
+      // over an unpinned IR, Catalyst pushes it through the decode and the
+      // fixture's stand-in repartition into the one-task scan, inlining the
+      // JSON round trip at every comparison (sf0.1 bench: 19.4 s unpinned,
+      // 1.9 s pinned). localCheckpoint = the same lineage-truncation trade
+      // documented at Dedup.clusterAssign
       val ir = decodeEnvelope(
         envelopeFrom(Changelog.table(s, dir, "lineitem").where(col("l_orderkey") <= 15000)),
         lineitemTable).localCheckpoint()

@@ -14,7 +14,8 @@ import graft.cdc.model.Changelog
   * MySqlHybridSplitAssigner.java:103-232 (phase sequencing, binlog split at
   * min hwm) + BinlogSplitReader.java:228-279 (shouldEmit + cutover) — no
   * enumerator/reader RPC survives: the driver sequences phases, executors
-  * do all data work, and every stage is a shuffle-partitioned DataFrame op.
+  * do all data work, and both phases are row predicates feeding one
+  * range-tagged merge (one shuffle, one read of the log).
   *
   * Each chunk carries its own watermark pair (a real sequential scanner
   * observes each chunk at a different log position); correctness therefore

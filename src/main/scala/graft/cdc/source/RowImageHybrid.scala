@@ -2,7 +2,7 @@ package graft.cdc.source
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.cdc.model.{Changelog, RowImage}
+import graft.cdc.model.RowImage
 import graft.cdc.model.RowImage.DeclaredTable
 
 /** S1 on the GENERIC IR — the flagship hybrid-source flow over an arbitrary
@@ -10,11 +10,12 @@ import graft.cdc.model.RowImage.DeclaredTable
   * with per-chunk (LOW, HIGH] backfill brackets, then the log phase from
   * min(high watermark) with the per-split emit filter, merged to current
   * state. This is the only implementation of the flow ([[HybridPipeline]]
-  * lifts the scalar fixture into it); every phase runs the schema-driven
-  * operators ([[RowImage.upsertMaterialize]] on the decoded envelope IR),
-  * with chunk boundaries as key-struct literals compared lexicographically
-  * — the same boundary order the composite chunk planners
-  * (KeyedChunkPlanner) emit.
+  * lifts the scalar fixture into it). Both phases are row predicates over
+  * the decoded envelope IR feeding one range-tagged merge
+  * ([[RowImage.upsertMaterialize]]): the log is read, decoded and shuffled
+  * once, whatever the number of chunks. Chunk boundaries are key-struct
+  * literals compared lexicographically — the same boundary order the
+  * composite chunk planners (KeyedChunkPlanner) emit.
   *
   * Reference: MySqlHybridSplitAssigner.java:103-232 (phase sequencing,
   * binlog split at min hwm), SnapshotSplitReadTask.java:166-212 (watermark
@@ -63,18 +64,6 @@ object RowImageHybrid {
     }
   }
 
-  /** Flattened merge output -> READ rows in the 4-column generic IR the
-    * next merge consumes (offset, op='r', key, after) — the reference's
-    * normalized-split output shape (every surviving row rewritten as READ).
-    */
-  private def asRead(merged: DataFrame, table: DeclaredTable): DataFrame =
-    merged.select(
-      col("last_offset").as("offset"),
-      lit(Changelog.OpRead).as("op"),
-      struct(table.pkCols.map(col): _*).cast(table.keyType).as("key"),
-      struct(table.schema.fieldNames.map(col).toIndexedSeq: _*)
-        .cast(table.schema).as("after"))
-
   /** Materialize the hybrid flow over decoded generic-IR rows
     * (`(offset, op, ts_ms, key, before, after)` — [[RowImage.decodeEnvelope]]
     * output). Returns the flattened state (pk cols, last_offset, value
@@ -92,35 +81,38 @@ object RowImageHybrid {
     def inChunk(lo: Option[Column], hi: Option[Column]): Column =
       rangePredicate(key, lo.map(bound), hi.map(bound))
 
-    // the observe-at-lowWm + backfill-to-highWm bracket collapses to ONE
-    // merge per chunk: last-writer-wins is associative in the offset order,
-    // so merge(asRead(merge(events ≤ lowWm)) ∪ events(lowWm, highWm]) per
-    // key equals merge(events ≤ highWm) — the winner is the max-offset
-    // event ≤ highWm either way, a delete winner drops the key either way,
-    // and asRead normalizes op/offset regardless. (A real scanner pays the
-    // two-phase bracket because its chunk scan is an independent
-    // non-transactional table read; a changelog-derived observation is
-    // already the prefix state, so the second distributed merge per chunk
-    // was pure fixture overhead — the reference itself applies backfill in
-    // the reader's buffer, one normalized output per chunk, not as a second
-    // shuffle.) RowImageHybridSpec pins the output against the direct
-    // full-log materialization; HybridPipelineSpec pins each chunk against
-    // the two-phase bracket (SnapshotProtocol.normalizeChunk) and checks
-    // that lowWm, kept in the plan as the chunk's observed position, does
-    // not change the result.
-    val chunks = plan.map { case (lo, hi, _, highWm) =>
-      asRead(RowImage.upsertMaterialize(
-        slim.where(inChunk(lo, hi) && col("offset") <= highWm), table), table)
-    }.reduce(_ unionByName _)
-
-    // log phase from min(high watermark); an event passes iff its key's
-    // chunk is already past it (offset > that chunk's hwm)
+    // snapshot phase: each chunk's state at its high watermark (the
+    // observation at lowWm plus the (lowWm, highWm] backfill); log phase
+    // from min(high watermark): an event passes iff its key's chunk is
+    // already past it (offset > that chunk's hwm) — the emit filter
+    val snapshotPhase = plan.map { case (lo, hi, _, highWm) =>
+      inChunk(lo, hi) && col("offset") <= highWm
+    }.reduce(_ || _)
     val minHwm = plan.map(_._4).min
-    val emitCond = plan.map { case (lo, hi, _, highWm) =>
+    val logPhase = col("offset") > minHwm && plan.map { case (lo, hi, _, highWm) =>
       inChunk(lo, hi) && col("offset") > highWm
     }.reduce(_ || _)
-    val logPhase = slim.where(col("offset") > minHwm && emitCond)
 
-    RowImage.upsertMaterialize(chunks.unionByName(logPhase), table)
+    // ONE merge over both phases. Take a key k in chunk c with high
+    // watermark h. Every log-phase offset of k (> h) exceeds every
+    // snapshot-phase offset of k (<= h), so the winner is the max-offset
+    // log row when k has one and the max-offset snapshot row otherwise.
+    // The two-level form (one merge per chunk, its survivors rewritten as
+    // READ rows, then a final merge with the log phase) picks the same
+    // winner: a delete that wins k's chunk drops k there, so the final
+    // merge sees only k's log rows (none: k stays dropped, as the one
+    // merge's delete winner drops it), and the READ rewrite changed only
+    // `op`, which the output does not carry. Rows with a null offset, or
+    // with a key in no chunk, enter neither form. Tied offsets pick any
+    // tied row in both forms (ROADMAP direction 1). A real scanner pays
+    // the per-chunk bracket because its chunk scan is an independent
+    // table read; a changelog-derived observation is already the prefix
+    // state, so the log is read, decoded and shuffled once.
+    // RowImageHybridSpec pins the output against the direct full-log
+    // merge and the plan at one exchange and one scan; HybridPipelineSpec
+    // pins each chunk against the two-phase bracket
+    // (SnapshotProtocol.normalizeChunk) and that lowWm does not change
+    // the result.
+    RowImage.upsertMaterialize(slim.where(snapshotPhase || logPhase), table)
   }
 }

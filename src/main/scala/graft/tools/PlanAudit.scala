@@ -15,11 +15,10 @@ import java.nio.file.{Files, Path}
   *     scale-relevant plan properties of every `SparkEntry.queries` entry:
   *     shuffle and broadcast exchange counts, cartesian products (must be
   *     zero), parquet filter pushdown, and whole-stage-codegen coverage.
-  *     PLANS.md is this output at sf0.01 (the sed drops sbt's own log
-  *     lines):
+  *     PLANS.md is this output at sf0.01 (`--error` keeps sbt's own log
+  *     lines off stdout):
   *
-  *       sbt -batch "runMain graft.tools.PlanAudit <testdata>/sf0.01" |
-  *         sed -n '/^# Physical-plan audit/,$p' > PLANS.md
+  *       sbt --batch --error "runMain graft.tools.PlanAudit <testdata>/sf0.01" > PLANS.md
   *
   *   - `PlanAudit <sfDir> <outDir> <suffix> [q1,q2|all]` writes each named
   *     query's `explain("formatted")` to `<outDir>/<query>_<suffix>.txt`
@@ -45,7 +44,7 @@ object PlanAudit {
     * Deduped by node identity — a node can be reachable both directly and
     * through a stage's plan field.
     */
-  private def collectAll[T <: AnyRef](plan: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
+  private[graft] def collectAll[T <: AnyRef](plan: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
     def walk(p: SparkPlan): Seq[T] = {
       val here = p.collect(pf)
       val nested = p.collect {
