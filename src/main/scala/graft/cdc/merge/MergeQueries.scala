@@ -3,6 +3,7 @@ package graft.cdc.merge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryPack
+import graft.cdc.types.WireJsonParse
 import graft.cdc.model.Changelog._
 import graft.cdc.offsets.BinlogOffsets
 
@@ -214,9 +215,9 @@ object MergeQueries extends QueryPack {
     "nested_struct_extract" -> ((s, dir) =>
       changelog(s, dir).select(
         col("offset"),
-        from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT"))
+        WireJsonParse(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT"))
           .getField("k").as("k_from_struct"),
-        from_json(col("props"),
+        WireJsonParse(col("props"),
           org.apache.spark.sql.types.MapType(
             org.apache.spark.sql.types.StringType,
             org.apache.spark.sql.types.IntegerType))

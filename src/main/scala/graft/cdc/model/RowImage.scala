@@ -3,6 +3,7 @@ package graft.cdc.model
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.cdc.types.WireJsonParse
 
 /** P1 (full generality) — schema-driven changelog envelopes over ARBITRARY
   * declared table shapes: multi-column row images, composite primary keys,
@@ -14,9 +15,10 @@ import org.apache.spark.sql.types._
   * composes `createConverter` per field; user-defined factories override at
   * :259-268), then keys records by the primary-key struct. Here the same
   * contract is Spark-first: the converter registry builds COLUMNS, not
-  * row-at-a-time closures, so the whole decode is one narrow codegen'd
-  * projection — `from_json` into the wire schema, then one cast/convert
-  * expression per declared field. Nothing shuffles; null-propagation gives
+  * row-at-a-time closures, so the whole decode is narrow projections —
+  * one parse into the wire schema
+  * ([[graft.cdc.types.WireJsonParse]]), then one cast/convert expression
+  * per declared field. Nothing shuffles; null-propagation gives
   * `wrapIntoNullableConverter` for free.
   *
   * Wire format (the JSON shapes Debezium puts on the wire):
@@ -82,6 +84,10 @@ object RowImage {
     */
   def decodeField(f: StructField): Column => Column = decodeValue(f.dataType)
 
+  /** A field's converter: the override when one matches, else the ladder. */
+  private def converter(f: StructField, overrides: ConverterOverrides): Column => Column =
+    overrides.applyOrElse(f, decodeField)
+
   private def decodeValue(dt: DataType): Column => Column = dt match {
     case DateType      => c => date_from_unix_date(c)
     case TimestampType => c => timestamp_micros(c)
@@ -137,20 +143,10 @@ object RowImage {
       .otherwise(to_json(struct(wired.toIndexedSeq: _*)))
   }
 
-  /** Parse a JSON image ONCE into the full wire struct. The coalesce
-    * wrapper is load-bearing: Catalyst's json-expression pruning rewrites
-    * `GetStructField(JsonToStructs)` into a single-field parse PER extracted
-    * field — one tokenizer pass becomes N (4 for a 2-column composite key,
-    * 6 for the value decode; measured 3-10× on the sf0.1 bench) — and the
-    * rewrite only fires on a bare from_json child. Hiding the parse behind
-    * a no-op guard keeps ONE parse per image that physical-level common
-    * subexpression elimination then shares across every field extraction.
-    * The guard must not be constant-foldable — `coalesce(parse, null)` gets
-    * simplified back to a bare parse and re-split; `when(isNotNull)` is
-    * semantically identical (from_json(null) is null) and survives.
+  /** Parse a JSON image into a wire struct: the one parse kernel
+    * ([[graft.cdc.types.WireJsonParse]]); a null image parses to null.
     */
-  private def parseImage(json: Column, ws: StructType): Column =
-    when(json.isNotNull, from_json(json, ws))
+  private def parseImage(json: Column, ws: StructType): Column = WireJsonParse(json, ws)
 
   /** One side's converter composition: wire JSON -> declared-typed struct.
     * Field resolution is BY NAME against the declared schema — a field
@@ -158,17 +154,23 @@ object RowImage {
     * `schema.field(fieldName) == null -> row.setField(i, null)` rule
     * (RowDataDebeziumDeserializeSchema.java:612-615), which is what makes
     * the decode tolerant of schema drift in old log segments.
+    *
+    * `parsed` must be a column bound by an earlier projection, not the
+    * parse itself: common-subexpression elimination does not look inside
+    * the null guard's else branch, so an inline parse runs once per field
+    * (decodeEnvelope over a 176k-frame changelog: 10 parses per frame
+    * inline, 1.75 bound).
     */
   private def decodeImage(
       parsed: Column,
       json: Column,
-      table: DeclaredTable,
+      schema: StructType,
       overrides: ConverterOverrides): Column = {
-    val fields = table.schema.fields.map { f =>
-      val conv = overrides.applyOrElse(f, (ff: StructField) => decodeField(ff))
+    val fields = schema.fields.map { f =>
+      val conv = converter(f, overrides)
       conv(parsed.getField(f.name)).as(f.name)
     }
-    when(json.isNull, lit(null).cast(table.schema))
+    when(json.isNull, lit(null).cast(schema))
       .otherwise(struct(fields.toIndexedSeq: _*))
   }
 
@@ -181,6 +183,10 @@ object RowImage {
     * `key` is the record key the reference attaches to every change event
     * (the Kafka message key = PK struct): taken from the after image, falling
     * back to before for deletes, per pk column. One narrow projection.
+    * Each image is parsed once; the key's before side is a key-schema
+    * parse, evaluated only where after's field is null, so a consumer that
+    * drops `before` (the upsert merges, the hybrid flow) never parses the
+    * whole before image.
     */
   def decodeEnvelope(
       envelope: DataFrame,
@@ -190,34 +196,29 @@ object RowImage {
     val parsed = envelope
       .withColumn("_before_w", parseImage(col("before"), ws))
       .withColumn("_after_w", parseImage(col("after"), ws))
-    val before = decodeImage(col("_before_w"), col("before"), table, overrides)
-    val after  = decodeImage(col("_after_w"), col("after"), table, overrides)
-    val withImages = parsed
-      .withColumn("before", before)
-      .withColumn("after", after)
-      .drop("_before_w", "_after_w")
-    val key = struct(table.pkCols.map(c =>
-      coalesce(col("after").getField(c), col("before").getField(c)).as(c)): _*)
-      .cast(table.keyType)
-    withImages.withColumn("key", key)
-      .select(col("offset"), col("op"), col("ts_ms"),
-        col("key"), col("before"), col("after"))
+    val beforeKey = parseImage(col("before"), wireSchema(table.keyType))
+    val key = struct(table.pkCols.map { c =>
+      val conv = converter(table.schema(c), overrides)
+      coalesce(
+        when(col("after").isNotNull, conv(col("_after_w").getField(c))),
+        when(col("before").isNotNull, conv(beforeKey.getField(c)))).as(c)
+    }: _*).cast(table.keyType)
+    parsed.select(col("offset"), col("op"), col("ts_ms"), key.as("key"),
+      decodeImage(col("_before_w"), col("before"), table.schema, overrides).as("before"),
+      decodeImage(col("_after_w"), col("after"), table.schema, overrides).as("after"))
   }
 
   // --------------------------------------------------------------------
-  // Envelope-native operators. The decoded-IR forms below are correct but,
-  // when an operator is composed DIRECTLY over decodeEnvelope in one plan,
-  // Catalyst's projection collapse inlines the full decode into every
-  // grouping/filter expression that touches a decoded field — from_json
-  // re-evaluates per referenced field (measured ~25-50 parses/row at
-  // sf0.1). These forms keep the wire string opaque through shuffle and
-  // parse at most: the PK fields pre-shuffle (O(pk), not O(row)), and the
-  // full image only for rows that SURVIVE the operator — which is also the
-  // topology you want at 100 TB (decode after merge, not before).
+  // Envelope-native operators. The decoded-IR forms below parse every
+  // image in full before they shuffle it. These forms keep the wire string
+  // opaque through the shuffle and parse at most: the PK fields
+  // pre-shuffle (O(pk), not O(row)), and the full image only for rows that
+  // SURVIVE the operator — which is also the topology you want at 100 TB
+  // (decode after merge, not before).
   // --------------------------------------------------------------------
 
   /** The record key parsed straight off the wire frames at pk-only cost:
-    * from_json with just the key fields' wire schema (unknown JSON fields
+    * one parse with just the key fields' wire schema (unknown JSON fields
     * are skipped), after-image first, before for deletes.
     */
   def keyColumn(table: DeclaredTable, overrides: ConverterOverrides = NoOverrides): Column = {
@@ -231,7 +232,7 @@ object RowImage {
     // by the Column-node conversion
     struct(table.pkCols.map { c =>
       val f = table.schema(c)
-      val conv = overrides.applyOrElse(f, (ff: StructField) => decodeField(ff))
+      val conv = converter(f, overrides)
       conv(img.getField(c)).as(c)
     }: _*).cast(table.keyType)
   }
@@ -242,11 +243,16 @@ object RowImage {
     * aliased key expression), so each caller keeps its own key shape.
     *
     * Without `buckets` this is one aggregation with a map-side partial
-    * `max_by`: one shuffle of partial maxima. With `buckets` it is the
-    * skew-resistant form: a hot key first reduces per (key, offset-derived
-    * salt), then per key — two small shuffles instead of one skewed one
-    * (AQE's skew handling covers joins, not aggregations). max is
-    * associative, so both forms agree.
+    * `max_by`: one shuffle of partial maxima. It plans as a
+    * `SortAggregate`, not a `HashAggregate`: `max_by`'s buffer holds the
+    * payload struct, which the hash aggregate's fixed-width buffer cannot,
+    * so every input row is sorted by key on the map side before the
+    * partial fold, and the partial maxima again after the shuffle.
+    *
+    * With `buckets` it is the skew-resistant form: a hot key first reduces
+    * per (key, offset-derived salt), then per key — two small shuffles
+    * instead of one skewed one (AQE's skew handling covers joins, not
+    * aggregations). max is associative, so both forms agree.
     *
     * `extra` aggregates ride the same unsalted aggregation (the
     * placeholder carry of [[upsertMaterialize]]). Tied offsets within a key
@@ -362,17 +368,10 @@ object RowImage {
       .agg(max_by(
         struct(col("offset"), col("op"), col("ts_ms"), col("after")),
         col("offset")).as("last"))
-    val withParsed = merged.withColumn("_w",
-      parseImage(col("last.after"), wireSchema(table.schema)))
     val pkOut = table.pkCols.map(c => col("key").getField(c).as(c))
-    val valOut = table.valueCols.map { c =>
-      val f = table.schema(c)
-      val conv = overrides.applyOrElse(f, (ff: StructField) => decodeField(ff))
-      conv(col("_w").getField(c)).as(c)
-    }
-    withParsed.select(
+    merged.select(
       (col("last.offset").as("offset") +: col("last.op").as("op") +:
-        col("last.ts_ms").as("ts_ms") +: pkOut) ++ valOut: _*)
+        col("last.ts_ms").as("ts_ms") +: pkOut) ++ winnerValues(table, overrides): _*)
   }
 
   /** State DIFF between two offsets: the minimal changelog that takes the
@@ -380,7 +379,7 @@ object RowImage {
     * appeared, `-D` (with the lo-state image) for keys that vanished, a
     * `-U`/`+U` retraction pair for keys whose image changed. The audit /
     * "what changed since the last sync" question a changelog consumer
-    * asks, answered in ONE hash aggregation: both point-in-time states
+    * asks, answered in ONE aggregation: both point-in-time states
     * come from conditional `max_by` folds (null ordering skips frames past
     * the bound) in the same groupBy, so the log is scanned once and only
     * per-key winners — never raw frames — are compared. Images decode
@@ -415,8 +414,8 @@ object RowImage {
       .withColumn("_hi_json", hiJson)
       .withColumn("_lo_w", parseImage(col("_lo_json"), ws))
       .withColumn("_hi_w", parseImage(col("_hi_json"), ws))
-    val loImg = decodeImage(col("_lo_w"), col("_lo_json"), table, overrides)
-    val hiImg = decodeImage(col("_hi_w"), col("_hi_json"), table, overrides)
+    val loImg = decodeImage(col("_lo_w"), col("_lo_json"), table.schema, overrides)
+    val hiImg = decodeImage(col("_hi_w"), col("_hi_json"), table.schema, overrides)
     val decoded = parsed
       .withColumn("_lo", loImg)
       .withColumn("_hi", hiImg)
@@ -442,25 +441,25 @@ object RowImage {
   }
 
   /** Decode the merge winners `(key, last: (offset, op, after-json))` into
-    * the flattened output shape, parsing each surviving image once.
+    * the flattened output shape.
     */
   private def decodeWinners(
       merged: DataFrame,
       table: DeclaredTable,
       overrides: ConverterOverrides): DataFrame = {
-    // materialize the parse behind an ATTRIBUTE boundary: getField over a
-    // bare (or when-guarded) from_json gets rewritten to a single-field
-    // parse PER value column; over an attribute nothing can split it, and
-    // CollapseProject's cheapness guard (non-cheap alias referenced many
-    // times) keeps the two projections separate
-    val withParsed = merged.withColumn("_w", parseImage(col("last.after"), wireSchema(table.schema)))
     val pkOut = table.pkCols.map(c => col("key").getField(c).as(c))
-    val valOut = table.valueCols.map { c =>
-      val f = table.schema(c)
-      val conv = overrides.applyOrElse(f, (ff: StructField) => decodeField(ff))
-      conv(col("_w").getField(c)).as(c)
-    }
-    withParsed.select(pkOut ++ (col("last.offset").as("last_offset") +: valOut): _*)
+    merged.select(
+      pkOut ++ (col("last.offset").as("last_offset") +: winnerValues(table, overrides)): _*)
+  }
+
+  /** The value columns of a merge winner's image `last.after`, parsed once
+    * per surviving row: the parse is an unconditional subexpression of
+    * every value column, so the projection's common-subexpression
+    * elimination evaluates it once.
+    */
+  private def winnerValues(table: DeclaredTable, overrides: ConverterOverrides): Seq[Column] = {
+    val w = parseImage(col("last.after"), wireSchema(table.schema))
+    table.valueCols.map(c => converter(table.schema(c), overrides)(w.getField(c)).as(c))
   }
 
   /** P2 straight over wire envelopes: route the RAW image strings through
@@ -478,12 +477,15 @@ object RowImage {
           struct(lit("+U").as("row_kind"), col("after").as("img_json"))))
       .otherwise(
         array(struct(lit("-D").as("row_kind"), col("before").as("img_json"))))
+    // the key is bound before the explode: in the generator's own select
+    // it would be evaluated per emitted row (1.5 key parses per frame on a
+    // changelog with half updates, against 1.0)
     val exploded = envelope
-      .select(col("offset"), keyColumn(table, overrides).as("key"), explode(kinds).as("k"))
-      // same attribute boundary as upsertMaterializeEnvelope: one parse per
-      // emitted row, shared across all the decoded fields
+      .withColumn("key", keyColumn(table, overrides))
+      .select(col("offset"), col("key"), explode(kinds).as("k"))
+      // bound as a column: decodeImage reads it under its null guard
       .withColumn("_w", parseImage(col("k.img_json"), wireSchema(table.schema)))
-    val img = decodeImage(col("_w"), col("k.img_json"), table, overrides)
+    val img = decodeImage(col("_w"), col("k.img_json"), table.schema, overrides)
     exploded.select(col("offset"), col("key"),
       col("k.row_kind").as("row_kind"), img.as("img"))
   }
@@ -500,7 +502,7 @@ object RowImage {
     *
     * Envelope-native: only `groupCol` and `sumCol` are ever parsed (a
     * reduced wire schema, same O(referenced-fields) discipline as
-    * [[recordKey]]); correctness of the maintained aggregate requires the
+    * [[keyColumn]]); correctness of the maintained aggregate requires the
     * log's before-images to be faithful predecessors, which is the
     * changelog contract. Returns (groupCol, net_rows, net_sum).
     */
@@ -511,17 +513,12 @@ object RowImage {
       sumCol: String,
       overrides: ConverterOverrides = NoOverrides): DataFrame = {
     val sub = StructType(Seq(table.schema(groupCol), table.schema(sumCol)))
-    def side(json: Column): Column = {
-      val parsed = parseImage(json, wireSchema(sub))
-      val fields = sub.fields.map { f =>
-        val conv = overrides.applyOrElse(f, (ff: StructField) => decodeField(ff))
-        conv(parsed.getField(f.name)).as(f.name)
-      }
-      when(json.isNull, lit(null).cast(sub))
-        .otherwise(struct(fields.toIndexedSeq: _*))
-    }
-    val decoded = envelope.select(col("op"),
-      side(col("after")).as("_a"), side(col("before")).as("_b"))
+    val decoded = envelope
+      .withColumn("_aw", parseImage(col("after"), wireSchema(sub)))
+      .withColumn("_bw", parseImage(col("before"), wireSchema(sub)))
+      .select(col("op"),
+        decodeImage(col("_aw"), col("after"), sub, overrides).as("_a"),
+        decodeImage(col("_bw"), col("before"), sub, overrides).as("_b"))
     val plus = decoded.where(col("op") =!= Changelog.OpDelete)
       .select(col("_a").getField(groupCol).as("_g"),
         col("_a").getField(sumCol).as("_v"), lit(1L).as("_sign"))
@@ -558,7 +555,7 @@ object RowImage {
     * (PostgreSQL unchanged-toast-datum under default replica identity): a
     * placeholder in the winning row's after-image must NOT clobber the
     * stored value, so each placeholder-capable (string/binary) value column
-    * additionally folds its latest AVAILABLE value — still one hash
+    * additionally folds its latest AVAILABLE value — still one
     * aggregation, one shuffle of partial maxima (an extra `max_by` per
     * string column rides the same map-side combine). A key whose entire
     * visible history is placeholders (stream started mid-life with no
@@ -665,7 +662,7 @@ object RowImage {
   // value is a Debezium JSON envelope with ARBITRARY declared row images
   // (the reference's primary deployment shape; the scalar adapter is
   // KafkaEnvelope). The declared wire schema is embedded in the envelope
-  // parse, so ONE from_json per record yields op, ts_ms, source metadata
+  // parse, so ONE parse per record yields op, ts_ms, source metadata
   // AND both typed wire images — no sub-JSON re-extraction.
   // --------------------------------------------------------------------
 
@@ -697,20 +694,14 @@ object RowImage {
       table: DeclaredTable,
       overrides: ConverterOverrides = NoOverrides): DataFrame = {
     val parsed = kafka.withColumn("_env",
-      when(col("value").isNotNull,
-        from_json(col("value").cast(StringType), debeziumValueSchema(table))))
+      parseImage(col("value").cast(StringType), debeziumValueSchema(table)))
     def img(side: String): Column = {
       val src = col("_env").getField(side)
-      val fields = table.schema.fields.map { f =>
-        val conv = overrides.applyOrElse(f, (ff: StructField) => decodeField(ff))
-        conv(src.getField(f.name)).as(f.name)
-      }
-      when(src.isNull, lit(null).cast(table.schema))
-        .otherwise(struct(fields.toIndexedSeq: _*))
+      decodeImage(src, src, table.schema, overrides)
     }
     val key = struct(table.pkCols.map { c =>
       val f = table.schema(c)
-      val conv = overrides.applyOrElse(f, (ff: StructField) => decodeField(ff))
+      val conv = converter(f, overrides)
       conv(coalesce(col("_env").getField("after").getField(c),
         col("_env").getField("before").getField(c))).as(c)
     }: _*).cast(table.keyType)

@@ -483,7 +483,7 @@ object RowImageQueries extends QueryPack {
     // §3.1 Debezium-topic transport on the GENERIC IR: wire envelope frames
     // assembled into Kafka-shaped records (key = pk-struct JSON, value = the
     // Debezium envelope with inline images), decoded back through ONE
-    // combined from_json against the declared wire schema — the oracle is
+    // combined parse against the declared wire schema — the oracle is
     // the identity derivation (faithful transport of every declared field)
     "rowimage_kafka_roundtrip" -> ((s, dir) => {
       val topic = encodeDebeziumTopic(envelope(s, dir), lineitemTable,

@@ -3,6 +3,7 @@ package graft.cdc.model
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.cdc.types.WireJsonParse
 
 /** Schema-history payload codec (T9) — the reference round-trips full
   * `TableChanges.TableChange` documents through state so a restarted job can
@@ -11,10 +12,11 @@ import org.apache.spark.sql.types._
   * columns[{name, jdbcType, typeName, length, scale, position, optional}]}).
   *
   * Spark-first: the document is a typed STRUCT column; encode/decode are
-  * `to_json`/`from_json` (codegen'd, schema-checked at analysis time), so a
-  * schema-history table is just a DataFrame of (offset, table, change_json)
-  * rows persisted to any sink and decoded back on restart — no custom
-  * serializer class, no binary state format.
+  * `to_json` and the [[graft.cdc.types.WireJsonParse]] kernel
+  * (schema-checked at analysis time), so a schema-history table is just a
+  * DataFrame of (offset, table, change_json) rows persisted to any sink and
+  * decoded back on restart — no custom serializer class, no binary state
+  * format.
   */
 object TableChangeCodec {
 
@@ -46,7 +48,7 @@ object TableChangeCodec {
   def encode(change: Column): Column = to_json(change)
 
   /** JSON payload -> typed struct (what a restarting reader consumes). */
-  def decode(json: Column): Column = from_json(json, tableChangeType)
+  def decode(json: Column): Column = WireJsonParse(json, tableChangeType)
 
   // ---------------------------------------------------------------------
   // Debezium/Flink-CDC schema-history WIRE COMPATIBILITY. The reference
@@ -95,14 +97,14 @@ object TableChangeCodec {
     )))
   ))
 
-  /** Tolerant decode of a reference-serialized history record. `from_json`
+  /** Tolerant decode of a reference-serialized history record. The parse
     * maps by name: fields absent from a record (nativeType/length/scale, or
     * everything this engine's compact [[tableChangeType]] form doesn't
     * carry) decode to null, unknown extra fields are ignored — the analog
     * of the reference deserializer's null-checked getInteger ladder
     * (FlinkJsonTableChangeSerializer.java:133-186).
     */
-  def decodeDebezium(json: Column): Column = from_json(json, debeziumTableChangeType)
+  def decodeDebezium(json: Column): Column = WireJsonParse(json, debeziumTableChangeType)
 
   /** Re-serialize a decoded change in the reference's wire form. Two
     * asymmetric null conventions coexist in one record: charsetName /

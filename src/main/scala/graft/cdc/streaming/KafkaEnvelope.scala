@@ -3,6 +3,7 @@ package graft.cdc.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.cdc.types.WireJsonParse
 
 /** Debezium-envelope topic adapter — the reference's primary deployment
   * shape: a CDC stream arriving as Kafka records whose value is a Debezium
@@ -21,10 +22,9 @@ import org.apache.spark.sql.types._
   * the DataFrame, not a connector class. No sandbox Kafka needed to prove
   * the algebra.
   *
-  * Scale: decode is a narrow per-row projection (from_json + field
-  * selects) — it runs inside whole-stage codegen, preserves the source's
-  * partitioning (one Spark partition per Kafka partition), and shuffles
-  * nothing. Startup filters (timestamp / specific-offset) prune before any
+  * Scale: decode is a narrow per-row projection (one [[WireJsonParse]]
+  * + field selects) — it preserves the source's partitioning (one Spark
+  * partition per Kafka partition) and shuffles nothing. Startup filters (timestamp / specific-offset) prune before any
   * stateful operator.
   */
 object KafkaEnvelope {
@@ -100,7 +100,7 @@ object KafkaEnvelope {
     * offset is kept only as a fallback for envelopes missing `source.pos`.
     */
   def decode(kafka: DataFrame): DataFrame = {
-    val env = from_json(col("value").cast("string"), envelopeSchema)
+    val env = WireJsonParse(col("value").cast("string"), envelopeSchema)
     kafka.select(col("offset").as("transport_offset"), env.as("env"))
       .select(
         coalesce(col("env.source.pos"), col("transport_offset")).as("offset"),

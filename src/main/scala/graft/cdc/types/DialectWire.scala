@@ -327,9 +327,9 @@ object TestDecodingScan {
   * [[DeclaredTable]] contract as the generic envelope path, so every
   * downstream operator (merge, IVM, sinks) is dialect-agnostic.
   *
-  * Spark-first: each decode is ONE narrow codegen'd projection (binary
-  * slicing + `conv`, `from_json`, string casts) — no row-at-a-time
-  * closures, nothing shuffles.
+  * Spark-first: each decode is ONE narrow projection (binary
+  * slicing + `conv`, the [[WireJsonParse]] kernel, string casts) — no
+  * row-at-a-time closures, nothing shuffles.
   */
 object DialectWire {
 
@@ -381,13 +381,13 @@ object DialectWire {
       substring(col("key"), 10, 2) === lit("_r").cast(BinaryType)
     val handle = when(keyOk, beLong(col("key"), 12))
     val tableId = when(keyOk, beLong(col("key"), 2))
-    val json = when(col("value").isNotNull && length(col("value")) > 0,
-      col("value").cast(StringType))
-    val parsed = when(json.isNotNull, from_json(json, ws))
+    // the parse is bound as a column first: the image decode reads it
+    // inside a null guard, where common-subexpression elimination does not
+    // look, so an inline parse would run once per field
     val after = when(col("op") =!= "d",
-      RowImage.decodeField(StructField("img", table.schema))(parsed))
+      RowImage.decodeField(StructField("img", table.schema))(col("_w")))
     val pkName = table.pkCols.head
-    kv.select(
+    kv.withColumn("_w", WireJsonParse(col("value").cast(StringType), ws)).select(
       // TSO: physical milliseconds ride in the upper bits (public TiDB
       // timestamp-oracle layout: ts = physical << 18 | logical)
       col("commit_ts").as("offset"),

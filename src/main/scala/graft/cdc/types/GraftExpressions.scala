@@ -2,11 +2,15 @@ package graft.cdc.types
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, StringType}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, ExprUtils, Expression, ExpressionInfo, ImplicitCastInputTypes, TimeZoneAwareExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.util.{FailureSafeParser, PermissiveMode}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, MapType, StringType, StructField, StructType}
+import org.apache.spark.sql.{Column, GraftFrames, SparkSession}
+import com.fasterxml.jackson.core.JsonFactory
 import org.apache.spark.unsafe.types.UTF8String
 import graft.ext.TextAnalysis
 
@@ -538,6 +542,111 @@ case class TestDecodingImages(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TestDecodingImages =
     copy(left = newLeft, right = newRight)
+}
+
+/** `graft_wire_json(json) -> struct | map`: the one wire-JSON parse
+  * kernel. Every JSON record the engine decodes (envelope images, Debezium
+  * records, TiKV values, schema-history records) is parsed here, once per
+  * record, into its wire schema. It runs Spark's own `JacksonParser` inside
+  * a PERMISSIVE `FailureSafeParser` with `from_json`'s options,
+  * corrupt-record column and session time zone, so its output equals
+  * `from_json`'s (WireJsonSpec pins that over generated schemas and
+  * strings, malformed JSON and invalid UTF-8 included). What differs is the
+  * reader: `from_json` wraps every record in a new `InputStreamReader` with
+  * its own 8 KB decoder buffer; this kernel hands Jackson the decoded
+  * `String` (U+FFFD for invalid UTF-8, the characters the reader yields
+  * too). Being its own node, it is also out of reach of
+  * `OptimizeJsonExprs`, which rewrites a `from_json` under field
+  * extractions into one parse per extracted field; here the parse stays
+  * one deterministic subexpression that common-subexpression elimination
+  * shares across every field read.
+  *
+  * Like `from_json`, it is a `CodegenFallback`, so a plan node holding it
+  * runs outside whole-stage codegen. That is deliberate: there, filters
+  * get common-subexpression elimination too, and a key filter that
+  * Catalyst pushes below a decode (the hybrid flow's phase filter) parses
+  * each frame once; a whole-stage-codegen'd filter has no elimination and
+  * parses it once per comparison. Counted over a 176k-frame changelog,
+  * the hybrid flow at 4 chunks (filter plus decode) made 2.0 parses per
+  * frame, and 7.2 with a generated-code kernel.
+  */
+case class WireJsonParse(
+    child: Expression,
+    schema: DataType,
+    timeZoneId: Option[String] = None)
+    extends UnaryExpression with TimeZoneAwareExpression with ExpectsInputTypes
+    with CodegenFallback {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override lazy val dataType: DataType = WireJsonParse.asNullable(schema)
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "graft_wire_json"
+
+  override def withTimeZone(timeZoneId: String): TimeZoneAwareExpression =
+    copy(timeZoneId = Option(timeZoneId))
+
+  @transient private lazy val evaluator = new WireJsonEvaluator(dataType, timeZoneId.get,
+    SQLConf.get.getConf(SQLConf.COLUMN_NAME_OF_CORRUPT_RECORD))
+
+  override protected def nullSafeEval(input: Any): Any =
+    evaluator.evaluate(input.asInstanceOf[UTF8String])
+
+  override protected def withNewChildInternal(newChild: Expression): WireJsonParse =
+    copy(child = newChild)
+}
+
+object WireJsonParse {
+
+  /** `json` parsed into `schema`, a struct or map type whose fields and
+    * values are all made nullable, as `from_json` makes them. Null, empty
+    * or blank input parses to null; malformed input to a struct of nulls
+    * (to null for a map schema).
+    */
+  def apply(json: Column, schema: DataType): Column = {
+    require(schema.isInstanceOf[StructType] || schema.isInstanceOf[MapType],
+      s"graft_wire_json parses into a struct or map, not $schema")
+    GraftFrames.column(WireJsonParse(GraftFrames.expression(json), schema))
+  }
+
+  private def asNullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(asNullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(asNullable(k), asNullable(v), valueContainsNull = true)
+    case other => other
+  }
+}
+
+/** Per-task state of [[WireJsonParse]]: the parser is built lazily where it
+  * runs, the way `from_json`'s evaluator builds its own. A map schema
+  * parses as the one field of a wrapper struct, as in `from_json`.
+  */
+final class WireJsonEvaluator(schema: DataType, timeZoneId: String, corruptColumn: String)
+    extends Serializable {
+
+  @transient private lazy val parser: FailureSafeParser[UTF8String] = {
+    val options = new JSONOptions(Map.empty[String, String], timeZoneId, corruptColumn)
+    val (parserSchema, actual) = schema match {
+      case s: StructType =>
+        ExprUtils.verifyColumnNameOfCorruptRecord(s, options.columnNameOfCorruptRecord)
+        (s, StructType(s.filterNot(_.name == options.columnNameOfCorruptRecord)))
+      case other => (StructType(Seq(StructField("value", other))), other)
+    }
+    val jackson = new JacksonParser(actual, options, allowArrayAsStructs = false)
+    val fromString = (factory: JsonFactory, json: UTF8String) => factory.createParser(json.toString)
+    new FailureSafeParser[UTF8String](
+      json => jackson.parse(json, fromString, identity[UTF8String]),
+      PermissiveMode, parserSchema, options.columnNameOfCorruptRecord)
+  }
+
+  def evaluate(json: UTF8String): AnyRef = {
+    val rows = parser.parse(json)
+    if (!rows.hasNext) null
+    else schema match {
+      case _: StructType => rows.next()
+      case _ => rows.next().getMap(0)
+    }
+  }
 }
 
 /** `graft_bigrams(text) -> array<string>`: all single-space word bigrams

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkTestBase
 import RowImage._
+import RowImageFuzzSpec.typeGen
 
 /** Schema-fuzz round trip of the generic envelope path: RANDOM declared
   * table shapes (2-6 fields drawn from the whole converter ladder, 1-2 pk
@@ -21,15 +22,6 @@ class RowImageFuzzSpec extends SparkTestBase {
   private val params = SCTest.Parameters.default
     .withMinSuccessfulTests(12)
     .withMaxSize(40)
-
-  private val typeGen: Gen[DataType] = Gen.oneOf(
-    Gen.const(LongType), Gen.const(IntegerType), Gen.const(DoubleType),
-    Gen.const(BooleanType), Gen.const(StringType), Gen.const(BinaryType),
-    Gen.const(DateType), Gen.const(TimestampType),
-    for {
-      p <- Gen.choose(5, 20)
-      s <- Gen.choose(0, 6)
-    } yield DecimalType(p, math.min(s, p - 1)))
 
   /** Finite, JSON-representable values per declared type. */
   private def valGen(dt: DataType): Gen[Any] = dt match {
@@ -127,4 +119,17 @@ class RowImageFuzzSpec extends SparkTestBase {
     val r = SCTest.check(params, prop)
     assert(r.passed, r.status.toString)
   }
+}
+
+object RowImageFuzzSpec {
+
+  /** Declared field types across the whole converter ladder. */
+  val typeGen: Gen[DataType] = Gen.oneOf(
+    Gen.const(LongType), Gen.const(IntegerType), Gen.const(DoubleType),
+    Gen.const(BooleanType), Gen.const(StringType), Gen.const(BinaryType),
+    Gen.const(DateType), Gen.const(TimestampType),
+    for {
+      p <- Gen.choose(5, 20)
+      s <- Gen.choose(0, 6)
+    } yield DecimalType(p, math.min(s, p - 1)))
 }
