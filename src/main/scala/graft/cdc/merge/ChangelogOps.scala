@@ -3,6 +3,7 @@ package graft.cdc.merge
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.cdc.model.RowImage
 import graft.cdc.model.Changelog._
 
 /** Changelog algebra — the reference's row-kind expansion, emit filtering
@@ -26,12 +27,13 @@ object ChangelogOps {
   def tableNameCol: Column = concat(lit("users_"), pmod(col("pk"), lit(3)))
 
   /** P1/P2 — expand ops to row kinds: c/r -> +I, u -> -U(before)+U(after),
-    * d -> -D(before). Before-images come from lag(val) per key in offset
-    * order (the changelog's own history is the before-image source).
-    * One shuffle (window by pk), then a narrow explode.
+    * d -> -D(before). Before-images come from lag(val) per key in the
+    * last-writer-wins order (the changelog's own history is the
+    * before-image source). One shuffle (window by pk), then a narrow
+    * explode.
     */
   def extractRows(changelog: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("pk")).orderBy(col("offset"))
+    val w = Window.partitionBy(col("pk")).orderBy(RowImage.lwwOrder(changelog, "val"))
     val withPrev = changelog.withColumn("prev_val", lag(col("val"), 1).over(w))
     val kinds = when(col("op").isin(OpInsert, OpRead),
         array(struct(lit("+I").as("row_kind"), col("val").as("row_val"))))
@@ -132,12 +134,11 @@ object ChangelogOps {
         coalesce(col("offset") > col("hwm"), lit(true)).as("pure_log"))
   }
 
-  /** T9 — schema-history latest: argmax per table, one hash aggregation. */
+  /** T9 — schema-history latest: the last-writer-wins winner per table. */
   def schemaHistoryLatest(changelog: DataFrame): DataFrame =
-    changelog.withColumn("tbl", tableNameCol)
-      .groupBy(col("tbl"))
-      .agg(max(col("offset")).as("last_offset"),
-        max_by(col("props"), col("offset")).as("props"))
+    RowImage.lastWriterWins(changelog.withColumn("tbl", tableNameCol), col("tbl"), "props")
+      .select(col("tbl"), col("last.offset").as("last_offset"),
+        col("last.props").as("props"))
 
   /** T7 — TiDB resolvedTs flush: only events at or before the resolved
     * timestamp are emitted, ordered by commit ts (ties by offset).

@@ -39,12 +39,13 @@ object IncrementalJoin {
 
   /** Row versions with their live intervals: each non-delete frame's
     * after-image is live from its offset until the same pk's next frame
-    * (any op) — `end_offset` null = still live. One window shuffle on the
-    * pk; delete frames produce no version but still terminate the previous
-    * one via `lead`.
+    * (any op) in the last-writer-wins order — `end_offset` null = still
+    * live; a frame that loses a tied offset gets an empty interval. One
+    * window shuffle on the pk; delete frames produce no version but still
+    * terminate the previous one via `lead`.
     */
   def versionIntervals(ir: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("key")).orderBy(col("offset"))
+    val w = Window.partitionBy(col("key")).orderBy(RowImage.lwwOrder(ir, "after"))
     ir.withColumn("end_offset", lead(col("offset"), 1).over(w))
       .where(col("op") =!= Changelog.OpDelete)
       .select(col("offset").as("start_offset"), col("end_offset"),

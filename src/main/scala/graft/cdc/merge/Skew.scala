@@ -6,7 +6,7 @@ import graft.cdc.model.{Changelog, RowImage}
 
 /** Skew-resistant variant of the last-writer-wins merge: a hot key (one pk
   * receiving a disproportionate share of the changelog) would make the
-  * single-shuffle max_by aggregation reduce on one task. This is the salted
+  * single-shuffle max aggregation reduce on one task. This is the salted
   * form of [[RowImage.lastWriterWins]] over the scalar changelog — per
   * (key, offset-derived salt), then per key. Semantics are identical to
   * [[Changelog.upsertMaterialize]] (max is associative) — proven in

@@ -152,9 +152,11 @@ object Changelog {
   def upsertMaterialize(snapshot: DataFrame, changes: DataFrame): DataFrame =
     scalarOut(RowImage.lastWriterWins(snapshot.unionByName(changes), col("pk"), "val"))
 
-  /** Flatten scalar merge winners to (pk, last_offset, last_op, val). */
+  /** Scalar merge winners as live rows (pk, last_offset, last_op, val):
+    * deletes dropped.
+    */
   private[cdc] def scalarOut(merged: DataFrame): DataFrame =
-    merged.select(
+    merged.where(col("last.op") =!= OpDelete).select(
       col("pk"),
       col("last.offset").as("last_offset"),
       col("last.op").as("last_op"),

@@ -223,16 +223,15 @@ object IvmQueries extends QueryPack {
     s"CASE WHEN ${p}_op = 'u' THEN ${p}_flag END AS l_returnflag",
     s"hex(encode(${p}_ls)) AS l_flagbin_hex")
 
-  private def diffStateSql(p: String, bound: Long): String =
-    s"""arg_max(op, o) FILTER (WHERE o <= $bound) AS ${p}_op,
-       |    arg_max(CAST(l_quantity AS DECIMAL(12,2)), o)
-       |      FILTER (WHERE o <= $bound) AS ${p}_qty,
-       |    arg_max(CAST(l_extendedprice AS DECIMAL(14,2)), o)
-       |      FILTER (WHERE o <= $bound) AS ${p}_price,
-       |    arg_max(l_shipdate, o) FILTER (WHERE o <= $bound) AS ${p}_ship,
-       |    arg_max(l_returnflag, o) FILTER (WHERE o <= $bound) AS ${p}_flag,
-       |    arg_max(l_linestatus, o) FILTER (WHERE o <= $bound) AS ${p}_ls,
-       |    max(o) FILTER (WHERE o <= $bound) AS ${p}_o""".stripMargin
+  /** The columns of the `p`-side winner (a [[RowImageQueries.lwwRankSql]]
+    * CTE named `p`) for the diff oracle.
+    */
+  private def diffStateSql(p: String): String =
+    s"""$p.op AS ${p}_op,
+       |    CAST($p.l_quantity AS DECIMAL(12,2)) AS ${p}_qty,
+       |    CAST($p.l_extendedprice AS DECIMAL(14,2)) AS ${p}_price,
+       |    $p.l_shipdate AS ${p}_ship, $p.l_returnflag AS ${p}_flag,
+       |    $p.l_linestatus AS ${p}_ls, $p.o AS ${p}_o""".stripMargin
 
   def oracles: Map[String, String] = Map(
     "rowimage_incremental_join" ->
@@ -256,15 +255,19 @@ object IvmQueries extends QueryPack {
          |GROUP BY o_custkey""".stripMargin,
 
     "rowimage_asof_materialize" ->
-      RowImageQueries.upsertSqlFiltered(s" WHERE o <= $AsOf"),
+      RowImageQueries.upsertSql(RowImageQueries.clSql, s"cl WHERE o <= $AsOf"),
 
     "rowimage_changes_between" ->
       s"""${RowImageQueries.clSql},
+         |${RowImageQueries.lwwRankSql(s"cl WHERE o <= $DiffLo", name = "lo")},
+         |${RowImageQueries.lwwRankSql(s"cl WHERE o <= $DiffHi", name = "hi")},
          |st AS (
-         |  SELECT l_partkey, l_suppkey,
-         |    ${diffStateSql("lo", DiffLo)},
-         |    ${diffStateSql("hi", DiffHi)}
-         |  FROM cl GROUP BY l_partkey, l_suppkey),
+         |  SELECT hi.l_partkey, hi.l_suppkey,
+         |    ${diffStateSql("lo")},
+         |    ${diffStateSql("hi")}
+         |  FROM hi LEFT JOIN lo ON lo.l_partkey = hi.l_partkey
+         |    AND lo.l_suppkey = hi.l_suppkey AND lo.lww_rank = 1
+         |  WHERE hi.lww_rank = 1),
          |sel AS (
          |  SELECT *,
          |    (lo_o IS NOT NULL AND lo_op <> 'd') AS live_lo,
@@ -293,28 +296,22 @@ object IvmQueries extends QueryPack {
          |       ${diffImgSql("hi").mkString(",\n       ")}
          |FROM sel WHERE live_lo AND live_hi AND NOT same""".stripMargin,
 
+    // ts_ms ranks tombstones tied on offset, as it does on the Spark side
     "rowimage_compact_log" ->
-      s"""${RowImageQueries.clSql}
-         |SELECT max(o) AS "offset", arg_max(op, o) AS op,
-         |       arg_max(epoch_ms(l_shipdate), o) AS ts_ms,
+      s"""${RowImageQueries.clSql},
+         |${RowImageQueries.lwwRankSql("cl", ", epoch_ms(l_shipdate) DESC")}
+         |SELECT o AS "offset", op, epoch_ms(l_shipdate) AS ts_ms,
          |       l_partkey, l_suppkey,
-         |       CASE WHEN arg_max(op, o) <> 'd'
-         |            THEN CAST(CAST(arg_max(l_quantity, o) AS DECIMAL(12,2))
-         |                      AS VARCHAR) END AS l_quantity,
-         |       CASE WHEN arg_max(op, o) <> 'd'
-         |            THEN CAST(CAST(arg_max(l_extendedprice, o)
-         |                           AS DECIMAL(14,2)) AS VARCHAR)
+         |       CASE WHEN op <> 'd'
+         |            THEN CAST(CAST(l_quantity AS DECIMAL(12,2)) AS VARCHAR)
+         |            END AS l_quantity,
+         |       CASE WHEN op <> 'd'
+         |            THEN CAST(CAST(l_extendedprice AS DECIMAL(14,2)) AS VARCHAR)
          |            END AS l_extendedprice,
-         |       CASE WHEN arg_max(op, o) <> 'd'
-         |            THEN CAST(arg_max(l_shipdate, o) AS DATE)
-         |            END AS l_shipdate,
-         |       CASE WHEN arg_max(op, o) <> 'd'
-         |            THEN epoch_us(arg_max(l_shipdate, o)) END AS l_shipts_us,
-         |       CASE WHEN arg_max(op, o) = 'u'
-         |            THEN arg_max(l_returnflag, o) END AS l_returnflag,
-         |       CASE WHEN arg_max(op, o) <> 'd'
-         |            THEN hex(encode(arg_max(l_linestatus, o)))
-         |            END AS l_flagbin_hex
-         |FROM cl GROUP BY l_partkey, l_suppkey""".stripMargin
+         |       CASE WHEN op <> 'd' THEN CAST(l_shipdate AS DATE) END AS l_shipdate,
+         |       CASE WHEN op <> 'd' THEN epoch_us(l_shipdate) END AS l_shipts_us,
+         |       CASE WHEN op = 'u' THEN l_returnflag END AS l_returnflag,
+         |       CASE WHEN op <> 'd' THEN hex(encode(l_linestatus)) END AS l_flagbin_hex
+         |FROM lww WHERE lww_rank = 1""".stripMargin
   )
 }

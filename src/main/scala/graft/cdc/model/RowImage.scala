@@ -209,12 +209,13 @@ object RowImage {
   }
 
   // --------------------------------------------------------------------
-  // Envelope-native operators. The decoded-IR forms below parse every
-  // image in full before they shuffle it. These forms keep the wire string
-  // opaque through the shuffle and parse at most: the PK fields
-  // pre-shuffle (O(pk), not O(row)), and the full image only for rows that
-  // SURVIVE the operator — which is also the topology you want at 100 TB
-  // (decode after merge, not before).
+  // Envelope-native operators. The merges (upsert, salted, as-of,
+  // compaction, diff) decode first and merge the decoded IR: a JSON string
+  // does not sort like its decoded struct ("9" > "17"), so a winner chosen
+  // on the wire could not follow the one last-writer-wins order. The
+  // operators that pick no winner (row extraction, emit filter,
+  // incremental aggregation) keep images opaque and parse only the fields
+  // they read.
   // --------------------------------------------------------------------
 
   /** The record key parsed straight off the wire frames at pk-only cost:
@@ -237,35 +238,84 @@ object RowImage {
     }: _*).cast(table.keyType)
   }
 
-  /** The changelog algebra's one last-writer-wins kernel: per key, the
-    * max-offset `last: (offset, op, <payload>)` struct, keys whose winner is
-    * a delete dropped. `key` is grouped on as given (a bare column or an
-    * aliased key expression), so each caller keeps its own key shape.
+  /** The changelog algebra's one last-writer-wins order. A key's rows rank
+    * by the struct `(offset, op, <image>)` of `rows`' columns `offset`,
+    * `op` and `image`, compared lexicographically, and the greatest wins:
+    * the latest offset; on a tied offset the greater op code
+    * (`u` > `r` > `d` > `c`); then the greater image, compared field by
+    * field in declared order with nulls lowest. Rows equal in all three
+    * are interchangeable, so the winner never depends on delivery order.
+    * The reference ranks events that share a binlog offset the same way,
+    * by a total order with tie-breaking tail fields (BinlogOffset.java
+    * :173-246). A row with a null offset gets a null order: `max` skips
+    * it and an ascending sort puts it first, so it never wins.
     *
-    * Without `buckets` this is one aggregation with a map-side partial
-    * `max_by`: one shuffle of partial maxima. It plans as a
-    * `SortAggregate`, not a `HashAggregate`: `max_by`'s buffer holds the
-    * payload struct, which the hash aggregate's fixed-width buffer cannot,
-    * so every input row is sorted by key on the map side before the
-    * partial fold, and the partial maxima again after the shuffle.
+    * Spark cannot order maps (INVALID_ORDERING_TYPE), so each map in the
+    * image ranks by its sorted entries (`array_sort(map_entries(m))`);
+    * [[lastWriterWins]] turns them back into maps.
+    */
+  private[graft] def lwwOrder(rows: DataFrame, image: String): Column =
+    when(col("offset").isNotNull, struct(col("offset"), col("op"),
+      orderable(rows.schema(image).dataType)(col(image)).as(image)))
+
+  private def hasMap(dt: DataType): Boolean = dt match {
+    case _: MapType         => true
+    case st: StructType     => st.fields.exists(f => hasMap(f.dataType))
+    case ArrayType(et, _)   => hasMap(et)
+    case _                  => false
+  }
+
+  /** `dt`'s values with every map replaced by its sorted entry array. */
+  private def orderable(dt: DataType): Column => Column = dt match {
+    case _ if !hasMap(dt) => identity
+    case MapType(kt, vt, _) => c => array_sort(transform(map_entries(c), e =>
+      struct(orderable(kt)(e.getField("key")).as("key"),
+        orderable(vt)(e.getField("value")).as("value"))))
+    case st: StructType => c => when(c.isNotNull, struct(st.fields.map(f =>
+      orderable(f.dataType)(c.getField(f.name)).as(f.name)).toIndexedSeq: _*))
+    case ArrayType(et, _) => c => transform(c, orderable(et))
+  }
+
+  /** The inverse of [[orderable]]: sorted entry arrays back to maps. */
+  private def restored(dt: DataType): Column => Column = dt match {
+    case _ if !hasMap(dt) => identity
+    case MapType(kt, vt, _) => c => map_from_entries(transform(c, e =>
+      struct(restored(kt)(e.getField("key")).as("key"),
+        restored(vt)(e.getField("value")).as("value"))))
+    case st: StructType => c => when(c.isNotNull, struct(st.fields.map(f =>
+      restored(f.dataType)(c.getField(f.name)).as(f.name)).toIndexedSeq: _*))
+    case ArrayType(et, _) => c => transform(c, restored(et))
+  }
+
+  /** The changelog algebra's one last-writer-wins kernel: per key, the
+    * greatest [[lwwOrder]] `last: (offset, op, <payload>)`, deletes
+    * included (callers that want live state drop `last.op = 'd'`). `key`
+    * is grouped on as given (a bare column or an aliased key expression),
+    * so each caller keeps its own key shape.
+    *
+    * Without `buckets` this is one `max` aggregation with a map-side
+    * partial `max`: one shuffle of partial maxima. Its struct buffer rules
+    * out `HashAggregate`, so it plans as `SortAggregate`: a Sort of every
+    * input row by key, the partial aggregate, the exchange, a second Sort
+    * and the final aggregate.
     *
     * With `buckets` it is the skew-resistant form: a hot key first reduces
-    * per (key, offset-derived salt), then per key — two small shuffles
-    * instead of one skewed one (AQE's skew handling covers joins, not
-    * aggregations). max is associative, so both forms agree.
+    * per (key, salt), then per key — two small shuffles instead of one
+    * skewed one (AQE's skew handling covers joins, not aggregations). The
+    * salt is a hash of the offset, so tied rows share a salt, and `max` is
+    * associative, so both forms pick the same winner.
     *
     * `extra` aggregates ride the same unsalted aggregation (the
-    * placeholder carry of [[upsertMaterialize]]). Tied offsets within a key
-    * pick any of the tied rows.
+    * placeholder carry of [[upsertMaterialize]]).
     */
-  private[cdc] def lastWriterWins(
+  private[graft] def lastWriterWins(
       rows: DataFrame,
       key: Column,
       payload: String,
       buckets: Option[Int] = None,
       extra: Seq[Column] = Nil): DataFrame = {
     require(buckets.isEmpty || extra.isEmpty, "extra aggregates need the unsalted form")
-    val last = max_by(struct(col("offset"), col("op"), col(payload)), col("offset")).as("last")
+    val last = max(lwwOrder(rows, payload)).as("last")
     val merged = buckets match {
       case None => rows.groupBy(key).agg(last, extra: _*)
       case Some(n) =>
@@ -273,36 +323,35 @@ object RowImage {
           .withColumn("salt", pmod(xxhash64(col("offset")), lit(n)))
           .groupBy(key, col("salt"))
           .agg(last)
-        perSalt.groupBy(col(perSalt.columns.head))
-          .agg(max_by(col("last"), col("last.offset")).as("last"))
+        perSalt.groupBy(col(perSalt.columns.head)).agg(max(col("last")).as("last"))
     }
-    merged.where(col("last.op") =!= Changelog.OpDelete)
+    val dt = rows.schema(payload).dataType
+    if (!hasMap(dt)) merged
+    else merged.withColumn("last", when(col("last").isNotNull, struct(
+      col("last.offset"), col("last.op"),
+      restored(dt)(col("last").getField(payload)).as(payload))))
   }
 
-  /** J1/W1 straight over wire envelopes: group by the pk-parsed key, carry
-    * the winning after-image as an OPAQUE JSON string through the one
-    * shuffle (map-side partial max_by), then decode only the survivors.
+  /** J1/W1 straight over wire envelopes: [[upsertMaterialize]] over
+    * [[decodeEnvelope]]. The merge reads no `before`, so before images are
+    * never parsed whole.
     */
   def upsertMaterializeEnvelope(
       envelope: DataFrame,
       table: DeclaredTable,
       overrides: ConverterOverrides = NoOverrides): DataFrame =
-    decodeWinners(
-      lastWriterWins(envelope, keyColumn(table, overrides).as("key"), "after"),
-      table, overrides)
+    upsertMaterialize(decodeEnvelope(envelope, table, overrides), table)
 
-  /** Skew-resistant form of [[upsertMaterializeEnvelope]] (the salted
-    * [[lastWriterWins]]): the partial winners still carry the after-image
-    * as an OPAQUE string; survivors decode once, after both reductions.
+  /** Skew-resistant form of [[upsertMaterializeEnvelope]]: the salted
+    * [[lastWriterWins]] over the decoded IR.
     */
   def upsertMaterializeEnvelopeSalted(
       envelope: DataFrame,
       table: DeclaredTable,
       buckets: Int,
       overrides: ConverterOverrides = NoOverrides): DataFrame =
-    decodeWinners(
-      lastWriterWins(envelope, keyColumn(table, overrides).as("key"), "after", Some(buckets)),
-      table, overrides)
+    liveRows(lastWriterWins(decodeEnvelope(envelope, table, overrides),
+      col("key"), "after", Some(buckets)), table)
 
   /** Point-in-time (time-travel) materialization: the table state AS OF
     * `asOf` — last-writer-wins over only the frames at or below that
@@ -351,27 +400,25 @@ object RowImage {
   }
 
   /** Log compaction (the Kafka compacted-topic contract): one frame per
-    * key — its latest — with delete TOMBSTONES retained, so the compacted
-    * log is still a changelog (replaying it into [[upsertMaterialize]]
-    * yields the same state as replaying the full log; spec-asserted).
-    * Envelope-native: the winner's image stays an opaque string through
-    * the one shuffle and decodes only per surviving key. Output: frame
-    * columns + flattened key + decoded after-image value columns (null on
-    * tombstones).
+    * key — its [[lastWriterWins]] winner — with delete TOMBSTONES retained,
+    * so the compacted log is still a changelog (replaying it into
+    * [[upsertMaterialize]] yields the same state as replaying the full log;
+    * spec-asserted). Output: frame columns + flattened key + the winner's
+    * after-image value columns (null on tombstones).
     */
   def compactLogEnvelope(
       envelope: DataFrame,
       table: DeclaredTable,
       overrides: ConverterOverrides = NoOverrides): DataFrame = {
-    val merged = envelope
-      .groupBy(keyColumn(table, overrides).as("key"))
-      .agg(max_by(
-        struct(col("offset"), col("op"), col("ts_ms"), col("after")),
-        col("offset")).as("last"))
+    // ts_ms rides behind the image: it only ranks frames equal in
+    // (offset, op, after), tombstones at one offset
+    val frames = decodeEnvelope(envelope, table, overrides)
+      .withColumn("frame", struct(col("after"), col("ts_ms")))
     val pkOut = table.pkCols.map(c => col("key").getField(c).as(c))
-    merged.select(
+    lastWriterWins(frames, col("key"), "frame").select(
       (col("last.offset").as("offset") +: col("last.op").as("op") +:
-        col("last.ts_ms").as("ts_ms") +: pkOut) ++ winnerValues(table, overrides): _*)
+        col("last.frame.ts_ms").as("ts_ms") +: pkOut) ++
+        table.valueCols.map(c => col("last.frame.after").getField(c).as(c)): _*)
   }
 
   /** State DIFF between two offsets: the minimal changelog that takes the
@@ -379,12 +426,11 @@ object RowImage {
     * appeared, `-D` (with the lo-state image) for keys that vanished, a
     * `-U`/`+U` retraction pair for keys whose image changed. The audit /
     * "what changed since the last sync" question a changelog consumer
-    * asks, answered in ONE aggregation: both point-in-time states
-    * come from conditional `max_by` folds (null ordering skips frames past
-    * the bound) in the same groupBy, so the log is scanned once and only
-    * per-key winners — never raw frames — are compared. Images decode
-    * post-merge, two per surviving key; the emitted `offset` is the
-    * hi-side state-defining frame's.
+    * asks, answered in ONE aggregation: both point-in-time states are
+    * conditional maxima of [[lwwOrder]] (`max` skips the nulls the bound
+    * predicate produces) in the same groupBy, so the log is scanned once
+    * and only per-key winners — never raw frames — are compared. The
+    * emitted `offset` is the hi-side state-defining frame's.
     */
   def changesBetweenEnvelope(
       envelope: DataFrame,
@@ -393,73 +439,36 @@ object RowImage {
       hi: Long,
       overrides: ConverterOverrides = NoOverrides): DataFrame = {
     require(lo <= hi, s"changesBetween needs lo <= hi, got $lo > $hi")
-    // conditional winners via max over (offset-led) structs: max skips the
-    // nulls the bound predicate produces, and the lexicographic struct
-    // order reduces to offset order because offsets are unique per key —
-    // certain null semantics, unlike max_by with a nullable ordering
-    val grouped = envelope
-      .groupBy(keyColumn(table, overrides).as("key"))
-      .agg(
-        max(when(col("offset") <= lo,
-          struct(col("offset"), col("op"), col("after")))).as("s_lo"),
-        max(when(col("offset") <= hi,
-          struct(col("offset"), col("op"), col("after")))).as("s_hi"))
-    val loJson = when(col("s_lo").isNotNull &&
-      col("s_lo.op") =!= Changelog.OpDelete, col("s_lo.after"))
-    val hiJson = when(col("s_hi").isNotNull &&
-      col("s_hi.op") =!= Changelog.OpDelete, col("s_hi.after"))
-    val ws = wireSchema(table.schema)
-    val parsed = grouped
-      .withColumn("_lo_json", loJson)
-      .withColumn("_hi_json", hiJson)
-      .withColumn("_lo_w", parseImage(col("_lo_json"), ws))
-      .withColumn("_hi_w", parseImage(col("_hi_json"), ws))
-    val loImg = decodeImage(col("_lo_w"), col("_lo_json"), table.schema, overrides)
-    val hiImg = decodeImage(col("_hi_w"), col("_hi_json"), table.schema, overrides)
-    val decoded = parsed
-      .withColumn("_lo", loImg)
-      .withColumn("_hi", hiImg)
+    val ir = decodeEnvelope(envelope, table, overrides)
+    val order = lwwOrder(ir, "after")
+    val grouped = ir.groupBy(col("key")).agg(
+      max(when(col("offset") <= lo, order)).as("s_lo"),
+      max(when(col("offset") <= hi, order)).as("s_hi"))
+    // live images in the order's form (maps as sorted entries), so `<=>`
+    // can compare them; restored to the declared shape on output
+    def live(s: String): Column =
+      when(col(s"$s.op") =!= Changelog.OpDelete, col(s"$s.after"))
+    val img = restored(table.schema)
     val empty = array().cast(ArrayType(StructType(Seq(
       StructField("row_kind", StringType, nullable = false),
       StructField("img", table.schema)))))
     val frames =
       when(col("_lo").isNull && col("_hi").isNotNull,
-        array(struct(lit("+I").as("row_kind"), col("_hi").as("img"))))
+        array(struct(lit("+I").as("row_kind"), img(col("_hi")).as("img"))))
       .when(col("_lo").isNotNull && col("_hi").isNull,
-        array(struct(lit("-D").as("row_kind"), col("_lo").as("img"))))
+        array(struct(lit("-D").as("row_kind"), img(col("_lo")).as("img"))))
       .when(col("_lo").isNotNull && col("_hi").isNotNull &&
           !(col("_lo") <=> col("_hi")),
         array(
-          struct(lit("-U").as("row_kind"), col("_lo").as("img")),
-          struct(lit("+U").as("row_kind"), col("_hi").as("img"))))
+          struct(lit("-U").as("row_kind"), img(col("_lo")).as("img")),
+          struct(lit("+U").as("row_kind"), img(col("_hi")).as("img"))))
       .otherwise(empty)
-    decoded
-      .select(col("key"), col("s_hi").getField("offset").as("offset"),
-        explode(frames).as("k"))
+    grouped
+      .select(col("key"), col("s_hi.offset").as("offset"),
+        live("s_lo").as("_lo"), live("s_hi").as("_hi"))
+      .select(col("offset"), col("key"), explode(frames).as("k"))
       .select(col("offset"), col("key"),
         col("k.row_kind").as("row_kind"), col("k.img").as("img"))
-  }
-
-  /** Decode the merge winners `(key, last: (offset, op, after-json))` into
-    * the flattened output shape.
-    */
-  private def decodeWinners(
-      merged: DataFrame,
-      table: DeclaredTable,
-      overrides: ConverterOverrides): DataFrame = {
-    val pkOut = table.pkCols.map(c => col("key").getField(c).as(c))
-    merged.select(
-      pkOut ++ (col("last.offset").as("last_offset") +: winnerValues(table, overrides)): _*)
-  }
-
-  /** The value columns of a merge winner's image `last.after`, parsed once
-    * per surviving row: the parse is an unconditional subexpression of
-    * every value column, so the projection's common-subexpression
-    * elimination evaluates it once.
-    */
-  private def winnerValues(table: DeclaredTable, overrides: ConverterOverrides): Seq[Column] = {
-    val w = parseImage(col("last.after"), wireSchema(table.schema))
-    table.valueCols.map(c => converter(table.schema(c), overrides)(w.getField(c)).as(c))
   }
 
   /** P2 straight over wire envelopes: route the RAW image strings through
@@ -556,7 +565,7 @@ object RowImage {
     * placeholder in the winning row's after-image must NOT clobber the
     * stored value, so each placeholder-capable (string/binary) value column
     * additionally folds its latest AVAILABLE value — still one
-    * aggregation, one shuffle of partial maxima (an extra `max_by` per
+    * aggregation, one shuffle of partial maxima (an extra `max` per
     * string column rides the same map-side combine). A key whose entire
     * visible history is placeholders (stream started mid-life with no
     * snapshot) keeps the placeholder — distinguishable from NULL, exactly
@@ -574,33 +583,37 @@ object RowImage {
       else table.schema.fields.toSeq.filter(f =>
         table.valueCols.contains(f.name) &&
           (f.dataType == StringType || f.dataType == BinaryType))
-    // latest value that was actually present in a record: placeholder rows
-    // have a NULL ordering and are skipped by max_by. The value rides in a
-    // single-field struct because an explicit NULL value IS present and
-    // must participate (max_by skips bare NULL values) — a NULL struct
-    // means "no available row", a struct with a NULL field means "latest
-    // available value is SQL NULL"
+    // latest row whose field was actually present in the record: the
+    // greatest order among non-placeholder rows. A NULL result means "no
+    // available row"; an available row may carry an explicit SQL NULL
     val availAggs = carryCols.map { f =>
       val v = col("after").getField(f.name)
-      max_by(struct(v.as("v")),
-        when(col("after").isNotNull && !(v <=> sentinelLit(f.dataType)),
-          col("offset"))).as(s"_avail_${f.name}")
+      max(when(col("after").isNotNull && !(v <=> sentinelLit(f.dataType)),
+        lwwOrder(rows, "after"))).as(s"_avail_${f.name}")
     }
     val merged = lastWriterWins(rows, col("key"), "after", extra = availAggs)
-    val pkOut = table.pkCols.map(c => col("key").getField(c).as(c))
-    val valOut = table.valueCols.map { c =>
+    liveRows(merged, table, c => {
       val last = col("last.after").getField(c)
       carryCols.find(_.name == c) match {
         case Some(f) =>
           val avail = col(s"_avail_$c")
-          when(last <=> sentinelLit(f.dataType),
-            when(avail.isNotNull, avail.getField("v")).otherwise(last))
-            .otherwise(last).as(c)
-        case None => last.as(c)
+          when(last <=> sentinelLit(f.dataType) && avail.isNotNull,
+            avail.getField("after").getField(c)).otherwise(last)
+        case None => last
       }
-    }
-    merged.select(pkOut ++ (col("last.offset").as("last_offset") +: valOut): _*)
+    })
   }
+
+  /** Merge winners `(key, last: (offset, op, after))` as live rows: deletes
+    * dropped, pk columns flattened, last_offset, value columns flattened.
+    */
+  private def liveRows(
+      merged: DataFrame,
+      table: DeclaredTable,
+      value: String => Column = c => col("last.after").getField(c)): DataFrame =
+    merged.where(col("last.op") =!= Changelog.OpDelete).select(
+      table.pkCols.map(c => col("key").getField(c).as(c)) ++
+        (col("last.offset").as("last_offset") +: table.valueCols.map(c => value(c).as(c))): _*)
 
   /** P1/P2 on the generic IR — row-kind expansion with envelope-carried
     * before images: c/r -> +I(after), u -> -U(before)+U(after),
@@ -857,7 +870,10 @@ object RowImage {
     * row locks in one global order and partitions sharing keys cannot form
     * a lock cycle (without it a multi-partition batch deadlocks in Derby).
     * The sort neither shuffles nor changes the partition count; the order of
-    * a key's own events does not matter under the offset guard.
+    * a key's own events does not matter under the offset guard, except
+    * between rows at one offset: the guard is `LAST_OFFSET < ?`, so the
+    * first of them applied wins, not the [[lwwOrder]] winner. Feed it a
+    * log whose positions are unique per key.
     * Input: [[decodeEnvelope]]-shaped `(offset, op, key, after)` rows.
     */
   def applyRows(rows: DataFrame, table: DeclaredTable, url: String, sqlName: String): Unit = {

@@ -16,9 +16,12 @@ import RowImage._
   * The fixture synthesizes a changelog from `lineitem` deterministically
   * (both sides of the oracle derive it with the same arithmetic):
   *
-  *   - offset = l_orderkey*8 + l_linenumber      (monotone; unique within
-  *              each (l_partkey, l_suppkey) merge group — the 4-tuple is
-  *              unique — so arg_max/max_by never tie; fits int64 at any SF)
+  *   - offset = l_orderkey*8 + l_linenumber      (monotone; fits int64 at
+  *              any SF). Offsets can tie within a (l_partkey, l_suppkey)
+  *              merge group: sf0.001 holds (l_orderkey 1294, l_linenumber 4)
+  *              twice, both key (123, 0) and op 'c', with different images.
+  *              Both sides break the tie by the one last-writer-wins order
+  *              ([[RowImage.lwwOrder]]; the oracles' [[lwwRankSql]])
   *   - op     = R -> 'd', A -> 'u', else 'c'     (from l_returnflag)
   *   - ts_ms  = epoch millis of l_shipdate
   *   - after image  = the row's declared-typed values (absent for deletes),
@@ -206,16 +209,7 @@ object RowImageQueries extends QueryPack {
     }
 
   /** Envelope frames derived from an (optionally filtered) lineitem frame. */
-  def envelopeFrom(lineitem: DataFrame): DataFrame =
-    envelopeFromKeyed(lineitem).drop("l_partkey", "l_suppkey")
-
-  /** [[envelopeFrom]] plus the (l_partkey, l_suppkey) identity columns —
-    * (offset, l_partkey, l_suppkey) is the fixture's unique row identity
-    * (bijective with the 4-tuple, since offset folds orderkey+linenumber),
-    * which staging paths use to totalize the offset order deterministically
-    * on both oracle sides.
-    */
-  def envelopeFromKeyed(lineitem: DataFrame): DataFrame = {
+  def envelopeFrom(lineitem: DataFrame): DataFrame = {
     val after = image(0, when(col("l_returnflag") === "N", lit(null).cast(StringType))
       .otherwise(col("l_returnflag")))
     val before = image(5, lit("P"))
@@ -237,26 +231,41 @@ object RowImageQueries extends QueryPack {
           .when(col("l_returnflag") === "A", Changelog.OpUpdate)
           .otherwise(Changelog.OpInsert))
       .select(
-        // offset = l_orderkey*8 + l_linenumber (linenumber <= 7). The merge
-        // key is (l_partkey, l_suppkey) and the full 4-tuple
-        // (orderkey, linenumber, partkey, suppkey) is unique, so offsets
-        // never tie WITHIN a merge group — which is all last-writer-wins
-        // needs. Distinct rows of different groups may share an offset,
-        // exactly like two rows of one transaction sharing a binlog
-        // position. (The previous layout folded all four components
-        // positionally; at sf10 key ranges that is a >63-bit space and
-        // overflows — within-group uniqueness is the scale-stable
-        // contract.)
+        // offset = l_orderkey*8 + l_linenumber (linenumber <= 7). Rows of
+        // different merge groups may share an offset, exactly like two rows
+        // of one transaction sharing a binlog position; a duplicated row
+        // identity ties within its group, and last-writer-wins breaks the
+        // tie by op and image. (Folding all four identity components
+        // positionally would need a >63-bit space at sf10 key ranges.)
         (col("l_orderkey") * 8 + col("l_linenumber")).as("offset"),
         col("op"),
         unix_millis(col("l_shipdate")).as("ts_ms"),
         when(col("op").isin(Changelog.OpUpdate, Changelog.OpDelete),
           encodeImage(before, lineitemTable)).as("before"),
         when(col("op") =!= Changelog.OpDelete,
-          encodeImage(after, lineitemTable)).as("after"),
-        col("l_partkey").cast("long").as("l_partkey"),
-        col("l_suppkey").cast("long").as("l_suppkey")
-      )
+          encodeImage(after, lineitemTable)).as("after"))
+  }
+
+  /** The frames of [[envelopeFrom]] as a log: `(seq, op, ts_ms, table_name,
+    * before, after)` in delivery order, where SEQ is the log's own dense
+    * position (a binlog/topic position, not the row-identity offset; the
+    * stream's admission control and split planning are range arithmetic
+    * over it). Frames are numbered in (offset, l_partkey, l_suppkey)
+    * order, frames tied there in the ascending [[RowImage.lwwOrder]], so
+    * positions are unique and a key's last position is its
+    * last-writer-wins winner. The oracle derives the same numbering with
+    * `row_number()`.
+    */
+  def sequencedLog(lineitem: DataFrame): Array[(Long, String, Long, String, String, String)] = {
+    val ir = decodeEnvelope(envelopeFrom(lineitem), lineitemTable)
+    ir.orderBy(col("offset"), col("key"), lwwOrder(ir, "after"))
+      .select(col("op"), col("ts_ms"),
+        encodeImage(col("before"), lineitemTable), encodeImage(col("after"), lineitemTable))
+      .collect()
+      .zipWithIndex
+      .map { case (r, i) =>
+        (i.toLong, r.getString(0), r.getLong(1), "lineitem", r.getString(2), r.getString(3))
+      }
   }
 
   /** Decoded generic IR rows for the fixture. */
@@ -298,38 +307,47 @@ object RowImageQueries extends QueryPack {
       .unionByName(row(k(1500, 25), nul, 3200L))
   }
 
-  /** The last-writer-wins oracle, with an optional predicate over the
-    * derived changelog (used by the time-travel variants in [[IvmQueries]]).
+  /** The fixture's after image as DuckDB order keys, field by field in
+    * declared order, valued as the Spark side decodes it: decimal casts
+    * applied, the flag only on updates, no image on deletes.
     */
-  private[model] def upsertSqlFiltered(outerWhere: String): String =
-    s"""$clSql
-       |SELECT l_partkey, l_suppkey, max(o) AS last_offset,
-       |       CAST(CAST(arg_max(l_quantity, o) AS DECIMAL(12,2)) AS VARCHAR)
-       |         AS l_quantity,
-       |       CAST(CAST(arg_max(l_extendedprice, o) AS DECIMAL(14,2)) AS VARCHAR)
-       |         AS l_extendedprice,
-       |       CAST(arg_max(l_shipdate, o) AS DATE) AS l_shipdate,
-       |       arg_max(l_shipdate, o) AS l_shipts,
-       |       CASE WHEN arg_max(op, o) = 'u'
-       |            THEN arg_max(l_returnflag, o) END AS l_returnflag,
-       |       hex(encode(arg_max(l_linestatus, o))) AS l_flagbin_hex
-       |FROM cl$outerWhere GROUP BY l_partkey, l_suppkey
-       |HAVING arg_max(op, o) <> 'd'""".stripMargin
+  private val afterOrderSql: Seq[String] = Seq(
+    "l_partkey", "l_suppkey",
+    "CAST(l_quantity AS DECIMAL(12,2))", "CAST(l_extendedprice AS DECIMAL(14,2))",
+    "CAST(l_shipdate AS DATE)", "l_shipdate",
+    "CASE WHEN op = 'u' THEN l_returnflag END", "encode(l_linestatus)"
+  ).map(e => s"CASE WHEN op <> 'd' THEN $e END")
 
-  private lazy val upsertSql: String =
-    s"""$clSql
-       |SELECT l_partkey, l_suppkey, max(o) AS last_offset,
-       |       CAST(CAST(arg_max(l_quantity, o) AS DECIMAL(12,2)) AS VARCHAR)
-       |         AS l_quantity,
-       |       CAST(CAST(arg_max(l_extendedprice, o) AS DECIMAL(14,2)) AS VARCHAR)
+  /** The oracles' one last-writer-wins rank: a CTE `name` over the rows
+    * of `src` where `lww_rank = 1` marks each key's winner under
+    * [[RowImage.lwwOrder]] — offset, then op, then the after image, each
+    * descending with nulls lowest (Spark orders null struct fields first).
+    * `tail` appends order keys that rank frames equal in all three.
+    */
+  private[model] def lwwRankSql(src: String, tail: String = "", name: String = "lww"): String =
+    s"""$name AS (
+       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY l_partkey, l_suppkey
+       |    ORDER BY o DESC, op DESC,
+       |      ${afterOrderSql.map(_ + " DESC NULLS LAST").mkString(",\n      ")}$tail)
+       |    AS lww_rank
+       |  FROM $src)""".stripMargin
+
+  /** The last-writer-wins oracle: the live winners of [[lwwRankSql]] over
+    * `src`, a source of `prelude`'s CTEs (optionally filtered — the
+    * time-travel variants in [[IvmQueries]]).
+    */
+  private[model] def upsertSql(prelude: String, src: String): String =
+    s"""$prelude,
+       |${lwwRankSql(src)}
+       |SELECT l_partkey, l_suppkey, o AS last_offset,
+       |       CAST(CAST(l_quantity AS DECIMAL(12,2)) AS VARCHAR) AS l_quantity,
+       |       CAST(CAST(l_extendedprice AS DECIMAL(14,2)) AS VARCHAR)
        |         AS l_extendedprice,
-       |       CAST(arg_max(l_shipdate, o) AS DATE) AS l_shipdate,
-       |       arg_max(l_shipdate, o) AS l_shipts,
-       |       CASE WHEN arg_max(op, o) = 'u'
-       |            THEN arg_max(l_returnflag, o) END AS l_returnflag,
-       |       hex(encode(arg_max(l_linestatus, o))) AS l_flagbin_hex
-       |FROM cl GROUP BY l_partkey, l_suppkey
-       |HAVING arg_max(op, o) <> 'd'""".stripMargin
+       |       CAST(l_shipdate AS DATE) AS l_shipdate,
+       |       l_shipdate AS l_shipts,
+       |       CASE WHEN op = 'u' THEN l_returnflag END AS l_returnflag,
+       |       hex(encode(l_linestatus)) AS l_flagbin_hex
+       |FROM lww WHERE lww_rank = 1 AND op <> 'd'""".stripMargin
 
   /** Shared oracle prelude: the deterministic changelog derivation. */
   private[model] def clSqlWhere(where: String): String =
@@ -511,28 +529,8 @@ object RowImageQueries extends QueryPack {
     // Capped at l_orderkey <= 1500 (~6k frames at any sf) so fixture cost
     // is sf-independent.
     "rowimage_stream_materialize" -> ((s, dir) => {
-      val capped = envelopeFromKeyed(
+      val frames = sequencedLog(
         Changelog.table(s, dir, "lineitem").where(col("l_orderkey") <= 1500))
-      val frames = capped.collect()
-        .map(r => ((r.getLong(0), r.getLong(5), r.getLong(6)),
-          (r.getString(1), r.getLong(2), "lineitem", r.getString(3), r.getString(4))))
-        // totalize the offset order with the identity columns — offsets can
-        // repeat ACROSS merge groups (two rows of one transaction at one
-        // binlog position), so (offset, pk, sk) is the deterministic total
-        // order the oracle's row_number() replays
-        .sortBy(_._1)
-        // sf0.001 has one duplicated full row identity; a log's SEQ is
-        // unique by construction, so keep one frame per identity (sf0.01+,
-        // where the oracle gate runs, has no identity duplicates)
-        .distinctBy(_._1)
-        // the log's SEQ is its own DENSE domain — the delivery order of the
-        // stream (a binlog/topic position), not the row-identity offset. The
-        // stream's admission control and split planning are range arithmetic
-        // over SEQ (dense-log contract, see CdcMicroBatchStream); the sparse
-        // folded identity would make `start + maxRows` never reach the data.
-        // The oracle derives the identical numbering with row_number().
-        .zipWithIndex
-        .map { case ((_, (op, ts, tbl, b, a)), i) => (i.toLong, op, ts, tbl, b, a) }
       val stageKey = java.security.MessageDigest.getInstance("SHA-256")
         .digest(dir.getBytes("UTF-8")).take(12).map("%02x".format(_)).mkString
       // per-JVM scratch (never java.io.tmpdir): a staged change table must
@@ -691,11 +689,11 @@ object RowImageQueries extends QueryPack {
          |       CAST(CAST(sum(v * sign) AS DECIMAL(20,2)) AS VARCHAR) AS net_sum
          |FROM u GROUP BY g""".stripMargin,
 
-    "rowimage_upsert_materialize" -> upsertSql,
+    "rowimage_upsert_materialize" -> upsertSql(clSql, "cl"),
 
     // the salted two-phase merge is semantically identical (max is
     // associative), so it shares the oracle verbatim
-    "rowimage_upsert_salted" -> upsertSql,
+    "rowimage_upsert_salted" -> upsertSql(clSql, "cl"),
 
     "rowimage_orders_upsert" ->
       s"""WITH cl AS (
@@ -717,19 +715,7 @@ object RowImageQueries extends QueryPack {
          |HAVING arg_max(op, o) <> 'd'""".stripMargin,
 
     "rowimage_hybrid_materialize" ->
-      s"""${clSqlWhere(" WHERE l_orderkey <= 15000")}
-         |SELECT l_partkey, l_suppkey, max(o) AS last_offset,
-         |       CAST(CAST(arg_max(l_quantity, o) AS DECIMAL(12,2)) AS VARCHAR)
-         |         AS l_quantity,
-         |       CAST(CAST(arg_max(l_extendedprice, o) AS DECIMAL(14,2)) AS VARCHAR)
-         |         AS l_extendedprice,
-         |       CAST(arg_max(l_shipdate, o) AS DATE) AS l_shipdate,
-         |       arg_max(l_shipdate, o) AS l_shipts,
-         |       CASE WHEN arg_max(op, o) = 'u'
-         |            THEN arg_max(l_returnflag, o) END AS l_returnflag,
-         |       hex(encode(arg_max(l_linestatus, o))) AS l_flagbin_hex
-         |FROM cl GROUP BY l_partkey, l_suppkey
-         |HAVING arg_max(op, o) <> 'd'""".stripMargin,
+      upsertSql(clSqlWhere(" WHERE l_orderkey <= 15000"), "cl"),
 
     "rowimage_kafka_roundtrip" ->
       s"""$clSql
@@ -749,26 +735,18 @@ object RowImageQueries extends QueryPack {
          |       hex(encode(l_linestatus)) AS l_flagbin_hex
          |FROM cl""".stripMargin,
 
-    "rowimage_stream_materialize" ->
+    // the log's SEQ numbers the frames in (o, l_partkey, l_suppkey) order,
+    // tied frames in the ascending last-writer-wins order, so a key's last
+    // SEQ is its winner
+    "rowimage_stream_materialize" -> upsertSql(
       s"""${clSqlWhere(" WHERE l_orderkey <= 1500")},
          |cld AS (
-         |  SELECT ROW_NUMBER() OVER (ORDER BY o, l_partkey, l_suppkey) - 1
+         |  SELECT ROW_NUMBER() OVER (ORDER BY o, l_partkey, l_suppkey, op,
+         |           ${afterOrderSql.map(_ + " NULLS FIRST").mkString(",\n           ")}) - 1
          |           AS o, op,
          |         l_partkey, l_suppkey, l_quantity, l_extendedprice,
          |         l_shipdate, l_returnflag, l_linestatus
-         |  FROM cl)
-         |SELECT l_partkey, l_suppkey, max(o) AS last_offset,
-         |       CAST(CAST(arg_max(l_quantity, o) AS DECIMAL(12,2)) AS VARCHAR)
-         |         AS l_quantity,
-         |       CAST(CAST(arg_max(l_extendedprice, o) AS DECIMAL(14,2)) AS VARCHAR)
-         |         AS l_extendedprice,
-         |       CAST(arg_max(l_shipdate, o) AS DATE) AS l_shipdate,
-         |       arg_max(l_shipdate, o) AS l_shipts,
-         |       CASE WHEN arg_max(op, o) = 'u'
-         |            THEN arg_max(l_returnflag, o) END AS l_returnflag,
-         |       hex(encode(arg_max(l_linestatus, o))) AS l_flagbin_hex
-         |FROM cld GROUP BY l_partkey, l_suppkey
-         |HAVING arg_max(op, o) <> 'd'""".stripMargin,
+         |  FROM cl)""".stripMargin, "cld"),
 
     "rowimage_emit_filter" ->
       s"""$clSql

@@ -71,20 +71,17 @@ class StreamingIvm(
     df.write.mode("overwrite").parquet(s"$stateDir/$name/v=$v")
 
   /** Latest open-version frame per key of `comb` (state ∪ batch): the
-    * max-offset frame's after-image if it isn't a delete, re-tagged 'r' so
-    * the next batch replays it as a snapshot-read opening.
+    * last-writer-wins frame's after-image if it isn't a delete, re-tagged
+    * 'r' so the next batch replays it as a snapshot-read opening.
     */
   private def openVersions(comb: DataFrame, t: DeclaredTable): DataFrame =
-    comb
-      .groupBy(col("key"))
-      .agg(max_by(
-        struct(col("offset"), col("op"), col("ts_ms"), col("after")),
-        col("offset")).as("f"))
-      .where(col("f.op") =!= Changelog.OpDelete)
-      .select(col("f.offset").as("offset"), lit(Changelog.OpRead).as("op"),
-        col("f.ts_ms").as("ts_ms"), col("key"),
+    RowImage.lastWriterWins(
+        comb.withColumn("frame", struct(col("after"), col("ts_ms"))), col("key"), "frame")
+      .where(col("last.op") =!= Changelog.OpDelete)
+      .select(col("last.offset").as("offset"), lit(Changelog.OpRead).as("op"),
+        col("last.frame.ts_ms").as("ts_ms"), col("key"),
         lit(null).cast(t.schema).as("before"),
-        col("f.after").as("after"))
+        col("last.frame.after").as("after"))
 
   /** Process one micro-batch of interleaved envelope frames
     * `(offset, op, ts_ms, table_name, before, after)` — the single-log

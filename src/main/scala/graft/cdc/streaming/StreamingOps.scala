@@ -72,8 +72,10 @@ object StreamingOps {
     * delete) using per-key state — the streaming form of
     * [[graft.cdc.merge.ChangelogOps.extractRows]], with the state store
     * playing the before-image source instead of lag(). Rows within a
-    * micro-batch are applied in offset order; late (lower-offset) records
-    * after state has advanced are ignored, matching last-writer-wins.
+    * micro-batch are applied in the last-writer-wins order
+    * `(offset, op, value)` ([[graft.cdc.model.RowImage.lwwOrder]]); a record
+    * that does not rank above the key's state (late, redelivered, or losing
+    * a tied offset) is ignored.
     */
   def retractionStream(changelog: Dataset[ChangeRecord]): Dataset[RetractRow] = {
     import changelog.sparkSession.implicits._
@@ -84,8 +86,9 @@ object StreamingOps {
         (pk, records, state: GroupState[KeyState]) =>
           val out = Seq.newBuilder[RetractRow]
           var cur = state.getOption
-          records.toSeq.sortBy(_.offset).foreach { r =>
-            if (cur.forall(_.last_offset < r.offset)) {
+          val rank = Ordering.Tuple3(Ordering.Long, Ordering.String, Ordering.Double.TotalOrdering)
+          records.toSeq.sortBy(r => (r.offset, r.op, r.value))(rank).foreach { r =>
+            if (cur.forall(c => rank.lt((c.last_offset, c.last_op, c.value), (r.offset, r.op, r.value)))) {
               // a key whose last op was a delete does not exist — the next
               // event re-inserts (+I), it does not retract the dead value
               val live = cur.filter(_.last_op != "d")

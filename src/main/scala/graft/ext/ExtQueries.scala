@@ -1210,8 +1210,9 @@ object ExtQueries extends QueryPack {
         |       count(*) AS dup_cnt
         |FROM documents GROUP BY sha256(text)""".stripMargin,
 
-    // CDC-dedup replay: the same derived changelog, folded with arg_max
-    // (offsets unique per doc so ties are impossible), grouped on raw text
+    // CDC-dedup replay: the same derived changelog, folded with arg_max by
+    // offset (a doc's offsets are distinct, so the last-writer-wins order
+    // reduces to offset order here), grouped on raw text
     // — grouping key choice (text here, sha256 on the Spark side) cannot
     // change the groups, only the shuffle width
     "dedup_cdc_view" ->

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.cdc.model.RowImage
 import graft.cdc.types.PqBooksLit
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -354,7 +355,7 @@ object Similarity {
     * Inputs: `snapshot` = (vec_id, vd) at index build; `log` = (offset,
     * vec_id, op, vd) row-image frames after the snapshot watermark (op
     * `c`/`u`/`d`; `d` frames' vd is ignored). Last writer per vec_id wins
-    * by offset — the same fold the row-image sinks run.
+    * by [[RowImage.lwwOrder]] — the same fold the row-image merges run.
     *
     * Shape at 100 TB: vectors cross exactly TWO map-side-combinable
     * shuffles (the LWW fold and the full-outer snapshot⊕log merge — the
@@ -372,12 +373,11 @@ object Similarity {
     // vd/nrm dropped after the cosine: the argmax ships (vec_id, cell) only
     def assign(df: DataFrame): DataFrame =
       assignCells(cellSimilaritiesWith(df, cents).drop("vd", "nrm"))
-    val folded = log.groupBy(col("vec_id"))
-      .agg(max_by(struct(col("op"), col("vd")), col("offset")).as("w"))
+    val folded = RowImage.lastWriterWins(log, col("vec_id"), "vd")
     val live = snapshot.select(col("vec_id"), col("vd"))
       .join(folded, Seq("vec_id"), "full_outer")
-      .where(col("w").isNull || col("w.op") =!= lit("d"))
-      .select(col("vec_id"), coalesce(col("w.vd"), col("vd")).as("vd"))
+      .where(col("last").isNull || col("last.op") =!= lit("d"))
+      .select(col("vec_id"), coalesce(col("last.vd"), col("vd")).as("vd"))
       .withColumn("nrm", norm(col("vd")))
     val before = assign(base).select(col("vec_id"), col("cell").as("cell_before"))
     val after = assign(live).select(col("vec_id"), col("cell").as("cell_after"))

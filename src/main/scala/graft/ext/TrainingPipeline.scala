@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.cdc.model.Changelog
+import graft.cdc.model.{Changelog, RowImage}
 
 /** The continuous training-data pipeline, composed end-to-end from the
   * engine's own halves: a CDC documents changelog in, fixed-length training
@@ -34,10 +34,9 @@ object TrainingPipeline {
 
   /** The maintained live corpus: last writer wins per doc, deletes drop. */
   def liveCorpus(changes: DataFrame): DataFrame =
-    changes.groupBy(col("doc_id"))
-      .agg(max_by(struct(col("op"), col("text")), col("offset")).as("w"))
-      .where(col("w.op") =!= Changelog.OpDelete)
-      .select(col("doc_id"), col("w.text").as("text"))
+    RowImage.lastWriterWins(changes, col("doc_id"), "text")
+      .where(col("last.op") =!= Changelog.OpDelete)
+      .select(col("doc_id"), col("last.text").as("text"))
 
   /** Exact-dedup keepers + the curation quality gate, fused: keep a doc iff
     * it is the min-id owner of its content digest, has at least `minWords`

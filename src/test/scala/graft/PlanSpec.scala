@@ -46,7 +46,7 @@ class PlanSpec extends SparkTestBase {
 
   test("upsert materialize partial-aggregates below the exchange (map-side)") {
     // structural check: the shuffle's CHILD subtree (what runs map-side,
-    // before data crosses the exchange) must contain the partial max_by.
+    // before data crosses the exchange) must contain the partial max.
     // String-prefix checks get this wrong: tree rendering is root-first,
     // so map-side operators appear AFTER the Exchange line.
     val df = q("changelog_upsert_materialize")
@@ -60,8 +60,8 @@ class PlanSpec extends SparkTestBase {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
     }
     assert(exchanges.nonEmpty, plan.toString)
-    assert(exchanges.exists(_.child.toString.contains("partial_max_by")),
-      s"no exchange has a map-side partial_max_by child:\n$plan")
+    assert(exchanges.exists(_.child.toString.contains("partial_max(")),
+      s"no exchange has a map-side partial_max child:\n$plan")
   }
 
   test("emit filter joins the splits table by broadcast, not shuffle") {

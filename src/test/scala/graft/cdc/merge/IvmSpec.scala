@@ -23,21 +23,13 @@ class IvmSpec extends SparkTestBase {
   private def ordersEnv = IvmQueries.ordersEnvelope(spark, sfDir)
   private def custEnv = IvmQueries.customerEnvelope(spark, sfDir)
 
-  /** sf0.001 carries one duplicated lineitem row identity — two frames
-    * with the SAME offset but different images. A real log never does
-    * this (offsets are unique positions); collapse ties deterministically
-    * so winner selection can't differ between `max_by` (arbitrary on
-    * ties) and struct-max (lexicographic) formulations.
+  /** lineitem frames up to `maxOrderkey`. sf0.001 carries one duplicated
+    * row identity — two frames with the SAME offset but different images —
+    * which the last-writer-wins order resolves like any other tie.
     */
   private def lineitemEnv(maxOrderkey: Long): DataFrame =
     RowImageQueries.envelopeFrom(
-        Changelog.table(spark, sfDir, "lineitem")
-          .where(col("l_orderkey") <= maxOrderkey))
-      .groupBy(col("offset"))
-      .agg(max(struct(col("op"), col("ts_ms"), col("before"), col("after")))
-        .as("f"))
-      .select(col("offset"), col("f.op").as("op"), col("f.ts_ms").as("ts_ms"),
-        col("f.before").as("before"), col("f.after").as("after"))
+      Changelog.table(spark, sfDir, "lineitem").where(col("l_orderkey") <= maxOrderkey))
 
   /** Direct (non-incremental) join of the two materialized states as of
     * `cut`: the ground truth the folded delta prefix must reproduce.

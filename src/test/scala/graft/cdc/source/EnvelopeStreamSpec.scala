@@ -23,15 +23,8 @@ class EnvelopeStreamSpec extends SparkTestBase {
     * split planning are range arithmetic over SEQ).
     */
   private def frames(): Array[(Long, String, Long, String, String, String)] =
-    RowImageQueries.envelopeFrom(
-        Changelog.table(spark, sfDir, "lineitem").where(col("l_orderkey") <= 100))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        "lineitem", r.getString(3), r.getString(4)))
-      .sortBy(_._1)
-      .distinctBy(_._1)
-      .zipWithIndex
-      .map { case ((_, op, ts, tbl, b, a), i) => (i.toLong, op, ts, tbl, b, a) }
+    RowImageQueries.sequencedLog(
+      Changelog.table(spark, sfDir, "lineitem").where(col("l_orderkey") <= 100))
 
   /** The batch-side truth for a set of frames: envelope DataFrame ->
     * envelope-native last-writer-wins merge.
