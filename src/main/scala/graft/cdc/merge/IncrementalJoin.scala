@@ -133,7 +133,10 @@ object IncrementalJoin {
       envB: DataFrame, tableB: DeclaredTable, joinB: String): DataFrame = {
     // each side's decoded IR feeds BOTH delta and version-interval roles —
     // pin the decode once (localCheckpoint) instead of JSON-parsing the
-    // whole log twice per side
+    // whole log twice per side. A per-call operator pin: a lost executor
+    // fails the query with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. persist()
+    // does not fit: this is operator state, and a persisted frame stays
+    // registered with the cache manager for the life of the context
     val irA = RowImage.decodeEnvelope(envA, tableA).localCheckpoint()
     val irB = RowImage.decodeEnvelope(envB, tableB).localCheckpoint()
     foldDeltas(joinDeltas(irA, joinA, irB, joinB))

@@ -80,22 +80,13 @@ object IvmQueries extends QueryPack {
         col("f.after").as("after"))
   }
 
-  /** Per-session materialization of the two join-fixture changelogs — the
-    * same treatment as [[RowImageQueries.envelope]] / `ordersEnvelope`: a
-    * changelog is STORED bytes in any real deployment, and the Δ(A⋈B)
-    * algebra legitimately reads each log in more than one plan subtree
-    * (deltas of A against the state of B and vice versa), so a per-scan
-    * re-rendered fixture times the JSON renderer several times over
-    * instead of the incremental-join operator.
-    */
   /** customer changelog: AUTOMOBILE rows are inserted then deleted,
     * BUILDING rows inserted as a shifted image then updated to their real
-    * one, the rest are plain inserts. Offsets 4000·c+1 (odd).
+    * one, the rest are plain inserts. Offsets 4000·c+1 (odd). Persisted:
+    * see the fixture policy at [[graft.FixtureStaging]].
     */
   def customerEnvelope(spark: SparkSession, sfDir: String): DataFrame =
-    graft.SessionCache.getOrCompute(spark, s"ivm_customer_envelope:$sfDir") {
-      customerEnvelopeFrames(spark, sfDir).localCheckpoint()
-    }
+    customerEnvelopeFrames(spark, sfDir).persist()
 
   private def customerEnvelopeFrames(spark: SparkSession, sfDir: String): DataFrame = {
     val t = Changelog.table(spark, sfDir, "customer")
@@ -113,11 +104,10 @@ object IvmQueries extends QueryPack {
   /** orders changelog: status F = insert+delete, P = insert+update — with
     * the BEFORE image pointing at o_custkey+1, so the update is a
     * join-group MOVE — otherwise plain insert. Offsets 100·o+50 (even).
+    * Persisted: see the fixture policy at [[graft.FixtureStaging]].
     */
   def ordersEnvelope(spark: SparkSession, sfDir: String): DataFrame =
-    graft.SessionCache.getOrCompute(spark, s"ivm_orders_envelope:$sfDir") {
-      ordersEnvelopeFrames(spark, sfDir).localCheckpoint()
-    }
+    ordersEnvelopeFrames(spark, sfDir).persist()
 
   private def ordersEnvelopeFrames(spark: SparkSession, sfDir: String): DataFrame = {
     val t = Changelog.table(spark, sfDir, "orders")

@@ -87,16 +87,11 @@ object RowImageQueries extends QueryPack {
 
   /** orders -> wire envelope frames, same deterministic derivation style as
     * the lineitem fixture: op from o_orderstatus (F -> d, P -> u, else c),
-    * offset = o_orderkey (unique), before images shifted. Checkpoint-cached
-    * like [[envelope]]: a changelog is STORED bytes in any real deployment
-    * (a topic, a landing zone), so the benched decode+validate+merge must
-    * read materialized frames, not re-run the synthesis projection per
-    * pass — the lineitem envelope already gets exactly this treatment.
+    * offset = o_orderkey (unique), before images shifted. Persisted:
+    * see the fixture policy at [[graft.FixtureStaging]].
     */
   def ordersEnvelope(spark: SparkSession, sfDir: String): DataFrame =
-    graft.SessionCache.getOrCompute(spark, s"orders_envelope:$sfDir") {
-      ordersEnvelopeFrames(spark, sfDir).localCheckpoint()
-    }
+    ordersEnvelopeFrames(spark, sfDir).persist()
 
   private def ordersEnvelopeFrames(spark: SparkSession, sfDir: String): DataFrame = {
     def image(priceShift: Int, status: Column): Column = struct(
@@ -193,20 +188,10 @@ object RowImageQueries extends QueryPack {
 
   /** lineitem -> wire envelope frames (offset, op, ts_ms, before, after)
     * with JSON-string images — the raw shape a Debezium topic delivers.
-    * Narrow projection; no shuffle.
-    *
-    * Cached per (session, sfDir): a dozen `rowimage_*` / `ivm_*` queries
-    * consume the same fixture, and re-running the to_json synthesis +
-    * stand-in repartition per query would dominate their bench times (the
-    * operators under test are usually cheaper than the synthesis). A real
-    * envelope arrives from a topic — the synthesis is fixture scaffolding,
-    * so materializing it once (localCheckpoint, same trade as the hybrid
-    * fixture) makes the bench measure operators, not fixture setup.
+    * Persisted: see the fixture policy at [[graft.FixtureStaging]].
     */
   def envelope(spark: SparkSession, sfDir: String): DataFrame =
-    graft.SessionCache.getOrCompute(spark, s"lineitem_envelope:$sfDir") {
-      envelopeFrom(Changelog.table(spark, sfDir, "lineitem")).localCheckpoint()
-    }
+    envelopeFrom(Changelog.table(spark, sfDir, "lineitem")).persist()
 
   /** Envelope frames derived from an (optionally filtered) lineitem frame. */
   def envelopeFrom(lineitem: DataFrame): DataFrame = {
@@ -479,7 +464,12 @@ object RowImageQueries extends QueryPack {
       // fixture's stand-in repartition into the one-task scan, inlining the
       // JSON round trip at every comparison (sf0.1 bench: 19.4 s unpinned,
       // 1.9 s pinned). localCheckpoint = the same lineage-truncation trade
-      // documented at Dedup.clusterAssign
+      // documented at Dedup.clusterAssign. A per-call operator pin: a lost
+      // executor fails the query with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+      // persist() does not fit: a persisted decoded IR would be served to
+      // a bench's later passes (an operator's output cached across timed
+      // passes), and decoding per call above the persisted envelope would
+      // parse each frame twice
       val ir = decodeEnvelope(
         envelopeFrom(Changelog.table(s, dir, "lineitem").where(col("l_orderkey") <= 15000)),
         lineitemTable).localCheckpoint()
@@ -531,40 +521,10 @@ object RowImageQueries extends QueryPack {
     "rowimage_stream_materialize" -> ((s, dir) => {
       val frames = sequencedLog(
         Changelog.table(s, dir, "lineitem").where(col("l_orderkey") <= 1500))
-      val stageKey = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(12).map("%02x".format(_)).mkString
-      // per-JVM scratch (never java.io.tmpdir): a staged change table must
-      // not survive across runs — within a run it is the external database
-      // the stream tails, across runs it would be forbidden precomputation
-      val base = s"${graft.FixtureStaging.jvmScratch}/graft_env1_$stageKey"
-      val url = s"jdbc:derby:$base/logdb;create=true"
-      // content verification like the scalar staging: count + max seq
-      val staged = try {
-        val conn = java.sql.DriverManager.getConnection(url)
-        try {
-          val st = conn.createStatement()
-          try {
-            val rs = st.executeQuery("SELECT COUNT(*), MAX(SEQ) FROM GRAFT_ENVELOPE")
-            rs.next()
-            val ok = rs.getLong(1) == frames.length &&
-              (frames.isEmpty || rs.getLong(2) == frames.last._1)
-            rs.close()
-            ok
-          } finally st.close()
-        } finally conn.close()
-      } catch { case _: java.sql.SQLException => false }
-      if (!staged) {
-        val conn = java.sql.DriverManager.getConnection(url)
-        try {
-          val st = conn.createStatement()
-          // a partial stage implies a possibly-divergent state table: drop both
-          try {
-            try st.executeUpdate("DROP TABLE GRAFT_ENVELOPE")
-            catch { case _: java.sql.SQLException => () }
-            try st.executeUpdate("DROP TABLE RI_STREAM_STATE")
-            catch { case _: java.sql.SQLException => () }
-          } finally st.close()
-        } finally conn.close()
+      // a restage implies a possibly-divergent state table: drop it too
+      val url = graft.FixtureStaging.stageChangeTable("graft_env1", dir,
+        "GRAFT_ENVELOPE", frames.length, frames.lastOption.map(_._1),
+        dependents = Seq("RI_STREAM_STATE")) { url =>
         graft.cdc.source.CdcMicroBatch.appendEnvelopeTable(
           url, "GRAFT_ENVELOPE", frames.iterator)
       }

@@ -54,46 +54,12 @@ object SourceQueries extends QueryPack {
         .select("offset", "pk", "op", "ts_ms", "val").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3), r.getDouble(4)))
         .sortBy(_._1)
-      // staging is keyed by a strong hash of the full sf path (embedded
-      // Derby is single-JVM; distinct sf dirs must never collide on a 32-bit
-      // String.hashCode) and reused across calls in one JVM — the log is an
-      // external database in real life; re-creating it per bench pass would
-      // time fixture setup, not the source
-      val stageKey = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(12).map("%02x".format(_)).mkString
-      // v2: the change-table layout grew a TBL column — a new staging root
-      // so a pre-existing 5-column stage from an older JVM is never reused
-      // per-JVM scratch (never java.io.tmpdir): a staged change table must
-      // not survive across runs — within a run it is the external database
-      // the stream tails, across runs it would be forbidden precomputation
-      val base = s"${graft.FixtureStaging.jvmScratch}/graft_mb2_$stageKey"
-      val url = s"jdbc:derby:$base/logdb;create=true"
-      // content verification, not just row count: a partial stage from a
-      // killed JVM must fail BOTH the count and the max-seq probe to be
-      // (wrongly) reused
-      val staged = try {
-        val conn = java.sql.DriverManager.getConnection(url)
-        try {
-          val st = conn.createStatement()
-          try {
-            val rs = st.executeQuery("SELECT COUNT(*), MAX(SEQ) FROM GRAFT_CHANGELOG")
-            rs.next()
-            val n = rs.getLong(1)
-            val maxSeq = rs.getLong(2)
-            rs.close()
-            n == rows.length && (rows.isEmpty || maxSeq == rows.last._1)
-          } finally st.close()
-        } finally conn.close()
-      } catch { case _: java.sql.SQLException => false }
-      if (!staged) {
-        // a partial stage (killed bench) would collide on SEQ: drop first
-        val conn = java.sql.DriverManager.getConnection(url)
-        try {
-          val st = conn.createStatement()
-          try st.executeUpdate("DROP TABLE GRAFT_CHANGELOG")
-          catch { case _: java.sql.SQLException => () }
-          finally st.close()
-        } finally conn.close()
+      // staged once per JVM: the log is an external database in real life;
+      // re-creating it per bench pass would time fixture setup, not the
+      // source. v2: the change-table layout grew a TBL column — a new
+      // staging root so a pre-existing 5-column stage is never reused
+      val url = graft.FixtureStaging.stageChangeTable("graft_mb2", dir,
+        "GRAFT_CHANGELOG", rows.length, rows.lastOption.map(_._1)) { url =>
         CdcMicroBatch.appendChangeTable(url, "GRAFT_CHANGELOG", rows.iterator)
       }
       val sink = "mb_q_" + java.util.UUID.randomUUID.toString.replace("-", "")

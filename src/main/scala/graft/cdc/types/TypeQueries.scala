@@ -233,56 +233,7 @@ object TypeQueries extends QueryPack {
     // left-to-right token scan. PgLiveSpec replays the same decode against
     // a real PostgreSQL 15 server's replication slot.
     "pg_testdecoding_decode" -> ((s, dir) => {
-      val t = pgOrdersTable
-      val k = col("o_orderkey")
-      val xid = k % 997
-      val dec = org.apache.spark.sql.types.DecimalType(14, 2)
-      val dt = col("o_orderdate").cast("date").cast("string")
-      // a name that exercises quote doubling AND embeds the marker text
-      val name = when(k % 7 === 0, lit(null).cast("string"))
-        .otherwise(concat(col("o_orderpriority"),
-          lit("'s new-tuple: x[text]:'y'")))
-      // literal replace / hex-concat beat regexp_replace / format_string
-      // (no regex engine, no java.util.Formatter) — this is fixture
-      // rendering, and it runs exactly once thanks to the staging below
-      def q(c: org.apache.spark.sql.Column) =
-        when(c.isNull, "null")
-          .otherwise(concat(lit("'"),
-            call_function("replace", c, lit("'"), lit("''")), lit("'")))
-      def img(priceShift: Int) = concat(
-        lit("o_orderkey[integer]:"), k,
-        lit(" o_name[text]:"), q(name),
-        lit(" o_totalprice[numeric]:"),
-        (col("o_totalprice") + lit(priceShift)).cast(dec),
-        lit(" o_orderdate[date]:"), q(dt))
-      val verb = when(col("o_orderstatus") === "F", "DELETE")
-        .when(col("o_orderstatus") === "P", "UPDATE")
-        .otherwise("INSERT")
-      val payload = when(verb === "INSERT", img(0))
-        .when(verb === "UPDATE",
-          concat(lit("old-key: "), img(10), lit(" new-tuple: "), img(0)))
-        .otherwise(img(10))
-      val base = table(s, dir, "orders")
-      val lsn = concat(hex(shiftrightunsigned(k, 32)), lit("/"),
-        hex(k.bitwiseAND(lit(4294967295L))))
-      val changes = base.select(lsn.as("lsn"), xid.as("xid"),
-        concat(lit("table public.orders: "), verb, lit(": "), payload).as("data"))
-      val commits = base.select(xid.as("x")).distinct().select(
-        lit("Z/0").as("lsn"), col("x").as("xid"),
-        format_string("COMMIT %d (at %s+00)", col("x"),
-          date_format(timestamp_seconds(lit(1704067200L) + col("x")),
-            "yyyy-MM-dd HH:mm:ss")).as("data"))
-      val begins = base.select(xid.as("x")).distinct().select(
-        lit("Z/0").as("lsn"), col("x").as("xid"),
-        format_string("BEGIN %d", col("x")).as("data"))
-      // the decode's production input is a STORED change stream (the WAL
-      // the server wrote once); decodeTestDecoding legitimately scans its
-      // input twice (commit-timestamp pass + change pass), so land the
-      // rendered fixture once and decode from storage — otherwise the
-      // bench times the renderer twice, not the operator
-      val lines = graft.FixtureStaging.stageOnce(s, dir,
-        changes.unionByName(commits).unionByName(begins))
-      val ir = DialectWire.decodeTestDecoding(lines, t)
+      val ir = DialectWire.decodeTestDecoding(testDecodingLines(s, dir), pgOrdersTable)
       val pick = when(col("op") === "d", col("before")).otherwise(col("after"))
       ir.select(col("offset"), col("op"), col("ts_ms"), col("schema_name"),
         col("key.o_orderkey").as("o_orderkey"),
@@ -291,6 +242,57 @@ object TypeQueries extends QueryPack {
         pick.getField("o_orderdate").as("o_orderdate"))
     })
   )
+
+  /** The test_decoding fixture: grammar lines synthesized from orders.
+    * decodeTestDecoding scans its input twice (commit-timestamp pass +
+    * change pass) over what is a stored change stream in production (the
+    * WAL the server wrote once). Persisted: see the fixture policy at
+    * [[graft.FixtureStaging]].
+    */
+  def testDecodingLines(s: SparkSession, dir: String): DataFrame = {
+    val k = col("o_orderkey")
+    val xid = k % 997
+    val dec = org.apache.spark.sql.types.DecimalType(14, 2)
+    val dt = col("o_orderdate").cast("date").cast("string")
+    // a name that exercises quote doubling AND embeds the marker text
+    val name = when(k % 7 === 0, lit(null).cast("string"))
+      .otherwise(concat(col("o_orderpriority"),
+        lit("'s new-tuple: x[text]:'y'")))
+    // literal replace / hex-concat beat regexp_replace / format_string
+    // (no regex engine, no java.util.Formatter) — this is fixture
+    // rendering, and it runs once per JVM
+    def q(c: org.apache.spark.sql.Column) =
+      when(c.isNull, "null")
+        .otherwise(concat(lit("'"),
+          call_function("replace", c, lit("'"), lit("''")), lit("'")))
+    def img(priceShift: Int) = concat(
+      lit("o_orderkey[integer]:"), k,
+      lit(" o_name[text]:"), q(name),
+      lit(" o_totalprice[numeric]:"),
+      (col("o_totalprice") + lit(priceShift)).cast(dec),
+      lit(" o_orderdate[date]:"), q(dt))
+    val verb = when(col("o_orderstatus") === "F", "DELETE")
+      .when(col("o_orderstatus") === "P", "UPDATE")
+      .otherwise("INSERT")
+    val payload = when(verb === "INSERT", img(0))
+      .when(verb === "UPDATE",
+        concat(lit("old-key: "), img(10), lit(" new-tuple: "), img(0)))
+      .otherwise(img(10))
+    val base = table(s, dir, "orders")
+    val lsn = concat(hex(shiftrightunsigned(k, 32)), lit("/"),
+      hex(k.bitwiseAND(lit(4294967295L))))
+    val changes = base.select(lsn.as("lsn"), xid.as("xid"),
+      concat(lit("table public.orders: "), verb, lit(": "), payload).as("data"))
+    val commits = base.select(xid.as("x")).distinct().select(
+      lit("Z/0").as("lsn"), col("x").as("xid"),
+      format_string("COMMIT %d (at %s+00)", col("x"),
+        date_format(timestamp_seconds(lit(1704067200L) + col("x")),
+          "yyyy-MM-dd HH:mm:ss")).as("data"))
+    val begins = base.select(xid.as("x")).distinct().select(
+      lit("Z/0").as("lsn"), col("x").as("xid"),
+      format_string("BEGIN %d", col("x")).as("data"))
+    changes.unionByName(commits).unionByName(begins).persist()
+  }
 
   /** Declared shape of the test_decoding face: single-column integer pk,
     * nullable text, decimal, date.

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -8,6 +11,42 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A fixture built twice renders once: after the first build's first
+    * action, the rebuilt plan reads the same cached relation, already
+    * loaded.
+    */
+  def assertRendersOnce(fixture: => DataFrame): Unit = {
+    def builders(df: DataFrame) = df.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => r.cacheBuilder
+    }
+    val first = fixture
+    first.count()
+    val second = builders(fixture)
+    assert(second.size == 1, "the rebuilt fixture reads no cached relation")
+    assert(second.head eq builders(first).head)
+    assert(second.head.isCachedColumnBuffersLoaded)
+  }
+
+  /** Run `consumer`, lose every block cached under the fixtures' plans (as
+    * an executor loss would; other frames' blocks stay), then build and run
+    * the consumer again: the same rows, recomputed from lineage.
+    */
+  def assertSurvivesBlockLoss(fixtures: DataFrame*)(consumer: => DataFrame): Unit = {
+    def rows = consumer.collect().map(_.toString).sorted.toSeq
+    val want = rows
+    def cached(rdd: RDD[_]): Seq[RDD[_]] =
+      (if (rdd.getStorageLevel != StorageLevel.NONE) Seq(rdd) else Nil) ++
+        rdd.dependencies.flatMap(d => cached(d.rdd))
+    val lost = fixtures.flatMap(f => cached(f.queryExecution.toRdd)).distinct
+    assert(lost.nonEmpty, "the fixtures hold no cached blocks")
+    lost.foreach { rdd =>
+      val level = rdd.getStorageLevel
+      rdd.unpersist(blocking = true)
+      rdd.persist(level)
+    }
+    assert(rows == want)
+  }
 }
 
 object SparkTestBase {

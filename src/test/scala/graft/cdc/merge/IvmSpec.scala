@@ -232,4 +232,14 @@ class IvmSpec extends SparkTestBase {
     }
     assert(applied == sHi && diff.nonEmpty)
   }
+
+  test("the IVM customer and orders envelopes render once and are served from the cache") {
+    assertRendersOnce(custEnv)
+    assertRendersOnce(ordersEnv)
+  }
+
+  test("the incremental join recomputes after the IVM fixtures' cached blocks are lost") {
+    assertSurvivesBlockLoss(custEnv, ordersEnv)(
+      graft.SparkEntry.queries("rowimage_incremental_join")(spark, sfDir))
+  }
 }

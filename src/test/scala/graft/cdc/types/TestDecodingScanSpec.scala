@@ -236,4 +236,15 @@ class TestDecodingScanSpec extends SparkTestBase {
       .head()
     assert(ok.getString(0) == "x" && ok.getString(1) == "y")
   }
+
+  // --- the persisted test_decoding fixture ------------------------------
+
+  test("the test_decoding lines render once and are served from the cache") {
+    assertRendersOnce(TypeQueries.testDecodingLines(s, sfDir))
+  }
+
+  test("the test_decoding decode recomputes after the fixture's cached blocks are lost") {
+    assertSurvivesBlockLoss(TypeQueries.testDecodingLines(s, sfDir))(
+      graft.SparkEntry.queries("pg_testdecoding_decode")(s, sfDir))
+  }
 }
