@@ -74,13 +74,6 @@ object ChangelogOps {
       tenantName: Option[String] = None,
       collections: Boolean = false)
 
-  object DialectMeta {
-    val mysql: DialectMeta = DialectMeta("inventory")
-    val postgres: DialectMeta = DialectMeta("inventory", schemaName = Some("public"))
-    val oceanbase: DialectMeta = DialectMeta("inventory", tenantName = Some("sys"))
-    val mongodb: DialectMeta = DialectMeta("inventory", collections = true)
-  }
-
   /** P8 — metadata projection: database/table identity per the dialect
     * config + op_ts (0 for snapshot rows, T3). The captured shard name
     * plays table_name (and collection_name under a document-store dialect,
@@ -98,12 +91,6 @@ object ChangelogOps {
     val opTs = when(col("op") === OpRead, lit(0L)).otherwise(col("ts_ms")).as("op_ts")
     changelog.select(base ++ dialect :+ opTs: _*)
   }
-
-  /** Back-compat face: the Postgres-shaped projection the earlier rounds
-    * exposed (schema_name from config, not hardwired).
-    */
-  def withMetadata(changelog: DataFrame): DataFrame =
-    withMetadata(changelog, DialectMeta.postgres)
 
   /** P9 — row-value validator hook (reference: RowDataDebeziumDeserialize
     * Schema.ValueValidator / PostgresValueValidator): the returned frame

@@ -112,11 +112,6 @@ object Changelog {
       lit(null).cast("string").as("props")
     )
 
-  val snapshotSql: String =
-    """(SELECT -1 AS "offset", c_custkey AS pk, 'r' AS op, 0 AS ts_ms,
-      |        c_acctbal AS val, CAST(NULL AS VARCHAR) AS props
-      | FROM customer)""".stripMargin
-
   /** Shared oracle fragment: changelog CTE + the snapshot∪changelog union
     * feeding every materialize-flavored oracle. One definition so the three
     * materialize oracles (plain, salted, hybrid) cannot drift.

@@ -804,6 +804,24 @@ object RowImage {
       case _          => ps.setObject(i, v)
     }
 
+  /** A stored value equals the row's: numbers by value (a SMALLINT reads
+    * back as an Integer), blobs by bytes, dates by day.
+    */
+  private def sameValue(stored: Any, row: Any): Boolean = (stored, row) match {
+    case (a: java.sql.Blob, b: Array[Byte]) =>
+      try java.util.Arrays.equals(a.getBytes(1L, a.length.toInt), b) finally a.free()
+    case (a: java.math.BigDecimal, b: java.math.BigDecimal) => a.compareTo(b) == 0
+    case (a: java.sql.Date, b: java.sql.Date) => a.toLocalDate == b.toLocalDate
+    case (a, b) => a == b
+  }
+
+  /** [[applyRows]] met a row at its key's stored offset that differs from
+    * the stored row in op or values: two changes claim one log position.
+    */
+  final class TiedOffsetException(val key: String, val offset: Long)
+      extends IllegalStateException(
+        s"tied offset $offset for key ($key): the stored row at that offset differs in op or values")
+
   /** State-table DDL for a declared table: pk columns (NOT NULL, composite
     * PRIMARY KEY) + offset watermark + tombstone op + value columns.
     */
@@ -870,10 +888,13 @@ object RowImage {
     * row locks in one global order and partitions sharing keys cannot form
     * a lock cycle (without it a multi-partition batch deadlocks in Derby).
     * The sort neither shuffles nor changes the partition count; the order of
-    * a key's own events does not matter under the offset guard, except
-    * between rows at one offset: the guard is `LAST_OFFSET < ?`, so the
-    * first of them applied wins, not the [[lwwOrder]] winner. Feed it a
-    * log whose positions are unique per key.
+    * a key's own events does not matter under the offset guard.
+    *
+    * Tie rule: one log position holds one change, so a row at the stored
+    * offset of its key must be that change delivered again. An identical
+    * redelivery is a no-op; one that differs in op or values fails the
+    * write with [[TiedOffsetException]] (ranking the two by [[lwwOrder]]
+    * would take a second implementation of the order here).
     * Input: [[decodeEnvelope]]-shaped `(offset, op, key, after)` rows.
     */
   def applyRows(rows: DataFrame, table: DeclaredTable, url: String, sqlName: String): Unit = {
@@ -885,7 +906,8 @@ object RowImage {
     val updateSql = s"UPDATE $sqlName SET LAST_OFFSET = ?, LAST_OP = ?" +
       valCols.map(c => s", $c = ?").mkString +
       s" WHERE ${pkCols.map(c => s"$c = ?").mkString(" AND ")} AND LAST_OFFSET < ?"
-    val probeSql = s"SELECT 1 FROM $sqlName WHERE ${pkCols.map(c => s"$c = ?").mkString(" AND ")}"
+    val probeSql = s"SELECT LAST_OFFSET, LAST_OP${valCols.map(c => s", $c").mkString}" +
+      s" FROM $sqlName WHERE ${pkCols.map(c => s"$c = ?").mkString(" AND ")}"
     val insertSql = s"INSERT INTO $sqlName (" +
       (pkCols ++ Seq("LAST_OFFSET", "LAST_OP") ++ valCols).mkString(", ") +
       s") VALUES (${Seq.fill(pkCols.size + 2 + valCols.size)("?").mkString(", ")})"
@@ -921,10 +943,17 @@ object RowImage {
 
           def applyOne(): Unit = if (tryUpdate() == 0) {
             val probe = conn.prepareStatement(probeSql)
+            // a stored row at this offset must be this row delivered again
             val present = try {
               pkTypes.indices.foreach(i => bind(probe, 1 + i, pkTypes(i), pkVals(i)))
               val rs = probe.executeQuery()
-              try rs.next() finally rs.close()
+              try rs.next() && {
+                if (rs.getLong(1) == offset && !(rs.getString(2) == op &&
+                    valVals.indices.forall(i => sameValue(rs.getObject(3 + i), valVals(i)))))
+                  throw new TiedOffsetException(
+                    pkCols.zip(pkVals).map { case (c, v) => s"$c=$v" }.mkString(", "), offset)
+                true
+              } finally rs.close()
             } finally probe.close()
             if (!present) {
               val ins = conn.prepareStatement(insertSql)

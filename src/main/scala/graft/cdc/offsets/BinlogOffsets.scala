@@ -34,15 +34,6 @@ object BinlogOffsets {
     s"""'mysql-bin.' || lpad(CAST("offset" // $EventsPerFile AS VARCHAR), 6, '0') AS file,
        |("offset" % $EventsPerFile) * 4 + 4 AS pos""".stripMargin
 
-  /** Sortable single-string encoding of (file, pos) — file names are
-    * zero-padded so lexicographic order == (file, pos) order. Used for
-    * min/max offset folds (A6) where engines disagree on struct ordering.
-    */
-  def offsetStr(file: Column, pos: Column): Column =
-    concat(file, lit(":"), lpad(pos.cast("string"), 10, "0"))
-
-  val offsetStrSql: String = """file || ':' || lpad(CAST(pos AS VARCHAR), 10, '0')"""
-
   /** (file, pos) strictly-greater-than comparison — the non-GTID branch of
     * BinlogOffset.compareTo (filename compare, then position).
     */
@@ -185,13 +176,6 @@ object BinlogOffsets {
     if (a.pos != b.pos) return java.lang.Long.compare(a.pos, b.pos)
     java.lang.Long.compare(a.restartSkipEvents, b.restartSkipEvents)
   }
-
-  /** Is GTID set `a` contained within `b`. Pure-Scala form used by tests and
-    * the offset total order; the query path goes through the native
-    * [[graft.cdc.types.GtidContains]] expression.
-    */
-  val gtidContainedWithin: (String, String) => Boolean =
-    (a, b) => GtidSet.parse(a).isContainedWithin(GtidSet.parse(b))
 
   /** UTF8String entry point for the codegen'd [[graft.cdc.types.GtidContains]]
     * expression (Scala object methods emit static forwarders, so generated

@@ -94,12 +94,4 @@ object TxnStream {
           }
         })
   }
-
-  /** Batch changelog -> the typed event stream shape, for specs/fixtures. */
-  def asTxnEvents(df: DataFrame): Dataset[TxnEvent] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("offset"), col("txn_id"), col("op"), col("pk"),
-      col("ts_ms"), col("value")).as[TxnEvent]
-  }
 }

@@ -472,13 +472,6 @@ object DialectWire {
   // replays this decode against a real PostgreSQL 15 server end-to-end.
   // ------------------------------------------------------------------
 
-  /** One field token: `name[type]:value` where value is either a
-    * single-quoted string (embedded quotes doubled) or a bare token
-    * (numbers, booleans, `null`, `unchanged-toast-datum`). The same RE2-safe
-    * pattern runs in Spark (Java regex) and the DuckDB oracle.
-    */
-  val TestDecodingField = """([\w$]+)\[([^\]]+)\]:('[^']*(?:''[^']*)*'|[^ ]+)"""
-
   /** The full payload token stream: an UPDATE's image markers OR a field
     * token. One left-to-right scan consumes quoted values atomically, so a
     * VALUE whose text embeds `new-tuple: x[type]:...` can never be mistaken
@@ -514,23 +507,6 @@ object DialectWire {
     * NULL is data loss.
     */
   val UnavailableValue = "__graft_unavailable_value__"
-
-  /** `name[type]:value` token run -> map<name, normalized value>: outer
-    * quotes stripped, doubled quotes folded, bare `null` mapped to SQL
-    * NULL; [[UnchangedToast]] passes through verbatim for the image
-    * builder.
-    */
-  def testDecodingFields(payload: Column): Column = {
-    val names = regexp_extract_all(payload, lit(TestDecodingField), lit(1))
-    val raws = regexp_extract_all(payload, lit(TestDecodingField), lit(3))
-    val vals = transform(raws, raw =>
-      when(raw.startsWith("'"),
-        regexp_replace(raw.substr(lit(2), length(raw) - 2), "''", "'"))
-        .when(raw === "null", lit(null).cast(StringType))
-        .otherwise(raw))
-    when(payload.isNull, lit(null).cast(MapType(StringType, StringType)))
-      .otherwise(map_from_arrays(names, vals))
-  }
 
   /** PostgreSQL textual converter ladder: the logproxy ladder plus the
     * bytea rendering (`\x` + lowercase hex, quotes already stripped).

@@ -121,8 +121,8 @@ object Dedup {
     * negatives, unlike the [[DefaultMaxDf]] cutoff whose constant budget
     * sheds real duplicate clusters once a clone group outgrows the cap
     * (measured at sf10: df<=64 keeps 27% of the J>=0.9 pairs; this form
-    * keeps 100% by construction — the sf10 self-check pins hash-equality
-    * with the unbounded form). Verification never re-creates the bomb:
+    * keeps 100% by construction — ExtOpsSpec pins cell-for-cell equality
+    * with the unbounded form on adversarial corpora). Verification never re-creates the bomb:
     * candidates carry only their prefix-overlap count o_pp, a PPJoin-style
     * positional-suffix upper bound prunes the pairs whose bound cannot
     * reach the threshold (sf10: 31.5M candidates -> 4.3M verified for
@@ -493,14 +493,9 @@ object Dedup {
     * cluster scale you'd use a reliable `checkpoint` dir instead — same
     * plan, durable blocks). Singleton documents keep themselves.
     *
-    * `onRound` observes (round, frontierSize) per completed round — the
-    * scale-run hook that records convergence behavior (e.g. the sf10
-    * round-count note) without touching the data path.
-    *
     * Returns (doc_id, keeper_id, cluster_size).
     */
-  def clusterAssign(docs: DataFrame, pairs: DataFrame, maxIter: Int = 30,
-      onRound: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
+  def clusterAssign(docs: DataFrame, pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     val edges = pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -560,7 +555,6 @@ object Dedup {
       labels = next.select(col("id"), col("nl").as("lab"))
       nChanged = frontier.count()
       it += 1
-      onRound(it, nChanged)
     }
     // cluster size as a full-partition window on ONE label exchange —
     // the aggregate+join form shuffled the (checkpointed) label set twice

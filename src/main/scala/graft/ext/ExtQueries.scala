@@ -32,7 +32,7 @@ object ExtQueries extends QueryPack {
     // inverted index (zero false negatives by the prefix-filtering lemma),
     // so hot boilerplate words never join; verification intersects the two
     // word ARRAYS in-row per candidate. Output hash-equal to the unbounded
-    // dedup_ngram_jaccard (same oracle SQL; sf10 self-check pair)
+    // dedup_ngram_jaccard (same oracle SQL; ExtOpsSpec pins the equality)
     "dedup_ngram_jaccard_prefix" -> ((s, dir) =>
       Dedup.ngramJaccardPrefix(table(s, dir, "documents"), 0.5)),
 

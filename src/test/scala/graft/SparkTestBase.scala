@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -26,6 +28,22 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     assert(second.size == 1, "the rebuilt fixture reads no cached relation")
     assert(second.head eq builders(first).head)
     assert(second.head.isCachedColumnBuffersLoaded)
+  }
+
+  /** Two formulations return the same rows: equal multisets over the same
+    * column names, matched by name and compared as string casts (so they
+    * may differ in column order and numeric width). Returns the row count.
+    */
+  def assertSameRows(got: DataFrame, want: DataFrame): Long = {
+    assert(got.columns.sorted.toSeq == want.columns.sorted.toSeq)
+    def bag(df: DataFrame) = df.select(got.columns.toSeq.map(c => col(c).cast(StringType)): _*)
+      .collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+    val (g, w) = (bag(got), bag(want))
+    val diff = (g.keySet ++ w.keySet).filter(r => g.get(r) != w.get(r))
+    assert(diff.isEmpty, s"${diff.size} rows differ, e.g. " + diff.take(3).map(r =>
+      s"${r.mkString("(", ", ", ")")} x${g.getOrElse(r, 0)} (want x${w.getOrElse(r, 0)})")
+      .mkString("; "))
+    g.values.sum.toLong
   }
 
   /** Run `consumer`, lose every block cached under the fixtures' plans (as
